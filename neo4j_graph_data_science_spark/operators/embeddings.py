@@ -11,8 +11,7 @@ Execution shape: the vertex state is an array<double> column. The
 neighbor-mean aggregation is pure JVM: posexplode(vec) -> avg per
 (dst, dim) cell -> array_sort(collect_list) reassembly. No Python in the
 iteration hot path, and hub vertices spread across `dim` reducer keys
-(free skew mitigation). The CSR/Arrow per-partition block kernel lives in
-pagerank_csr.py for the algorithms that need per-partition state.
+(free skew mitigation).
 
 node2vec walks (reference traversal/RandomWalk.java:46): uniform
 first-order walks with hash-based neighbor choice: at step t the walk at

@@ -155,9 +155,9 @@ def label_propagation(
         )
 
     res = run_pregel(
-        state0, superstep, lambda o, n, i: False,
-        PregelConfig(cfg.max_iterations, 0.0, loop_parts,
-                     cfg.checkpoint_dir, 1, cfg.run_id,
+        state0, superstep,
+        PregelConfig(max_iterations=cfg.max_iterations, partitions=loop_parts,
+                     checkpoint_dir=cfg.checkpoint_dir, run_id=cfg.run_id,
                      check_every=cfg.check_every),
         stats=[F.max(F.col("changed").cast("int"))],
         converged_stats=lambda row, it: not row[1],

@@ -101,6 +101,16 @@ def _apply_scaler(state: DataFrame, scaler: str | None) -> DataFrame:
 
     return scale_property(state, "score", str(scaler).lower(), out_col="score")
 
+
+def _delta_converged(tolerance: float):
+    """The PageRank family's vote-to-halt: every per-vertex delta <=
+    tolerance, read from the loop's ``(count, max(delta))`` stats row.
+    tolerance <= 0 runs the full max_iterations."""
+    def converged(row: tuple, it: int) -> bool:
+        return tolerance > 0 and row[1] is not None and row[1] <= tolerance
+    return converged
+
+
 def page_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> PregelResult:
     """Returns PregelResult whose state is (id, rank, delta)."""
     cfg = config or PageRankConfig()
@@ -205,43 +215,32 @@ def page_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> Pregel
             .groupBy("id")
             .agg(F.sum("_m").alias("msg"))
         )
-        return (
-            state.join(msgs, "id", "left")
-            .select(
-                "id",
-                (F.col("alpha") + F.lit(d) * F.coalesce("msg", F.lit(0.0))).alias("rank"),
-                "alpha",
-                "out_deg",
-                F.abs(
-                    F.col("alpha") + F.lit(d) * F.coalesce("msg", F.lit(0.0)) - F.col("rank")
-                ).alias("delta"),
-            )
-            .withColumn(
-                "contrib",
-                F.when(F.col("out_deg") > 0, F.col("rank") / F.col("out_deg")).otherwise(F.lit(0.0)),
-            )
+        nxt = state.join(msgs, "id", "left").select(
+            "id", "alpha", "out_deg", F.col("rank").alias("_old"),
+            (F.col("alpha") + F.lit(d) * F.coalesce("msg", F.lit(0.0))).alias("_new"),
         )
-
-    def converged_stats(row: tuple, it: int) -> bool:
-        if cfg.tolerance <= 0:
-            return False
-        mx = row[1]
-        return mx is not None and mx <= cfg.tolerance
+        return nxt.select(
+            "id",
+            F.col("_new").alias("rank"),
+            "alpha",
+            "out_deg",
+            F.abs(F.col("_new") - F.col("_old")).alias("delta"),
+            F.when(F.col("out_deg") > 0, F.col("_new") / F.col("out_deg"))
+            .otherwise(F.lit(0.0)).alias("contrib"),
+        )
 
     res = run_pregel(
         state0,
         superstep,
-        lambda o, n, i: False,
         PregelConfig(
             max_iterations=max(cfg.max_iterations - 1, 0),  # GDS superstep 0 is send-only
-            tolerance=cfg.tolerance,
             checkpoint_dir=cfg.checkpoint_dir,
             run_id=cfg.run_id,
             partitions=loop_parts,
             check_every=cfg.check_every,
         ),
         stats=[F.max("delta")],
-        converged_stats=converged_stats,
+        converged_stats=_delta_converged(cfg.tolerance),
     )
     res.iterations += 1  # report GDS-style superstep count incl. initial send
     res.state = _apply_scaler(
@@ -278,26 +277,25 @@ def article_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> Pre
             .groupBy("id")
             .agg(F.sum("_m").alias("msg"))
         )
-        return (
-            state.join(msgs, "id", "left")
-            .select(
-                "id",
-                (F.lit(1.0 - d) + F.lit(d) * F.coalesce("msg", F.lit(0.0))).alias("rank"),
-                "out_deg",
-                F.abs(F.lit(1.0 - d) + F.lit(d) * F.coalesce("msg", F.lit(0.0)) - F.col("rank")).alias("delta"),
-            )
-            .withColumn("contrib", F.col("rank") / (F.col("out_deg") + F.lit(avg_deg)))
+        nxt = state.join(msgs, "id", "left").select(
+            "id", "out_deg", F.col("rank").alias("_old"),
+            (F.lit(1.0 - d) + F.lit(d) * F.coalesce("msg", F.lit(0.0))).alias("_new"),
+        )
+        return nxt.select(
+            "id",
+            F.col("_new").alias("rank"),
+            "out_deg",
+            F.abs(F.col("_new") - F.col("_old")).alias("delta"),
+            (F.col("_new") / (F.col("out_deg") + F.lit(avg_deg))).alias("contrib"),
         )
 
-    def converged(old: DataFrame, new: DataFrame, it: int) -> bool:
-        if cfg.tolerance <= 0:
-            return False
-        mx = new.agg(F.max("delta")).collect()[0][0]
-        return mx is not None and mx <= cfg.tolerance
-
-    res = run_pregel(state0, superstep, converged,
-                     PregelConfig(cfg.max_iterations, cfg.tolerance, cfg.partitions,
-                                  cfg.checkpoint_dir, 1, cfg.run_id))
+    res = run_pregel(state0, superstep,
+                     PregelConfig(max_iterations=cfg.max_iterations,
+                                  partitions=cfg.partitions,
+                                  checkpoint_dir=cfg.checkpoint_dir,
+                                  run_id=cfg.run_id),
+                     stats=[F.max("delta")],
+                     converged_stats=_delta_converged(cfg.tolerance))
     res.state = _apply_scaler(
         res.state.select("id", F.col("rank").alias("score")), cfg.scaler)
     edges.unpersist()
@@ -370,15 +368,13 @@ def eigenvector(graph: SparkGraph, config: PageRankConfig | None = None) -> Preg
             )
         )
 
-    def converged(old: DataFrame, new: DataFrame, it: int) -> bool:
-        if cfg.tolerance <= 0:
-            return False
-        mx = new.agg(F.max("delta")).collect()[0][0]
-        return mx is not None and mx <= cfg.tolerance
-
-    res = run_pregel(state0, superstep, converged,
-                     PregelConfig(max(cfg.max_iterations - 1, 0), cfg.tolerance,
-                                  cfg.partitions, cfg.checkpoint_dir, 1, cfg.run_id))
+    res = run_pregel(state0, superstep,
+                     PregelConfig(max_iterations=max(cfg.max_iterations - 1, 0),
+                                  partitions=cfg.partitions,
+                                  checkpoint_dir=cfg.checkpoint_dir,
+                                  run_id=cfg.run_id),
+                     stats=[F.max("delta")],
+                     converged_stats=_delta_converged(cfg.tolerance))
     res.state = _apply_scaler(
         res.state.select("id", F.col("rank").alias("score")), cfg.scaler)
     edges.unpersist()

@@ -71,7 +71,7 @@ def _relax_loop(edges: DataFrame, state0: DataFrame, cost, max_iters: int) -> Da
             )
         )
 
-    res = run_pregel(state0, superstep, lambda o, n, i: False,
+    res = run_pregel(state0, superstep,
                      PregelConfig(max_iterations=max_iters, track_metrics=False),
                      stats=[F.max(F.col("changed").cast("int"))],
                      converged_stats=lambda row, it: not row[1])

@@ -21,13 +21,12 @@ scheduler round-trips per call.
 Semantics are IDENTICAL to the distributed formulations (same init, same
 update order, same tie-breaks, same iteration accounting); parity is
 pinned by tests/test_local_kernel.py at 1e-12 for PageRank and exactly for
-WCC/LPA. Kill switch: config small_graph_edges=0 or env
-SPARK_GRAFT_LOCAL_KERNEL=0 forces the distributed path everywhere.
+WCC/LPA. Kill switch: config small_graph_edges=0 forces the distributed
+path.
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 import numpy as np
@@ -47,15 +46,11 @@ from ..catalog import DST, SRC, W, register_cache
 LOCAL_KERNEL_MAX_EDGES = 2_000_000
 
 
-def local_kernel_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_LOCAL_KERNEL", "1") != "0"
-
-
 def should_run_local(n_edges: int, limit: int | None,
                      checkpoint_dir: str | None) -> bool:
     """Durable checkpointing keeps the distributed loop (the whole point of
     the checkpoint contract is mid-iteration resume of LONG runs)."""
-    if checkpoint_dir or not local_kernel_enabled():
+    if checkpoint_dir:
         return False
     lim = LOCAL_KERNEL_MAX_EDGES if limit is None else limit
     return 0 < lim and n_edges <= lim

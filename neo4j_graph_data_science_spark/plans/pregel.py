@@ -24,7 +24,7 @@ Scale notes (10^12 turns / 10^9+ edges):
     combined messages by dst -- both O(V) after map-side combine, never O(E).
   * Hot destination vertices (hubs) are handled by the map-side combiner
     (messages to one dst collapse per input partition) plus AQE skew split.
-  * ``checkpoint_every`` bounds lineage depth; between checkpoints we rotate
+  * Lineage is cut every TRUNCATE_EVERY supersteps; in between we rotate
     persisted state (persist new -> materialize -> unpersist old).
 """
 
@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import threading
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -55,35 +56,16 @@ Reducers: dict[str, Callable[[Column], Column]] = {
 @dataclass
 class PregelConfig:
     max_iterations: int = 20
-    tolerance: float = 1e-7
     partitions: int | None = None          # shuffle width; None -> session default
-    checkpoint_dir: str | None = None      # enables durable resume when set
-    checkpoint_every: int = 1
+    checkpoint_dir: str | None = None      # durable resume, saved every boundary
     run_id: str = "run"
     track_metrics: bool = True
-    # truncate Spark lineage every k supersteps (localCheckpoint) -- without
-    # this, iterative plans grow (and superstep plans that reference the
-    # state twice, e.g. WCC pointer jumping, grow 2^k-fold) and Catalyst
-    # analysis time blows up
-    truncate_every: int = 2
-    # AQE inside the superstep loop. AQE re-plans EVERY shuffle stage of
-    # EVERY superstep job on the driver -- measured round 3 on the 31M-edge
-    # scaling graph at local[8]: loop throughput 1.36M edges/s/superstep
-    # with AQE on vs 3.41M with it off (2.5x), because the superstep's plan
-    # shape is static (pre-partitioned edges, hash-uniform ids) so runtime
-    # re-planning buys nothing and its per-stage driver barrier serializes
-    # the job. Map-side combine already bounds reduce-side hubs; the state
-    # join keys are near-uniform. Leave False unless a workload has
-    # join-side skew the static plan can't absorb (then AQE's skew-join
-    # split pays for its latency). Toggled via runtime conf around the
-    # loop and restored after.
-    aqe_in_loop: bool = False
     # supersteps per materialization + convergence check. 1 = classic BSP
     # (one action per superstep). k>1 chains k supersteps LAZILY and runs
     # them as ONE Spark job per boundary -- on overhead-bound graphs (small
     # state, many iterations) the per-superstep fixed cost (job scheduling,
-    # AQE replan, stats action) dominates wall time, and batching divides it
-    # by k. Convergence detection is delayed by at most k-1 supersteps
+    # stats action) dominates wall time, and batching divides it by k.
+    # Convergence detection is delayed by at most k-1 supersteps
     # (results are the same or MORE converged); fixed-iteration runs are
     # bit-identical. Boundaries materialize via the stats-safe IN-MEMORY
     # plan cut (plans/checkpoint.truncate_mem: persist + LogicalRDD rewrap
@@ -105,7 +87,7 @@ class PregelResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-# Probe-calibrated (tools/probe_join.py, 26.8M-edge transcript graph):
+# Probe-calibrated (26.8M-edge transcript graph):
 #   8 cores:  16 parts 1.32M edges/s/superstep | 64 parts 2.40M  (1.8x)
 #   32 cores: 32 parts 2.48M | 64 parts 4.17M | 128 parts 2.76M (1.7x)
 # i.e. the superstep loop wants ~400k edge rows per partition -- small
@@ -117,9 +99,47 @@ class PregelResult:
 # graphs keep one wave and huge graphs don't drown the scheduler.
 EDGE_ROWS_PER_PARTITION = 400_000
 
-# serializes the pinned-conf cache compilation in prepare_edges'
-# pre-partitioned branch (session confs are global mutable state)
-_BUCKETED_CONF_LOCK = threading.Lock()
+# Truncate Spark lineage every 2nd superstep (eager localCheckpoint) when
+# supersteps are not batched -- without it, iterative plans grow (and
+# superstep plans that reference the state twice, e.g. WCC pointer
+# jumping, grow 2^k-fold) and Catalyst analysis time blows up.
+TRUNCATE_EVERY = 2
+
+# AQE is off inside the superstep loop. AQE re-plans EVERY shuffle stage of
+# EVERY superstep job on the driver -- measured round 3 on the 31M-edge
+# scaling graph at local[8]: loop throughput 1.36M edges/s/superstep with
+# AQE on vs 3.41M with it off (2.5x), because the superstep's plan shape is
+# static (pre-partitioned edges, hash-uniform ids) so runtime re-planning
+# buys nothing and its per-stage driver barrier serializes the job.
+# Map-side combine already bounds reduce-side hubs; the state join keys
+# are near-uniform.
+LOOP_CONFS = {"spark.sql.adaptive.enabled": "false"}
+
+# Session confs are global mutable state: every pin holds this lock for its
+# whole window, so overlapping operator calls on one session neither compile
+# plans under another call's confs nor interleave save/restore and leave the
+# session flipped. Re-entrant so a pinned section may call another.
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def pinned_confs(session: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``session`` for the ``with`` body, then restore each
+    prior value (or unset a key that had none). The lock is released in
+    ``finally``, so a body cancelled mid-job (e.g. by a watchdog's
+    cancelJobGroup) cannot leave it held."""
+    with _CONF_LOCK:
+        prev = {k: session.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                session.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    session.conf.unset(k)
+                else:
+                    session.conf.set(k, v)
 
 
 def auto_partitions(n_edges: int, spark: SparkSession) -> int:
@@ -190,10 +210,7 @@ def prepare_edges(edges: DataFrame, partitions: int | None = None,
         e.count()  # materialize so every superstep reuses the same blocks
         return e
     # pre-partitioned (bucketed-table) path: two confs pin the scan plan
-    # that gets frozen into the cache at persist-time compilation, under
-    # a module lock so concurrent operator calls in a shared session
-    # can't compile unrelated plans inside the toggled window or
-    # interleave save/restore and leave the session confs flipped:
+    # that gets frozen into the cache at persist-time compilation:
     #   * autoBucketedScan off -- DisableUnnecessaryBucketedScan would see
     #     a bare scan+persist (no join above it at cache-build time) and
     #     silently compile the cache WITHOUT the hash layout,
@@ -205,36 +222,20 @@ def prepare_edges(edges: DataFrame, partitions: int | None = None,
     #     bucketBy), the regime where the reported order is exact, and
     #     Spark still verifies the single-file condition before reporting.
     # Both restored after; the cached blocks keep partitioning AND order.
-    sess = e.sparkSession
-    keys = {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
-            "spark.sql.legacy.bucketedTableScan.outputOrdering": "true"}
-    with _BUCKETED_CONF_LOCK:
-        prev: dict[str, str | None] = {}
-        for k in keys:
-            try:
-                prev[k] = sess.conf.get(k)
-            except Exception:
-                prev[k] = None
-        try:
-            for k, v in keys.items():
-                sess.conf.set(k, v)
-            e = register_cache(e.persist())
-            e.count()
-        finally:
-            for k, v in prev.items():
-                if v is not None:
-                    sess.conf.set(k, v)
+    with pinned_confs(e.sparkSession, {
+            "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
+            "spark.sql.legacy.bucketedTableScan.outputOrdering": "true"}):
+        e = register_cache(e.persist())
+        e.count()
     return e
 
 
 def run_pregel(
     state: DataFrame,
     superstep: Callable[[DataFrame, int], DataFrame],
-    converged: Callable[[DataFrame, DataFrame, int], bool],
     config: PregelConfig,
-    spark: SparkSession | None = None,
-    stats: "list[Column] | None" = None,
-    converged_stats: "Callable[[tuple, int], bool] | None" = None,
+    stats: list[Column],
+    converged_stats: Callable[[tuple, int], bool],
 ) -> PregelResult:
     """Generic BSP loop (Pregel.java:204-245 analogue).
 
@@ -243,58 +244,41 @@ def run_pregel(
     rotation, checkpointing, metrics and the convergence check so algorithm
     code stays declarative.
 
-    Fast path: pass ``stats`` (aggregate Columns over the new state, e.g.
-    ``[F.max("delta")]``) and ``converged_stats(stats_row, it) -> bool``.
-    The vertex count, the convergence statistics, and the materialization of
-    the persisted state then all happen in ONE Spark job per superstep --
-    the classic "2 actions per iteration" tax (count + converge-check) is
-    what dominates superstep latency on overhead-bound graphs and costs a
-    full extra pass at scale.
+    ``stats`` are aggregate Columns over the new state (e.g.
+    ``[F.max("delta")]``); ``converged_stats(row, it)`` sees
+    ``(vertex_count, *stats)``. The vertex count, the convergence
+    statistics and the materialization of the persisted state all happen in
+    ONE Spark job per boundary -- the classic "2 actions per iteration" tax
+    (count + converge-check) is what dominates superstep latency on
+    overhead-bound graphs and costs a full extra pass at scale.
     """
+    sess = state.sparkSession
     ckpt: Optional[CheckpointManager] = None
     start_iter = 0
     if config.checkpoint_dir:
         ckpt = CheckpointManager(config.checkpoint_dir, config.run_id)
-        resumed = ckpt.latest(spark)
+        resumed = ckpt.latest(sess)
         if resumed is not None:
             start_iter, state = resumed
-    metrics: list[dict] = []
 
-    sess = spark or state.sparkSession
-    # loop-scoped session conf: AQE off (see PregelConfig.aqe_in_loop) and,
-    # when the caller resolved an edge partition width, the same width for
-    # every loop shuffle (message groupBy(dst), state exchanges) -- with AQE
-    # off the reduce width is spark.sql.shuffle.partitions, and a width
-    # mismatched to the persisted edge blocks either re-exchanges the edge
-    # side or runs the reduce at the wrong granularity (probe: 1.7x).
-    toggles = {}
-    if not config.aqe_in_loop:
-        toggles["spark.sql.adaptive.enabled"] = "false"
+    # loop-scoped session conf: LOOP_CONFS and, when the caller resolved an
+    # edge partition width, the same width for every loop shuffle (message
+    # groupBy(dst), state exchanges) -- with AQE off the reduce width is
+    # spark.sql.shuffle.partitions, and a width mismatched to the persisted
+    # edge blocks either re-exchanges the edge side or runs the reduce at
+    # the wrong granularity (probe: 1.7x).
+    confs = dict(LOOP_CONFS)
     if config.partitions:
-        toggles["spark.sql.shuffle.partitions"] = str(config.partitions)
-    prev: dict[str, str | None] = {}
-    for k, v in toggles.items():
-        try:
-            prev[k] = sess.conf.get(k)
-            sess.conf.set(k, v)
-        except Exception:
-            pass
-
-    state = state.persist()
-    state.count()
-    try:
-        return _pregel_loop(state, superstep, converged, config, ckpt,
-                            metrics, start_iter, stats, converged_stats)
-    finally:
-        for k, v in prev.items():
-            try:
-                sess.conf.set(k, v)
-            except Exception:
-                pass
+        confs["spark.sql.shuffle.partitions"] = str(config.partitions)
+    with pinned_confs(sess, confs):
+        state = state.persist()
+        state.count()
+        return _pregel_loop(state, superstep, config, ckpt, start_iter,
+                            stats, converged_stats)
 
 
-def _pregel_loop(state, superstep, converged, config, ckpt, metrics, it,
-                 stats=None, converged_stats=None):
+def _pregel_loop(state, superstep, config, ckpt, it, stats, converged_stats):
+    metrics: list[dict] = []
     did_converge = False
     while it < config.max_iterations:
         t0 = time.time()
@@ -310,28 +294,21 @@ def _pregel_loop(state, superstep, converged, config, ckpt, metrics, it,
             # k supersteps is a per-boundary fixed cost that does not shrink
             # with parallelism and capped measured scaling (round-3 finding)
             new_state = truncate_mem(new_state)
-        elif config.truncate_every and (it + 1) % config.truncate_every == 0:
+        elif (it + 1) % TRUNCATE_EVERY == 0:
             # eager localCheckpoint: materializes AND cuts the logical plan
             new_state = new_state.localCheckpoint(eager=True)
         else:
             new_state = new_state.persist()
-        if stats is not None and converged_stats is not None:
-            row = new_state.agg(F.count(F.lit(1)), *stats).collect()[0]
-            n = row[0]
-            done = converged_stats(tuple(row), it + batch - 1)
-            wall = time.time() - t0
-            it += batch
-        else:
-            n = new_state.count()  # materialize; one Spark job per superstep
-            wall = time.time() - t0
-            done = converged(state, new_state, it + batch - 1)
-            it += batch
+        row = new_state.agg(F.count(F.lit(1)), *stats).collect()[0]
+        done = converged_stats(tuple(row), it + batch - 1)
+        wall = time.time() - t0
+        it += batch
         if config.track_metrics:
             metrics.append(
-                {"iteration": it, "vertices": n, "wall_s": round(wall, 4),
+                {"iteration": it, "vertices": row[0], "wall_s": round(wall, 4),
                  "supersteps": batch, "converged": done}
             )
-        if ckpt and (it % config.checkpoint_every == 0 or done or it >= config.max_iterations):
+        if ckpt:
             saved = ckpt.save(new_state, it, metrics[-1] if metrics else {})
             unpersist_truncated(new_state)
             new_state = saved.persist()

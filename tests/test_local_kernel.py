@@ -243,10 +243,3 @@ def test_scc_local_matches_distributed(spark):
     assert cl == cd
     assert cl[0] == cl[1] == cl[2] == 0 and cl[3] == cl[4] == 3
     assert cl[5] == 5 and cl[6] == 6 and cl[7] == 7 and cl[8] == 8
-
-
-def test_kill_switch_env(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_KERNEL", "0")
-    g = from_edge_list(spark, EDGES, n_nodes=8)
-    res = page_rank(g, PageRankConfig(small_graph_edges=FORCE_LOCAL))
-    assert not (res.metrics and res.metrics[0].get("kernel") == "local-task")

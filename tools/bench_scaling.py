@@ -11,13 +11,18 @@ Job: PageRank supersteps over a synthesized transcript-derived edge graph
 second per superstep, the BASELINE.json north-star metric.
 
 Usage: python tools/bench_scaling.py [--pairs 8,32 2,8] [--convs 60000]
-Writes results to stdout (JSON) for inclusion in BENCH/BASELINE.md.
+       [--repeats 3]
+Each repeat runs one interleaved lo/hi pair of legs. The result reports
+the best-of efficiency, the median/min/max of the per-pair efficiencies
+and every raw leg. Writes results to stdout (JSON) for inclusion in
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import statistics
 import subprocess
 import sys
 
@@ -105,52 +110,13 @@ def main() -> None:
                     help="comma pairs of core counts, e.g. 8,32 2,8")
     ap.add_argument("--convs", type=int, default=60000)
     ap.add_argument("--repeats", type=int, default=2,
-                    help="runs per level; best throughput kept (the host is "
-                         "a shared VM -- single runs vary up to 3x from "
-                         "invisible neighbor load)")
-    ap.add_argument("--max-retries", type=int, default=2,
-                    help="extra interleaved rep rounds (one FULL pair each, "
-                         "both levels re-measured) whenever the pair would "
-                         "record a sub-0.8 efficiency -- regardless of "
-                         "same-level variance. Round 3's artifact recorded "
-                         "0.326 from one contended high-variance window; "
-                         "round 4's recorded 0.713 from a LOW-variance but "
-                         "unrepresentative window (its 2-core legs were the "
-                         "fastest ever seen, 1.45M vs the 1.02-1.31M of "
-                         "every other window) that the variance-gated retry "
-                         "was blind to. Consistency within a window does "
-                         "not mean the window is representative; any "
-                         "sub-0.8 reading now buys the bounded retry.")
-    ap.add_argument("--variance-bound", type=float, default=1.3,
-                    help="max/min throughput ratio across same-level reps "
-                         "above which the window counts as contended")
+                    help="interleaved lo/hi leg pairs per core pair (the "
+                         "host is a shared VM -- single runs vary up to 3x "
+                         "from invisible neighbor load)")
     args = ap.parse_args()
 
     def tp(r: dict) -> float:
         return r["edges_per_sec_per_superstep"]
-
-    def one_round(lo: int, hi: int, runs_lo: list, runs_hi: list) -> None:
-        # INTERLEAVED legs (lo, hi, lo, hi, ...): a contended window then
-        # degrades both levels instead of silently halving one of them
-        for i in range(args.repeats):
-            r = run_level(lo, args.convs, hi)
-            print(f"  local[{lo}] run {len(runs_lo)}: {r}",
-                  file=sys.stderr, flush=True)
-            runs_lo.append(r)
-            r = run_level(hi, args.convs, hi)
-            print(f"  local[{hi}] run {len(runs_hi)}: {r}",
-                  file=sys.stderr, flush=True)
-            runs_hi.append(r)
-
-    def variance(runs: list) -> float:
-        # any failed rep (tp 0, e.g. subprocess timeout on a loaded host)
-        # counts as infinite variance: a 1-good/1-failed level is exactly
-        # the contended single-effective-rep window the retry exists for,
-        # and an all-failed level is certainly not a stable measurement
-        vals = [tp(r) for r in runs]
-        if any(v == 0 for v in vals):
-            return float("inf")
-        return (max(vals) / min(vals)) if len(vals) > 1 else 1.0
 
     results = []
     for pair in args.pairs:
@@ -158,58 +124,41 @@ def main() -> None:
         ratio = hi / lo
         runs_lo: list[dict] = []
         runs_hi: list[dict] = []
-        retries = 0
-        while True:
-            one_round(lo, hi, runs_lo, runs_hi)
-            best_lo = max(runs_lo, key=tp)
-            best_hi = max(runs_hi, key=tp)
-            eff = tp(best_hi) / (ratio * tp(best_lo)) if tp(best_lo) else 0.0
-            contended = (variance(runs_lo) > args.variance_bound
-                         or variance(runs_hi) > args.variance_bound
-                         or not tp(best_lo) or not tp(best_hi))
-            # ANY sub-0.8 reading triggers the bounded retry (a full extra
-            # pair, both levels -- never cherry-picking one leg). The
-            # round-4 blind spot: a low-variance window can still be
-            # unrepresentative (both 2-core legs anomalously fast in the
-            # same minute), and variance-gating recorded 0.713 for an
-            # engine that measures 0.95 idle.
-            if eff >= 0.8 or retries >= args.max_retries:
-                break
-            retries += 1
-            reason = ("contended window (same-level variance "
-                      f"{variance(runs_lo):.2f}/{variance(runs_hi):.2f} > "
-                      f"{args.variance_bound})" if contended else
-                      "low-variance but sub-0.8 -- possibly "
-                      "unrepresentative window, re-measuring a full pair")
-            print(f"  pair {lo},{hi}: eff {eff:.3f} -- {reason}, retry "
-                  f"{retries}/{args.max_retries}", file=sys.stderr, flush=True)
-        if not tp(best_lo):
-            results.append({"error": "all N-core reps failed",
+        # INTERLEAVED legs (lo, hi, lo, hi, ...): a contended window then
+        # degrades both levels of its pair instead of silently halving one
+        # level, and each pair yields its own efficiency reading
+        for i in range(args.repeats):
+            for cores, runs in ((lo, runs_lo), (hi, runs_hi)):
+                r = run_level(cores, args.convs, hi)
+                print(f"  local[{cores}] run {i}: {r}", file=sys.stderr,
+                      flush=True)
+                runs.append(r)
+        best_lo = max(runs_lo, key=tp)
+        best_hi = max(runs_hi, key=tp)
+        if not tp(best_lo) or not tp(best_hi):
+            results.append({"error": "every leg of one level failed",
                             "N_cores": lo, "xN_cores": hi,
-                            "detail": best_lo.get("error")})
+                            "detail": (best_lo if not tp(best_lo)
+                                       else best_hi).get("error")})
             continue
-        if not tp(best_hi):
-            results.append({"error": "all xN-core reps failed",
-                            "N_cores": lo, "xN_cores": hi,
-                            "detail": best_hi.get("error")})
-            continue
+        effs = sorted(tp(h) / (ratio * tp(l))
+                      for l, h in zip(runs_lo, runs_hi) if tp(l) and tp(h))
         results.append({
             "N_cores": lo, "xN_cores": hi, "core_ratio": ratio,
             "throughput_N": tp(best_lo),
             "throughput_xN": tp(best_hi),
             "speedup": round(tp(best_hi) / tp(best_lo), 3),
-            "scaling_efficiency": round(eff, 3),
+            "scaling_efficiency": round(tp(best_hi) / (ratio * tp(best_lo)), 3),
+            "median_efficiency": (round(statistics.median(effs), 3)
+                                  if effs else None),
+            "min_efficiency": round(effs[0], 3) if effs else None,
+            "max_efficiency": round(effs[-1], 3) if effs else None,
+            "pairs_ok": len(effs),
             "edges": best_lo["edges"], "supersteps": best_lo["supersteps"],
             "raw_legs_N": [tp(r) for r in runs_lo],
             "raw_legs_xN": [tp(r) for r in runs_hi],
-            # cap so a failed-rep inf never puts non-JSON Infinity in the
-            # artifact
-            "variance_N": round(min(variance(runs_lo), 999.0), 3),
-            "variance_xN": round(min(variance(runs_hi), 999.0), 3),
-            "contended_retries": retries,
         })
     print(json.dumps({"scaling": results}))
-
 
 if __name__ == "__main__":
     main()
