@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import register_cache
 from ..functions.vector import cosine, euclidean_distance
+from ..plans.checkpoint import truncate_mem
 
 
 def brute_force_topk(
@@ -314,7 +315,7 @@ def nn_descent_topk(
     if init_buckets is None:
         init_buckets = max(int(n / max(k * 2, 1)), 1)
     c = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")) \
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     # THREE independent hash bucketings, unioned: a single bucketing yields
     # disjoint cliques that neighbor-of-neighbor proposals can never leave
     # (the refinement would be stuck in its init component); overlapping
@@ -359,7 +360,7 @@ def nn_descent_topk(
         return (
             scored.withColumn("_rn", F.row_number().over(win))
             .filter(F.col("_rn") <= k).drop("_rn")
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
 
     knn = score_and_prune(knn)
@@ -422,7 +423,7 @@ def ivf_index(
 
     v = corpus.select(
         F.col(id_col).alias("id"), _unit(F.col(vec_col)).alias("vec")
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
     assign, cent = lloyd_loop(v, n_cells, quantizer_iterations)
     return (assign.select("id", F.col("community").alias("cell")),
             cent.select(F.col("community").alias("cell"), "cvec"))

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph
+from ..plans.checkpoint import truncate_mem
 
 _MULT = "_mult"
 
@@ -99,14 +100,14 @@ def betweenness(graph: SparkGraph, config: BetweennessConfig | None = None) -> D
         graph.oriented_edges(orient)
         .groupBy(SRC, DST)
         .agg(F.count(F.lit(1)).cast("double").alias(_MULT))
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     )
 
     sources = _select_sources(graph, cfg)
     frontier = sources.select(
         "s", F.col("s").alias("node"), F.lit(1.0).alias("sigma")
-    ).localCheckpoint(eager=True)
-    visited = frontier.withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
+    visited = frontier.withColumn("dist", F.lit(0)).transform(truncate_mem)
 
     # ---- forward: layered multi-source BFS with sigma accumulation ------
     depth = 0
@@ -119,14 +120,14 @@ def betweenness(graph: SparkGraph, config: BetweennessConfig | None = None) -> D
         new = (
             msgs.join(visited.select("s", "node"), ["s", "node"], "left_anti")
             .groupBy("s", "node").agg(F.sum("_sig").alias("sigma"))
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         if new.isEmpty():
             break
         depth += 1
         visited = visited.unionByName(
             new.withColumn("dist", F.lit(depth))
-        ).localCheckpoint(eager=True)
+        ).transform(truncate_mem)
         frontier = new
 
     # ---- backward: dependency accumulation level by level ---------------
@@ -157,7 +158,7 @@ def betweenness(graph: SparkGraph, config: BetweennessConfig | None = None) -> D
             level.select("s", "node", "sigma")
             .join(contrib.select("s", "node", "delta"), ["s", "node"], "left")
             .fillna(0.0, ["delta"])
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         part = delta_next.filter(F.col("node") != F.col("s")) \
             .select("node", "delta")

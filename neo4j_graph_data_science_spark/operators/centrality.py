@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
+from ..plans.checkpoint import truncate_mem
 from ..plans.local_kernel import local_hits, should_run_local
 from ..plans.pregel import auto_partitions, prepare_edges
 
@@ -57,11 +58,9 @@ def hits(graph: SparkGraph, config: HitsConfig | None = None) -> DataFrame:
         eset, cfg.partitions or auto_partitions(n_edges, eset.sparkSession))
     nodes = graph.nodes.select("id")
 
-    from ..plans.checkpoint import truncate
-
     def _l2_normalized(df: DataFrame, col: str) -> DataFrame:
         # the norm rides along as a broadcast 1-row crossJoin instead of a
-        # driver collect: one Spark action per phase (the truncate itself)
+        # driver collect: one Spark action per phase (the lineage cut itself)
         # rather than collect + checkpoint (round-1 finding: 3 extra jobs
         # per HITS iteration, pure fixed-cost latency at scale)
         norm = df.agg(
@@ -82,7 +81,7 @@ def hits(graph: SparkGraph, config: HitsConfig | None = None) -> DataFrame:
         .select("id", F.coalesce("auth", F.lit(0.0)).alias("auth"),
                 F.lit(1.0).alias("hub"))
     )
-    state = truncate(_l2_normalized(state, "auth"), "hits")
+    state = truncate_mem(_l2_normalized(state, "auth"))
 
     for _ in range(cfg.hits_iterations):
         # auth(v) = sum of hub over in-neighbors
@@ -94,7 +93,7 @@ def hits(graph: SparkGraph, config: HitsConfig | None = None) -> DataFrame:
         state = state.join(auths, "id", "left").select(
             "id", F.coalesce("_a", F.lit(0.0)).alias("auth"), "hub"
         )
-        state = truncate(_l2_normalized(state, "auth"), "hits")
+        state = truncate_mem(_l2_normalized(state, "auth"))
         # hub(v) = sum of auth over out-neighbors
         hubs = (
             edges.join(state.select(F.col("id").alias(DST), "auth").withColumnRenamed("auth", "_na"), DST)
@@ -104,7 +103,7 @@ def hits(graph: SparkGraph, config: HitsConfig | None = None) -> DataFrame:
         state = state.join(hubs, "id", "left").select(
             "id", "auth", F.coalesce("_h", F.lit(0.0)).alias("hub")
         )
-        state = truncate(_l2_normalized(state, "hub"), "hits")
+        state = truncate_mem(_l2_normalized(state, "hub"))
     edges.unpersist()
     eset.unpersist()
     return state.select("id", "auth", "hub")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph
+from ..plans.checkpoint import truncate_mem
 from .triangle import _canonical_edges
 
 
@@ -48,7 +49,7 @@ def clique_counting(graph: SparkGraph, config: CliqueCountingConfig | None = Non
     oriented = ed.select(
         F.when(lower_first, F.col(SRC)).otherwise(F.col(DST)).alias("u"),
         F.when(lower_first, F.col(DST)).otherwise(F.col(SRC)).alias("v"),
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
 
     spark = graph.nodes.sparkSession
     # level 2: ordered pairs (m1, m2)
@@ -67,7 +68,7 @@ def clique_counting(graph: SparkGraph, config: CliqueCountingConfig | None = Non
                 oriented.select(F.col("u").alias(m), F.col("v").alias(f"m{k}")),
                 [m, f"m{k}"], "left_semi",
             )
-        cliques = ext.localCheckpoint(eager=True)
+        cliques = ext.transform(truncate_mem)
         cnt = cliques.count()
         globals_rows.append((k, cnt))
         cols = members + [f"m{k}"]

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import SparkGraph
+from ..plans.checkpoint import truncate_mem
 
 
 @dataclass
@@ -101,7 +102,7 @@ def lloyd_kmeans(vectors: DataFrame, k: int = 4, iterations: int = 5,
     v = vectors.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
     final, _cent = lloyd_loop(v, k, iterations)
     return final.select(
         "id", "community", F.sqrt("_d2").alias("distance_from_centroid"))
@@ -122,7 +123,7 @@ def lloyd_loop(v: DataFrame, k: int,
         .select((F.row_number().over(Window.orderBy("id")) - 1)
                 .cast("long").alias("community"),
                 F.col("vec").alias("cvec"))
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     )
     d2 = F.aggregate(
         F.zip_with("vec", "cvec", lambda a, b: (a - b) * (a - b)),
@@ -154,7 +155,7 @@ def lloyd_loop(v: DataFrame, k: int,
         cent = (
             cent.join(newc, "community", "left")
             .select("community", F.coalesce("_nvec", "cvec").alias("cvec"))
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
     final = assign(cent)
     return final, cent
@@ -337,14 +338,13 @@ def hdbscan(vectors: DataFrame, config: HdbscanConfig | None = None,
            O(V) MST -- no cut level needed.
     """
     from ..catalog import DST, SRC, SparkGraph, W
-    from ..plans.checkpoint import truncate
     from .spanningtree import spanning_tree
     from .wcc import WccConfig, wcc
 
     cfg = config or HdbscanConfig()
     pts = vectors.select(F.col(id_col).alias("id"),
                          F.col(vec_col).cast("array<double>").alias("_v"))
-    pts = truncate(pts, "hdb_pts")
+    pts = truncate_mem(pts)
 
     # kNN by euclidean distance: NN-Descent's refinement loop with its
     # euclidean SimilarityComputer (the distances it returns are exact for
@@ -382,7 +382,7 @@ def hdbscan(vectors: DataFrame, config: HdbscanConfig | None = None,
         .join(pts.select(F.col("id").alias("b"), F.col("_v").alias("_cv")), "b")
         .select("a", "b", bdist.alias("d"))
     )
-    scored = truncate(scored.unionByName(backbone), "hdb_knn")
+    scored = truncate_mem(scored.unionByName(backbone))
 
     from pyspark.sql.window import Window
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
+from ..plans.checkpoint import truncate_mem
 
 
 def _undirected_simple(graph: SparkGraph) -> DataFrame:
@@ -54,10 +55,10 @@ def k_core(graph: SparkGraph, config: KCoreConfig | None = None) -> DataFrame:
     adj = (
         canon.select(F.col(SRC).alias("id"), F.col(DST).alias("nb"))
         .unionAll(canon.select(F.col(DST).alias("id"), F.col(SRC).alias("nb")))
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     )
     state = adj.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("core")) \
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
 
     # h-index of a DESC-sorted value array a: max over i of min(a[i], i+1)
     def h_index(arr):
@@ -92,7 +93,7 @@ def k_core(graph: SparkGraph, config: KCoreConfig | None = None) -> DataFrame:
                 (F.coalesce(h_index(F.col("_cs")), F.col("core")) < F.col("core"))
                 .alias("_ch"),
             )
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         changed = new.agg(F.max(F.col("_ch").cast("int"))).collect()[0][0]
         state = new.select("id", "core")
@@ -116,10 +117,10 @@ def k1_coloring(graph: SparkGraph, config: K1ColoringConfig | None = None) -> Da
     adj = (
         canon.select(F.col(SRC).alias("id"), F.col(DST).alias("nb"))
         .unionAll(canon.select(F.col(DST).alias("id"), F.col(SRC).alias("nb")))
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     )
     state = graph.nodes.select("id", F.lit(0).cast("long").alias("color")) \
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
 
     # mex of a color array: smallest k >= 0 absent from it. mex <= size(arr),
     # so the candidate range 0..size(arr) always contains it.
@@ -148,7 +149,7 @@ def k1_coloring(graph: SparkGraph, config: K1ColoringConfig | None = None) -> Da
         state = (
             state.join(forb, "id", "left")
             .select("id", F.coalesce("_new", F.col("color")).alias("color"))
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
     return state
 

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import register_cache
+from ..plans.checkpoint import truncate_mem
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -247,7 +248,7 @@ def semantic_dedup(vectors: DataFrame, threshold: float = 0.95,
     v = vectors.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
     assign, _cent = lloyd_loop(v, k, iterations)
     withv = register_cache(
         assign.select("id", "community").join(v, "id").persist())

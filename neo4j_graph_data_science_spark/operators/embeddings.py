@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, W, SparkGraph
+from ..plans.checkpoint import truncate_mem
 from ..plans.pregel import prepare_edges
 
 
@@ -107,7 +108,7 @@ def fast_rp(graph: SparkGraph, config: FastRPConfig | None = None) -> DataFrame:
             init.join(deg, "id", "left").fillna(0.0, ["degree"])
             .select("id", F.transform("vec", lambda x: x * scale).alias("vec"))
         )
-    state = _l2_rows(init).localCheckpoint(eager=True)
+    state = _l2_rows(init).transform(truncate_mem)
 
     acc = None
     for i, w in enumerate(cfg.iteration_weights):
@@ -137,7 +138,7 @@ def fast_rp(graph: SparkGraph, config: FastRPConfig | None = None) -> DataFrame:
                         F.array_repeat(F.lit(0.0), cfg.embedding_dim),
                     ).alias("vec"),
                 )
-            ).localCheckpoint(eager=True)
+            ).transform(truncate_mem)
         if w != 0.0:
             contrib = state.select(
                 "id", F.transform("vec", lambda x: x * F.lit(w)).alias("_c")
@@ -151,7 +152,7 @@ def fast_rp(graph: SparkGraph, config: FastRPConfig | None = None) -> DataFrame:
                         "id",
                         F.zip_with("emb", "_c", lambda a, b: a + b).alias("emb"),
                     )
-                    .localCheckpoint(eager=True)
+                    .transform(truncate_mem)
                 )
     edges.unpersist()
     if acc is None:
@@ -203,7 +204,7 @@ def random_walks(graph: SparkGraph, config: RandomWalkConfig | None = None) -> D
         "start",
         F.col("start").alias("cur"),
         F.lit(None).cast("long").alias("prev"),
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
 
     M = 1_000_000_007
     paths = [walks.select("walk_id", "start", F.lit(0).alias("step"),
@@ -247,7 +248,7 @@ def random_walks(graph: SparkGraph, config: RandomWalkConfig | None = None) -> D
             .agg(F.min_by(F.col(DST), F.col("_rk")).alias("cur"),
                  F.first("start").alias("start"),
                  F.first(SRC).alias("prev"))
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         if picked.count() == 0:
             break
@@ -517,9 +518,9 @@ def hashgnn(graph: SparkGraph, config: HashGNNConfig | None = None,
         ).distinct()
     else:
         feats = features.select("id", F.col("f").cast("long")).distinct()
-    feats = feats.localCheckpoint(eager=True)
+    feats = feats.transform(truncate_mem)
     edges = graph.oriented_edges("UNDIRECTED").select(SRC, DST) \
-        .distinct().localCheckpoint(eager=True)
+        .distinct().transform(truncate_mem)
 
     def ukey(*cols):
         return (F.pmod(h64(*cols), F.lit(1_000_000_007)).cast("double")
@@ -542,7 +543,7 @@ def hashgnn(graph: SparkGraph, config: HashGNNConfig | None = None,
             .groupBy("id", "k")
             .agg(F.min_by("f", "_key").alias("f"))
             .select("id", "f").distinct()
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
     return feats.groupBy("id").agg(
         F.array_sort(F.collect_set("f")).alias("embedding"))

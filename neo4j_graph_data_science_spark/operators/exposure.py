@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, W, SparkGraph
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 
 
 @dataclass
@@ -37,16 +37,13 @@ def indirect_exposure(graph: SparkGraph, sanctioned: Sequence[int],
     """(id, exposure, hop, parent, root); unreached nodes have exposure 0
     and hop/parent/root = -1 (the reference's UNDEFINED)."""
     cfg = config or IndirectExposureConfig()
-    edges = truncate(
-        graph.aggregated_edges("SUM", "UNDIRECTED"), "exp_edges")
+    edges = truncate_mem(graph.aggregated_edges("SUM", "UNDIRECTED"))
     wdeg = edges.groupBy(F.col(SRC).alias("id")).agg(F.sum(W).alias("_wd"))
     seeds = [int(s) for s in sanctioned]
-    visited = truncate(
+    visited = truncate_mem(
         graph.nodes.filter(F.col("id").isin(seeds)).select(
             "id", F.lit(1.0).alias("exposure"), F.lit(0).cast("long").alias("hop"),
-            F.col("id").alias("parent"), F.col("id").alias("root")),
-        "exp_visited",
-    )
+            F.col("id").alias("parent"), F.col("id").alias("root")))
     frontier = visited
     for hop in range(1, cfg.max_iterations + 1):
         if frontier.isEmpty():
@@ -64,7 +61,7 @@ def indirect_exposure(graph: SparkGraph, sanctioned: Sequence[int],
             )
             .groupBy("id").agg(F.max("_m").alias("m"))
         )
-        frontier = truncate(
+        frontier = truncate_mem(
             msgs.join(visited.select("id"), "id", "left_anti")
             .join(wdeg, "id", "left")
             .select(
@@ -74,10 +71,8 @@ def indirect_exposure(graph: SparkGraph, sanctioned: Sequence[int],
                 F.lit(hop).cast("long").alias("hop"),
                 (-F.col("m.negsender")).alias("parent"),
                 F.col("m.rt").alias("root"),
-            ),
-            "exp_frontier",
-        )
-        visited = truncate(visited.unionByName(frontier), "exp_visited")
+            ))
+        visited = truncate_mem(visited.unionByName(frontier))
     return (
         graph.nodes.select("id")
         .join(visited, "id", "left")

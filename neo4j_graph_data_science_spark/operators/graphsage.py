@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 from ..plans.pregel import prepare_edges
 
 
@@ -321,16 +321,14 @@ def graphsage_predict(graph: SparkGraph, model: dict,
         cfg.partitions,
     )
     nodes = graph.nodes.select("id")
-    state = truncate(
+    state = truncate_mem(
         nodes.join(feats, "id", "left").select(
             "id",
             F.coalesce(
                 F.col("features").cast("array<double>"),
                 F.array_repeat(F.lit(0.0), int(model["f_dim"])),
             ).alias("vec"),
-        ),
-        "sage_state",
-    )
+        ))
 
     pool = model.get("aggregator", "mean") == "pool"
 
@@ -365,9 +363,8 @@ def graphsage_predict(graph: SparkGraph, model: dict,
                 Z = np.divide(Z, nrm, out=Z, where=nrm > 0)
             return pd.Series(list(Z))
 
-        return truncate(
-            joined.select("id", fwd("vec", "nvec").alias("vec")), "sage_state"
-        )
+        return truncate_mem(
+            joined.select("id", fwd("vec", "nvec").alias("vec")))
 
     state = layer(state, model["Ws1"], model["Wn1"], relu=True,
                   normalize=False,

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 from .wcc import WccConfig, wcc
 
 
@@ -55,7 +55,7 @@ class CelfConfig:
     # auto-falls back to mode="undirected_components" with a warning
     # (exact only for symmetric cascades, but it never builds the closure).
     # 100M rows ~= 2.4 GB of triples, comfortable cluster-side; the checks
-    # ride the per-level parquet snapshots (footer counts), no extra scan.
+    # count the per-level in-memory cuts, no extra scan.
     max_reach_rows: int = 100_000_000
 
 
@@ -90,20 +90,16 @@ def _directed_reach(graph: SparkGraph, cfg: CelfConfig) -> DataFrame:
     )
     sims = de.select(
         SRC, DST, F.explode(F.sequence(F.lit(0), F.lit(R - 1))).alias("sim"))
-    live = truncate(
+    live = truncate_mem(
         sims.filter(
             _coin(cfg, SRC, DST, "sim")
             < int(cfg.propagation_probability * 1_000_000)
-        ),
-        "celf_live",
-    )
-    reach = truncate(
+        ))
+    reach = truncate_mem(
         graph.nodes.select("id")
         .select(F.col("id").alias("root"),
                 F.explode(F.sequence(F.lit(0), F.lit(R - 1))).alias("sim"))
-        .select("sim", "root", F.col("root").alias("node")),
-        "celf_reach",
-    )
+        .select("sim", "root", F.col("root").alias("node")))
     frontier = reach
     total_rows = reach.count()
     for _ in range(cfg.max_levels):
@@ -114,9 +110,8 @@ def _directed_reach(graph: SparkGraph, cfg: CelfConfig) -> DataFrame:
             .select("sim", "root", F.col("_n").alias("node"))
             .distinct()
         )
-        nxt = truncate(nxt.join(reach, ["sim", "root", "node"], "left_anti"),
-                       "celf_frontier")
-        n_new = nxt.count()   # parquet footer count over the fresh snapshot
+        nxt = truncate_mem(nxt.join(reach, ["sim", "root", "node"], "left_anti"))
+        n_new = nxt.count()   # counts the cached cut, no recompute
         if n_new == 0:
             break
         total_rows += n_new
@@ -126,7 +121,7 @@ def _directed_reach(graph: SparkGraph, cfg: CelfConfig) -> DataFrame:
                 f"(> max_reach_rows={cfg.max_reach_rows:,}) -- "
                 f"propagation_probability={cfg.propagation_probability} is "
                 "too high for the exact directed closure on this graph")
-        reach = truncate(reach.unionByName(nxt), "celf_reach")
+        reach = truncate_mem(reach.unionByName(nxt))
         frontier = nxt
     return reach
 
@@ -169,7 +164,7 @@ def celf(graph: SparkGraph, config: CelfConfig | None = None) -> DataFrame:
             picks.append((node, round(total, 6)))
             covered = covered.unionByName(
                 reach.filter(F.col("root") == node).select("sim", "node")
-            ).distinct().localCheckpoint(eager=True)
+            ).distinct().transform(truncate_mem)
         return spark.createDataFrame(picks, "node_id long, spread double")
 
     if cfg.mode != "undirected_components":
@@ -201,17 +196,14 @@ def _undirected_celf(graph: SparkGraph, cfg: CelfConfig, spark) -> DataFrame:
         .select("id", F.explode(F.sequence(F.lit(0), F.lit(R - 1))).alias("sim"))
         .select((F.col("id") * R + F.col("sim")).alias("id"))
     )
-    membership = truncate(
+    membership = truncate_mem(
         wcc(SparkGraph(nodes=comp_nodes, edges=comp_edges), WccConfig()).state
         .select((F.col("id") % R).alias("sim"),
                 F.floor(F.col("id") / R).alias("node"),
-                F.col("component").alias("comp")),
-        "celf_members",
-    )
+                F.col("component").alias("comp")))
     sizes = membership.groupBy("sim", "comp").agg(
         F.count(F.lit(1)).alias("size"))
-    gains_base = truncate(
-        membership.join(sizes, ["sim", "comp"]), "celf_gains")
+    gains_base = truncate_mem(membership.join(sizes, ["sim", "comp"]))
 
     covered = spark.createDataFrame([], "sim int, comp bigint")
     picks = []
@@ -231,5 +223,5 @@ def _undirected_celf(graph: SparkGraph, cfg: CelfConfig, spark) -> DataFrame:
         picks.append((node, round(total, 6)))
         covered = covered.unionByName(
             membership.filter(F.col("node") == node).select("sim", "comp")
-        ).distinct().localCheckpoint(eager=True)
+        ).distinct().transform(truncate_mem)
     return spark.createDataFrame(picks, "node_id long, spread double")

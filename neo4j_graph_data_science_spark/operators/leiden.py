@@ -13,10 +13,10 @@ argmax (the theta -> 0 limit) so results are reproducible under any
 cluster size / partitioning, which the north rule requires. GDS's own
 tests assert community structure rather than exact labels, and so do ours.
 
-Every round is a pure BSP step (joins + groupBys); state is truncated via
-plans/checkpoint.truncate (parquet round-trip) -- localCheckpoint would
-carry a join-product sizeInBytes stat that grows doubly-exponentially over
-rounds (see truncate's docstring / the round-1 Louvain hang).
+Every round is a pure BSP step (joins + groupBys); state is cut via
+plans/checkpoint.truncate_mem, whose size-estimate clamp stops the
+join-product sizeInBytes from growing doubly-exponentially over rounds
+(the round-1 Louvain hang).
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import DST, SRC, W, SparkGraph
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 from .community import modularity as modularity_metric
 
 
@@ -42,7 +42,7 @@ class LeidenConfig:
 
 
 def _moves(edges: DataFrame, labels: DataFrame, two_m: float, gamma: float,
-           max_rounds: int, constrained: bool, tag: str,
+           max_rounds: int, constrained: bool,
            parity_mode: str = "xxhash64") -> DataFrame:
     """Shared local-move kernel. labels: (id, comm, k [, grp]).
     If constrained, a node may only join communities whose nodes share its
@@ -105,15 +105,13 @@ def _moves(edges: DataFrame, labels: DataFrame, two_m: float, gamma: float,
             parity = F.pmod(F.xxhash64("id", F.lit(rnd)), F.lit(2)) == 0
         improving = F.col("_best").isNotNull() & (F.col("_best") != F.col("comm")) \
             & (F.col("_gain") > 0)
-        labels_new = truncate(
+        labels_new = truncate_mem(
             labels.join(best, "id", "left").select(
                 *[c for c in cols if c != "comm"],
                 F.when(improving & parity, F.col("_best")).otherwise(F.col("comm"))
                 .alias("comm"),
                 improving.alias("_pending"),
-            ),
-            tag,
-        )
+            ))
         pending = labels_new.agg(
             F.max(F.col("_pending").cast("int"))).collect()[0][0]
         labels = labels_new.select(*cols)
@@ -127,12 +125,10 @@ def leiden(graph: SparkGraph, config: LeidenConfig | None = None,
     """Returns (labels_df(id, community), levels, modularities) -- same
     result shape as louvain(); community ids live in the original id space."""
     cfg = config or LeidenConfig()
-    edges = truncate(
+    edges = truncate_mem(
         graph.aggregated_edges("SUM", "UNDIRECTED")
-        .filter(F.col(SRC) != F.col(DST)),
-        "ld_edges",
-    )
-    nodes = truncate(graph.nodes.select("id"), "ld_nodes")
+        .filter(F.col(SRC) != F.col(DST)))
+    nodes = truncate_mem(graph.nodes.select("id"))
     # original id -> current aggregated node
     agg_map = nodes.select("id", F.col("id").alias("agg"))
     init: DataFrame | None = None  # (id=agg node, comm) seed for local moves
@@ -142,24 +138,21 @@ def leiden(graph: SparkGraph, config: LeidenConfig | None = None,
 
     for level in range(cfg.max_levels):
         deg = edges.groupBy(F.col(SRC).alias("id")).agg(F.sum(W).alias("k"))
-        nodes_k = truncate(
-            nodes.join(deg, "id", "left").fillna(0.0, ["k"]), "ld_nk")
+        nodes_k = truncate_mem(
+            nodes.join(deg, "id", "left").fillna(0.0, ["k"]))
         two_m = nodes_k.agg(F.sum("k")).collect()[0][0] or 1.0
         seed = (init if init is not None
                 else nodes_k.select("id", F.col("id").alias("comm")))
-        labels0 = truncate(
-            nodes_k.join(seed.select("id", "comm"), "id"), "ld_lab")
+        labels0 = truncate_mem(nodes_k.join(seed.select("id", "comm"), "id"))
         coarse = _moves(edges, labels0.select("id", "comm", "k"), two_m,
-                        cfg.gamma, cfg.max_local_moves, False, "ld_mv",
+                        cfg.gamma, cfg.max_local_moves, False,
                         parity_mode=parity_mode)
 
         # ---- output + termination check on the ORIGINAL graph ----------
-        new_out = truncate(
+        new_out = truncate_mem(
             agg_map.join(coarse.select(F.col("id").alias("agg"),
                                        F.col("comm").alias("community")), "agg")
-            .select("id", "community"),
-            "ld_out",
-        )
+            .select("id", "community"))
         q = modularity_metric(graph, new_out, "community") \
             .collect()[0]["modularity"]
         if prev_q is not None and q - prev_q < cfg.min_gain:
@@ -171,33 +164,27 @@ def leiden(graph: SparkGraph, config: LeidenConfig | None = None,
         ref0 = coarse.select(
             "id", F.col("id").alias("comm"), "k", F.col("comm").alias("grp"))
         refined = _moves(edges, ref0, two_m, cfg.gamma,
-                         cfg.max_refine_moves, True, "ld_rf",
+                         cfg.max_refine_moves, True,
                          parity_mode=parity_mode)
 
         # ---- aggregate by REFINED partition -----------------------------
         r_s = refined.select(F.col("id").alias(SRC), F.col("comm").alias("_rs"))
         r_d = refined.select(F.col("id").alias(DST), F.col("comm").alias("_rd"))
-        edges = truncate(
+        edges = truncate_mem(
             edges.join(r_s, SRC).join(r_d, DST)
             .groupBy(F.col("_rs").alias(SRC), F.col("_rd").alias(DST))
-            .agg(F.sum(W).alias(W)),
-            "ld_edges",
-        )
-        nodes = truncate(
-            refined.select(F.col("comm").alias("id")).distinct(), "ld_nodes")
+            .agg(F.sum(W).alias(W)))
+        nodes = truncate_mem(
+            refined.select(F.col("comm").alias("id")).distinct())
         # next level's seed: each refined community starts in its COARSE comm
-        init = truncate(
+        init = truncate_mem(
             refined.select(F.col("comm").alias("id"), F.col("grp").alias("comm"))
-            .distinct(),
-            "ld_init",
-        )
-        agg_map = truncate(
+            .distinct())
+        agg_map = truncate_mem(
             agg_map.join(
                 refined.select(F.col("id").alias("agg"), F.col("comm").alias("_r")),
                 "agg",
-            ).select("id", F.col("_r").alias("agg")),
-            "ld_agg",
-        )
+            ).select("id", F.col("_r").alias("agg")))
         if edges.filter(F.col(SRC) != F.col(DST)).isEmpty():
             break
     return out, len(modularities), modularities
@@ -210,16 +197,12 @@ def modularity_optimization(graph: SparkGraph, seed: DataFrame | None = None,
     ModularityOptimization.java:61): the local-move phase alone -- no
     contraction levels -- optionally warm-started from a seed partition
     (id, community). Returns (labels_df(id, community), modularity)."""
-    edges = truncate(
+    edges = truncate_mem(
         graph.aggregated_edges("SUM", "UNDIRECTED")
-        .filter(F.col(SRC) != F.col(DST)),
-        "mo_edges",
-    )
+        .filter(F.col(SRC) != F.col(DST)))
     deg = edges.groupBy(F.col(SRC).alias("id")).agg(F.sum(W).alias("k"))
-    nodes_k = truncate(
-        graph.nodes.select("id").join(deg, "id", "left").fillna(0.0, ["k"]),
-        "mo_nk",
-    )
+    nodes_k = truncate_mem(
+        graph.nodes.select("id").join(deg, "id", "left").fillna(0.0, ["k"]))
     two_m = nodes_k.agg(F.sum("k")).collect()[0][0] or 1.0
     if seed is not None:
         labels0 = nodes_k.join(
@@ -227,8 +210,8 @@ def modularity_optimization(graph: SparkGraph, seed: DataFrame | None = None,
         ).select("id", F.coalesce("comm", F.col("id")).alias("comm"), "k")
     else:
         labels0 = nodes_k.select("id", F.col("id").alias("comm"), "k")
-    labels = _moves(edges, truncate(labels0, "mo_lab"), two_m, gamma,
-                    max_rounds, False, "mo_mv", parity_mode=parity_mode)
+    labels = _moves(edges, truncate_mem(labels0), two_m, gamma,
+                    max_rounds, False, parity_mode=parity_mode)
     out = labels.select("id", F.col("comm").alias("community"))
     q = modularity_metric(graph, out, "community").collect()[0]["modularity"]
     return out, q

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import DST, SRC, W, SparkGraph
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 from .community import modularity as modularity_metric
 
 
@@ -57,7 +57,7 @@ def _local_moves(edges: DataFrame, nodes: DataFrame, max_rounds: int,
     through contraction, making gains deterministic IEEE doubles -- replays
     bit-for-bit in any engine with a standard md5."""
     deg = edges.groupBy(F.col(SRC).alias("id")).agg(F.sum(W).alias("k"))
-    nodes_k = truncate(nodes.join(deg, "id", "left").fillna(0.0, ["k"]), "lv_nk")
+    nodes_k = truncate_mem(nodes.join(deg, "id", "left").fillna(0.0, ["k"]))
     two_m = nodes_k.agg(F.sum("k")).collect()[0][0] or 1.0
     labels = nodes_k.select("id", F.col("id").alias("comm"), "k")
 
@@ -115,7 +115,7 @@ def _local_moves(edges: DataFrame, nodes: DataFrame, max_rounds: int,
                 improving.alias("_pending"),
             )
         )
-        labels_new = truncate(labels_new, "lv_lab")
+        labels_new = truncate_mem(labels_new)
         pending = labels_new.agg(
             F.max(F.col("_pending").cast("int"))
         ).collect()[0][0]
@@ -133,8 +133,8 @@ def louvain(graph: SparkGraph, config: LouvainConfig | None = None,
     # undirected symmetric weighted edge view, parallel edges summed
     base = graph.aggregated_edges("SUM", "UNDIRECTED") \
         .filter(F.col(SRC) != F.col(DST))
-    edges = truncate(base, "lv_edges")
-    nodes = truncate(graph.nodes.select("id"), "lv_nodes")
+    edges = truncate_mem(base)
+    nodes = truncate_mem(graph.nodes.select("id"))
     # mapping original id -> current community (starts as identity)
     assignment = nodes.select("id", F.col("id").alias("community"))
     modularities: list[float] = []
@@ -150,7 +150,7 @@ def louvain(graph: SparkGraph, config: LouvainConfig | None = None,
             )
             .select("id", F.col("comm").alias("community"))
         )
-        new_assignment = truncate(new_assignment, "lv_asg")
+        new_assignment = truncate_mem(new_assignment)
         q = modularity_metric(graph, new_assignment, "community") \
             .collect()[0]["modularity"]
         if prev_q is not None and q - prev_q < cfg.min_gain:
@@ -166,10 +166,10 @@ def louvain(graph: SparkGraph, config: LouvainConfig | None = None,
             .groupBy(F.col("_cs").alias(SRC), F.col("_cd").alias(DST))
             .agg(F.sum(W).alias(W))
         )
-        edges = truncate(edges, "lv_edges")
+        edges = truncate_mem(edges)
         # self-loops (intra-community weight) stay: they feed k_i and
         # k_{i,own} at the next level, as in textbook Louvain contraction
-        nodes = truncate(labels.select(F.col("comm").alias("id")).distinct(), "lv_nodes")
+        nodes = truncate_mem(labels.select(F.col("comm").alias("id")).distinct())
         if edges.count() == 0:
             break
     return assignment, len(modularities), modularities

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import DST, SRC, W, SparkGraph
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 
 
 @dataclass
@@ -55,12 +55,10 @@ def approx_max_k_cut(graph: SparkGraph, config: MaxKCutConfig | None = None):
     """Returns (assignment_df(id, community), cut_cost) -- the best of
     `iterations` restarts; cut_cost = total weight of cross-partition edges."""
     cfg = config or MaxKCutConfig()
-    edges = truncate(
+    edges = truncate_mem(
         graph.aggregated_edges("SUM", "UNDIRECTED")
-        .filter(F.col(SRC) != F.col(DST)),
-        "kcut_edges",
-    )
-    nodes = truncate(graph.nodes.select("id"), "kcut_nodes")
+        .filter(F.col(SRC) != F.col(DST)))
+    nodes = truncate_mem(graph.nodes.select("id"))
     def _md5_long(*cols):
         return F.conv(
             F.substring(F.md5(F.concat_ws(":", *cols)), 1, 15), 16, 10
@@ -73,12 +71,10 @@ def approx_max_k_cut(graph: SparkGraph, config: MaxKCutConfig | None = None):
                                   F.lit(str(cfg.seed + restart)))
         else:
             init_hash = F.xxhash64("id", F.lit(cfg.seed + restart))
-        part = truncate(
+        part = truncate_mem(
             nodes.select(
                 "id",
-                F.pmod(init_hash, F.lit(cfg.k)).cast("int").alias("part")),
-            "kcut_part",
-        )
+                F.pmod(init_hash, F.lit(cfg.k)).cast("int").alias("part")))
         for rnd in range(cfg.local_rounds):
             nbr = part.select(F.col("id").alias(DST), F.col("part").alias("_np"))
             # weight of node toward each EXISTING neighbor partition; a
@@ -126,7 +122,7 @@ def approx_max_k_cut(graph: SparkGraph, config: MaxKCutConfig | None = None):
                     ((F.col("_bw") < F.col("_cw"))).alias("_pending"),
                 )
             )
-            moved = truncate(moved, "kcut_part")
+            moved = truncate_mem(moved)
             pending = moved.agg(
                 F.max(F.col("_pending").cast("int"))).collect()[0][0]
             part = moved.select("id", "part")
@@ -134,8 +130,5 @@ def approx_max_k_cut(graph: SparkGraph, config: MaxKCutConfig | None = None):
                 break
         cut = _cut_weight(edges, part)
         if cut > best_cut:
-            # re-snapshot under a dedicated tag: later restarts keep
-            # truncating "kcut_part" and would garbage-collect the file
-            # this DataFrame reads from
-            best_cut, best_df = cut, truncate(part, "kcut_best")
+            best_cut, best_df = cut, part
     return best_df.select("id", F.col("part").cast("long").alias("community")), best_cut

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, bucketed_dense_ids
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 from ..plans.pregel import prepare_edges
 
 # decode a 64-bit mask into its set bit positions, JVM-side
@@ -46,24 +46,21 @@ def _msbfs_frontiers(
     # (batch, bit) assignment via partition-parallel dense ranks (the
     # bucket expr is coarse-monotonic in _sid, see bucketed_dense_ids)
     idx = bucketed_dense_ids(src, ["_sid"], F.floor(F.col("_sid") / F.lit(65536)))
-    smap = truncate(
+    smap = truncate_mem(
         idx.select(
             "_sid",
             F.shiftright("id", 6).alias("batch"),
             F.pmod("id", F.lit(64)).cast("int").alias("bit"),
-        ),
-        "msbfs_map",
-    )
+        ))
     init = smap.select(
         F.col("_sid").alias("id"),
         "batch",
         F.expr("shiftleft(cast(1 as bigint), bit)").alias("mask"),
     )
-    visited = truncate(init, "msbfs_vis")
+    visited = truncate_mem(init)
     frontier = visited
-    out = truncate(
-        init.select("batch", "id", "mask", F.lit(0).alias("dist")), "msbfs_out"
-    )
+    out = truncate_mem(
+        init.select("batch", "id", "mask", F.lit(0).alias("dist")))
     for depth in range(1, max_depth + 1):
         cand = (
             edges.join(
@@ -87,10 +84,10 @@ def _msbfs_frontiers(
             )
             .filter(F.col("mask") != 0)
         )
-        frontier = truncate(new, "msbfs_frontier")
+        frontier = truncate_mem(new)
         if frontier.isEmpty():
             break
-        visited = truncate(
+        visited = truncate_mem(
             visited.join(
                 frontier.select("batch", "id", F.col("mask").alias("_n")),
                 ["batch", "id"],
@@ -101,13 +98,9 @@ def _msbfs_frontiers(
                 F.coalesce("mask", F.lit(0).cast("long")).bitwiseOR(
                     F.coalesce("_n", F.lit(0).cast("long"))
                 ).alias("mask"),
-            ),
-            "msbfs_vis",
-        )
-        out = truncate(
-            out.unionByName(frontier.withColumn("dist", F.lit(depth))),
-            "msbfs_out",
-        )
+            ))
+        out = truncate_mem(
+            out.unionByName(frontier.withColumn("dist", F.lit(depth))))
     return out, smap
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
+from ..plans.checkpoint import truncate_mem
 from ..plans.local_kernel import (
     LOCAL_PATHS_MAX_EDGES, local_dijkstra_paths, local_relax_dist,
     should_run_local,
@@ -172,24 +173,24 @@ def topological_sort(graph: SparkGraph, max_iterations: int = 10000) -> DataFram
     Each round removes the zero-in-degree layer: one left_anti join to find
     the layer + one semi-join to shrink the edge set. Rounds = DAG depth.
     """
-    # localCheckpoint (not persist): each round's plan references the
-    # previous round's DataFrames multiple times, so without true lineage
-    # truncation the logical plan tree doubles every round and Catalyst
+    # lineage cut (not persist): each round's plan references the
+    # previous round's DataFrames multiple times, so without a true cut
+    # the logical plan tree doubles every round and Catalyst
     # analysis time grows exponentially (the classic iterative-DF pitfall).
     edges = graph.edges.select(SRC, DST).filter(F.col(SRC) != F.col(DST)) \
-        .distinct().localCheckpoint(eager=True)
-    remaining = graph.nodes.select("id").localCheckpoint(eager=True)
+        .distinct().transform(truncate_mem)
+    remaining = graph.nodes.select("id").transform(truncate_mem)
     levels: list[DataFrame] = []
     for level in range(max_iterations):
         has_in = edges.select(F.col(DST).alias("id")).distinct()
-        layer = remaining.join(has_in, "id", "left_anti").localCheckpoint(eager=True)
+        layer = remaining.join(has_in, "id", "left_anti").transform(truncate_mem)
         if layer.count() == 0:
             break
         levels.append(layer.select("id", F.lit(level).cast("long").alias("level")))
         remaining = remaining.join(layer, "id", "left_anti") \
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         edges = edges.join(layer.withColumnRenamed("id", SRC), SRC, "left_anti") \
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
     if not levels:
         return graph.nodes.select("id", F.lit(0).cast("long").alias("level")).limit(0)
     out = levels[0]
@@ -225,10 +226,10 @@ def _reconstruct_paths(dist: DataFrame, preds: DataFrame, source: int,
         dist.filter((F.col("dist") != INF) & (F.col("id") != source))
         .select(F.col("id").alias("target"), F.col("dist").alias("total_cost"),
                 F.col("id").alias("_cur"), F.array("id").alias("node_ids"))
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     )
     done = []
-    pmap = preds.select(F.col("id").alias("_cur"), "pred").localCheckpoint(eager=True)
+    pmap = preds.select(F.col("id").alias("_cur"), "pred").transform(truncate_mem)
     for _ in range(max_len):
         if walk.isEmpty():
             break
@@ -236,7 +237,7 @@ def _reconstruct_paths(dist: DataFrame, preds: DataFrame, source: int,
             walk.join(pmap, "_cur")
             .select("target", "total_cost", F.col("pred").alias("_cur"),
                     F.concat(F.array("pred"), "node_ids").alias("node_ids"))
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         arrived = walk.filter(F.col("_cur") == source)
         done.append(arrived.select("target", "total_cost", "node_ids"))
@@ -268,7 +269,7 @@ def _target_pruned_dist(nodes: DataFrame, edges: DataFrame, source: int,
         "id",
         F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
         (F.col("id") == source).alias("changed"),
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
     h = (heuristic.select("id", F.col("h").cast("double"))
          if heuristic is not None else None)
     for _ in range(max_iterations):
@@ -299,7 +300,7 @@ def _target_pruned_dist(nodes: DataFrame, edges: DataFrame, source: int,
                 F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
                 (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
             )
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
     return state.select("id", "dist").filter(F.col("dist") != INF)
 
@@ -325,7 +326,7 @@ def dijkstra(graph: SparkGraph, source: int, target: int | None = None,
     visit, so results — including tie-breaks — are identical to the full
     fixpoint (pinned by test_paths_family parity test)."""
     cfg = config or PathConfig()
-    e = graph.aggregated_edges("MIN").localCheckpoint(eager=True)
+    e = graph.aggregated_edges("MIN").transform(truncate_mem)
     n_edges = e.count()
     if should_run_local(n_edges,
                         (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
@@ -353,7 +354,7 @@ def dijkstra(graph: SparkGraph, source: int, target: int | None = None,
         # an equal-distance non-target node)
         dist = (raw.crossJoin(F.broadcast(best))
                 .filter((F.col("dist") < F.col("_bt")) | (F.col("id") == target))
-                .select("id", "dist").localCheckpoint(eager=True))
+                .select("id", "dist").transform(truncate_mem))
     else:
         dist = shortest_paths(graph, [source], cfg)
     preds = _deterministic_predecessors(e, dist)
@@ -443,7 +444,7 @@ def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
     state = spark.createDataFrame(
         [(w["wid"], int(w["spur"]), 0.0, True) for w in walkers],
         "wid long, id long, dist double, changed boolean",
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
     for _ in range(cfg.max_iterations):
         best_t = (state.filter(F.col("id") == target)
                   .select("wid", F.col("dist").alias("_bt")))
@@ -470,7 +471,7 @@ def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
                             F.coalesce("cand", F.lit(INF))).alias("dist"),
                     (F.coalesce("cand", F.lit(INF))
                      < F.coalesce("dist", F.lit(INF))).alias("changed"))
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
     # exact-set filter (positive weights): per walker keep nodes strictly
     # closer than its target plus the target row; walkers that never
@@ -479,7 +480,7 @@ def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
           .select("wid", F.col("dist").alias("_bt")))
     dist = (state.join(F.broadcast(bt), "wid")
             .filter((F.col("dist") < F.col("_bt")) | (F.col("id") == target))
-            .select("wid", "id", "dist").localCheckpoint(eager=True))
+            .select("wid", "id", "dist").transform(truncate_mem))
     du = dist.select("wid", F.col("id").alias(SRC), F.col("dist").alias("_du"))
     dv = dist.select("wid", F.col("id").alias(DST), F.col("dist").alias("_dv"))
     preds = (
@@ -491,12 +492,12 @@ def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
         .agg(F.min(SRC).alias("pred"))
     )
     pmap = preds.select("wid", F.col("id").alias("_cur"),
-                        "pred").localCheckpoint(eager=True)
+                        "pred").transform(truncate_mem)
     spur_map = masks.select("wid", F.col("spur").alias("_spur"))
     walk = (dist.filter(F.col("id") == target)
             .select("wid", F.col("dist").alias("total_cost"),
                     F.col("id").alias("_cur"), F.array("id").alias("node_ids"))
-            .localCheckpoint(eager=True))
+            .transform(truncate_mem))
     done = []
     for _ in range(cfg.max_iterations):
         if walk.isEmpty():
@@ -506,7 +507,7 @@ def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
             .select("wid", "total_cost", F.col("pred").alias("_cur"),
                     F.concat(F.array("pred"), "node_ids").alias("node_ids"))
             .join(spur_map, "wid")
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         done.append(walk.filter(F.col("_cur") == F.col("_spur"))
                     .select("wid", "total_cost", "node_ids"))
@@ -553,7 +554,7 @@ def yens(graph: SparkGraph, source: int, target: int, k: int = 3,
     paths = [(first[0]["total_cost"], list(first[0]["node_ids"]),
               list(first[0]["costs"]))]
     candidates: list[tuple[float, list[int], list[float]]] = []
-    edges_base = graph.aggregated_edges("MIN").localCheckpoint(eager=True)
+    edges_base = graph.aggregated_edges("MIN").transform(truncate_mem)
     n_edges = edges_base.count()
     subcritical = should_run_local(
         n_edges, (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
@@ -635,7 +636,7 @@ def bellman_ford(graph: SparkGraph, source: int,
         "id",
         F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
         (F.col("id") == source).alias("changed"),
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
     changed_after_v = False
     for rnd in range(n + 1):
         frontier = state.filter(F.col("changed") & (F.col("dist") != INF))
@@ -654,7 +655,7 @@ def bellman_ford(graph: SparkGraph, source: int,
                 F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
                 (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
             )
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         changed_after_v = rnd >= n - 1
     edges.unpersist()
@@ -691,7 +692,7 @@ def _bf_pred_state(graph: SparkGraph, source: int,
         F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
         (F.col("id") == source).alias("changed"),
         F.lit(None).cast("long").alias("pred"),
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
     for _ in range(n + 1):
         frontier = state.filter(F.col("changed") & (F.col("dist") != INF))
         if frontier.isEmpty():
@@ -715,7 +716,7 @@ def _bf_pred_state(graph: SparkGraph, source: int,
                 F.when(F.coalesce("cand", F.lit(INF)) < F.col("dist"),
                        F.col("_np")).otherwise(F.col("pred")).alias("pred"),
             )
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
     edges.unpersist()
     return state, n
@@ -748,7 +749,7 @@ def bellman_ford_negative_cycles(graph: SparkGraph, source: int,
                  .orderBy("id").limit(1).collect())
     if not seed_rows:
         return empty
-    pmap = state.select("id", "pred").localCheckpoint(eager=True)
+    pmap = state.select("id", "pred").transform(truncate_mem)
     visited = [int(seed_rows[0]["id"])]
     seen = {visited[0]: 0}
     cycle: list[int] | None = None
@@ -824,7 +825,7 @@ def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
     # self-loop cycles (pred(v) == v): singleton SCC but still a cycle
     selfloops = (state.filter(F.col("pred") == F.col("id"))
                  .select("id", F.col("id").alias("comp")))
-    cyc_nodes = cyc_nodes.unionByName(selfloops).localCheckpoint(eager=True)
+    cyc_nodes = cyc_nodes.unionByName(selfloops).transform(truncate_mem)
     if cyc_nodes.isEmpty():
         return empty
     # next(x) = the in-cycle y with pred(y) = x (unique: pred is a
@@ -832,12 +833,12 @@ def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
     nxt_map = (state.join(cyc_nodes, "id")
                .select("comp", F.col("pred").alias("cur"),
                        F.col("id").alias("nxt"))
-               .localCheckpoint(eager=True))
+               .transform(truncate_mem))
     starts = cyc_nodes.groupBy("comp").agg(F.min("id").alias("start"))
     walk = starts.select("comp", F.lit(0).alias("pos"),
                          F.col("start").alias("node"))
     active = starts.select("comp", "start", F.lit(0).alias("pos"),
-                           F.col("start").alias("cur")).localCheckpoint(eager=True)
+                           F.col("start").alias("cur")).transform(truncate_mem)
     for _ in range(max_walk):
         if active.isEmpty():
             break
@@ -848,7 +849,7 @@ def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
         active = (step.filter(F.col("nxt") != F.col("start"))
                   .select("comp", "start", (F.col("pos") + 1).alias("pos"),
                           F.col("nxt").alias("cur"))
-                  .localCheckpoint(eager=True))
+                  .transform(truncate_mem))
     # a walker still active after max_walk hops never closed its cycle --
     # drop that component entirely rather than emitting a non-closed node
     # sequence with a partial cost (the single-cycle variant returns
@@ -856,7 +857,7 @@ def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
     if not active.isEmpty():
         unfinished = active.select("comp").distinct()
         walk = walk.join(unfinished, "comp", "left_anti")
-    walk = walk.localCheckpoint(eager=True)
+    walk = walk.transform(truncate_mem)
     if walk.isEmpty():
         return empty
     # per-hop costs: consecutive (node, next-node) pairs join the edge set
@@ -887,12 +888,12 @@ def delta_stepping(graph: SparkGraph, source: int, delta: float = 2.0,
     cfg = config or PathConfig()
     e = graph.aggregated_edges("MIN")
     light = prepare_edges(e.filter(F.col(W) <= delta), cfg.partitions)
-    heavy = e.filter(F.col(W) > delta).localCheckpoint(eager=True)
+    heavy = e.filter(F.col(W) > delta).transform(truncate_mem)
     state = graph.nodes.select(
         "id",
         F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
         (F.col("id") == source).alias("changed"),
-    ).localCheckpoint(eager=True)
+    ).transform(truncate_mem)
 
     def relax(st: DataFrame, edge_df: DataFrame, in_bucket,
               pending_only: bool = True) -> DataFrame:
@@ -924,7 +925,7 @@ def delta_stepping(graph: SparkGraph, source: int, delta: float = 2.0,
                     | (F.col("changed") & ~in_bucket)
                 ).alias("changed"),
             )
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
 
     for _ in range(cfg.max_iterations):
@@ -966,7 +967,7 @@ def dag_longest_path(graph: SparkGraph, weighted: bool = False,
     edges = prepare_edges(e, cfg.partitions)
     state = graph.nodes.select(
         "id", F.lit(0.0).alias("dist"), F.lit(True).alias("changed"))
-    state = state.localCheckpoint(eager=True)
+    state = state.transform(truncate_mem)
     for _ in range(cfg.max_iterations):
         frontier = state.filter(F.col("changed"))
         if frontier.isEmpty():
@@ -986,7 +987,7 @@ def dag_longest_path(graph: SparkGraph, weighted: bool = False,
                 (F.coalesce("cand", F.lit(float("-inf"))) > F.col("dist"))
                 .alias("changed"),
             )
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
     edges.unpersist()
     dist = state.select("id", "dist")
@@ -1003,9 +1004,9 @@ def dag_longest_path(graph: SparkGraph, weighted: bool = False,
     walk = (
         dist.select(F.col("id").alias("target"), F.col("dist").alias("total_cost"),
                     F.col("id").alias("_cur"), F.array("id").alias("node_ids"))
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     )
-    pmap = preds.select(F.col("id").alias("_cur"), "pred").localCheckpoint(eager=True)
+    pmap = preds.select(F.col("id").alias("_cur"), "pred").transform(truncate_mem)
     done = [walk.join(pmap, "_cur", "left_anti")
             .select("target", "total_cost", "node_ids")]
     for _ in range(cfg.max_iterations):
@@ -1015,7 +1016,7 @@ def dag_longest_path(graph: SparkGraph, weighted: bool = False,
         walk = walk.select(
             "target", "total_cost", F.col("pred").alias("_cur"),
             F.concat(F.array("pred"), "node_ids").alias("node_ids"),
-        ).localCheckpoint(eager=True)
+        ).transform(truncate_mem)
         done.append(walk.join(pmap, "_cur", "left_anti")
                     .select("target", "total_cost", "node_ids"))
         walk = walk.join(pmap.select("_cur"), "_cur", "left_semi")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph
+from ..plans.checkpoint import truncate_mem
 from ..plans.local_kernel import local_scc, should_run_local
 from ..plans.pregel import PregelConfig, prepare_edges, run_pregel
 
@@ -80,14 +81,14 @@ def _min_propagate(edges: DataFrame, nodes: DataFrame, reverse: bool,
 def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
     """Returns (id, component) with component = min member id (exact)."""
     cfg = config or SccConfig()
-    # localCheckpoint (not persist) everywhere: each round's plan references
-    # the previous round's DFs multiple times, so only true lineage
-    # truncation keeps Catalyst analysis O(1) per round.
-    all_edges = graph.edges.select(SRC, DST).distinct().localCheckpoint(eager=True)
+    # lineage cut (not persist) everywhere: each round's plan references
+    # the previous round's DFs multiple times, so only a true cut keeps
+    # Catalyst analysis O(1) per round.
+    all_edges = graph.edges.select(SRC, DST).distinct().transform(truncate_mem)
     n_edges = all_edges.count()
     if should_run_local(n_edges, cfg.small_graph_edges, None):
         return local_scc(all_edges, graph.nodes.select("id"))
-    remaining = graph.nodes.select("id").localCheckpoint(eager=True)
+    remaining = graph.nodes.select("id").transform(truncate_mem)
     assigned_parts: list[DataFrame] = []
 
     for _ in range(cfg.max_outer_rounds):
@@ -97,27 +98,27 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
             all_edges.join(remaining.withColumnRenamed("id", SRC), SRC, "left_semi")
             .join(remaining.withColumnRenamed("id", DST), DST, "left_semi")
             .filter(F.col(SRC) != F.col(DST))
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         # ---- TRIM: peel zero in/out degree vertices (singleton SCCs) ----
         while True:
             with_out = e.select(F.col(SRC).alias("id")).distinct()
             with_in = e.select(F.col(DST).alias("id")).distinct()
             on_cycle = with_out.join(with_in, "id", "inner") \
-                .localCheckpoint(eager=True)
+                .transform(truncate_mem)
             trimmed = remaining.join(on_cycle, "id", "left_anti") \
-                .localCheckpoint(eager=True)
+                .transform(truncate_mem)
             if trimmed.count() == 0:
                 break
             assigned_parts.append(
                 trimmed.select("id", F.col("id").alias("component"))
             )
             remaining = remaining.join(on_cycle, "id", "inner") \
-                .localCheckpoint(eager=True)
+                .transform(truncate_mem)
             e = (
                 e.join(remaining.withColumnRenamed("id", SRC), SRC, "left_semi")
                 .join(remaining.withColumnRenamed("id", DST), DST, "left_semi")
-                .localCheckpoint(eager=True)
+                .transform(truncate_mem)
             )
         if remaining.limit(1).count() == 0:
             break
@@ -130,10 +131,10 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
         )
         done = both.filter(F.col("f") == F.col("b")).select(
             "id", F.col("f").alias("component")
-        ).localCheckpoint(eager=True)
+        ).transform(truncate_mem)
         assigned_parts.append(done)
         remaining = remaining.join(done, "id", "left_anti") \
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         ep.unpersist()
 
     out = assigned_parts[0] if assigned_parts else graph.nodes.select(

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import DST, SRC, SparkGraph
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 
 
 @dataclass
@@ -49,15 +49,11 @@ def _mode_of_memory(mem_col):
 def sllpa(graph: SparkGraph, config: SllpaConfig | None = None) -> DataFrame:
     """(id, community_ids: array<long>) -- overlapping memberships."""
     cfg = config or SllpaConfig()
-    edges = truncate(
-        graph.oriented_edges("UNDIRECTED").select(SRC, DST).distinct(),
-        "sllpa_edges",
-    )
-    mem = truncate(
+    edges = truncate_mem(
+        graph.oriented_edges("UNDIRECTED").select(SRC, DST).distinct())
+    mem = truncate_mem(
         graph.nodes.select(
-            "id", F.create_map(F.col("id"), F.lit(1)).alias("mem")),
-        "sllpa_mem",
-    )
+            "id", F.create_map(F.col("id"), F.lit(1)).alias("mem")))
     for rnd in range(cfg.max_iterations):
         speaker = mem.select(F.col("id").alias(SRC),
                              _mode_of_memory(F.col("mem")).alias("_lbl"))
@@ -73,7 +69,7 @@ def sllpa(graph: SparkGraph, config: SllpaConfig | None = None) -> DataFrame:
             .filter(F.col("_rn") == 1)
             .select("id", "_lbl")
         )
-        mem = truncate(
+        mem = truncate_mem(
             mem.join(adopt, "id", "left").select(
                 "id",
                 F.when(F.col("_lbl").isNull(), F.col("mem"))
@@ -87,9 +83,7 @@ def sllpa(graph: SparkGraph, config: SllpaConfig | None = None) -> DataFrame:
                 .otherwise(F.map_concat(
                     F.col("mem"), F.create_map(F.col("_lbl"), F.lit(1))))
                 .alias("mem"),
-            ),
-            "sllpa_mem",
-        )
+            ))
     total = F.aggregate(F.map_values("mem"), F.lit(0), lambda a, x: a + x)
     comms = F.array_sort(F.filter(
         F.transform(

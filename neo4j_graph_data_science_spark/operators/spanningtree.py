@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, W, SparkGraph
-from ..plans.checkpoint import truncate
+from ..plans.checkpoint import truncate_mem
 from .wcc import WccConfig, wcc
 
 
@@ -42,16 +42,12 @@ def spanning_tree(graph: SparkGraph, start_node: int | None = None,
         .filter(F.col(SRC) != F.col(DST))
     )
     # canonical undirected edge once, keyed for the deterministic total order
-    edges = truncate(
+    edges = truncate_mem(
         und.select(
             F.least(SRC, DST).alias(SRC), F.greatest(SRC, DST).alias(DST), W)
-        .groupBy(SRC, DST).agg((F.min(W) if sign > 0 else F.max(W)).alias(W)),
-        "mst_edges",
-    )
-    comp = truncate(graph.nodes.select("id", F.col("id").alias("comp")), "mst_comp")
-    # running tree union, re-snapshotted under its own tag every round: a
-    # per-round list of `mst_pick` snapshots would outlive the tag's keep=2
-    # window (>=3 Boruvka rounds -> FileNotFound on the union)
+        .groupBy(SRC, DST).agg((F.min(W) if sign > 0 else F.max(W)).alias(W)))
+    comp = truncate_mem(graph.nodes.select("id", F.col("id").alias("comp")))
+    # running tree union, cut every round so its plan stays one union deep
     tree: DataFrame | None = None
 
     for _ in range(cfg.max_rounds):
@@ -74,9 +70,9 @@ def spanning_tree(graph: SparkGraph, start_node: int | None = None,
                     (F.col("_k.w") * sign).alias(W))
             .distinct()
         )
-        pick = truncate(pick, "mst_pick")
-        tree = pick if tree is None else truncate(
-            tree.unionByName(pick).distinct(), "mst_tree")
+        pick = truncate_mem(pick)
+        tree = pick if tree is None else truncate_mem(
+            tree.unionByName(pick).distinct())
         # merge components connected by picked edges: WCC on the comp graph
         cg_edges = (
             pick.join(comp.select(F.col("id").alias(SRC),
@@ -89,12 +85,10 @@ def spanning_tree(graph: SparkGraph, start_node: int | None = None,
         cg_nodes = comp.select(F.col("comp").alias("id")).distinct()
         merged = wcc(SparkGraph(nodes=cg_nodes, edges=cg_edges),
                      WccConfig()).state
-        comp = truncate(
+        comp = truncate_mem(
             comp.join(merged.select(F.col("id").alias("comp"),
                                     F.col("component").alias("_new")), "comp")
-            .select("id", F.col("_new").alias("comp")),
-            "mst_comp",
-        )
+            .select("id", F.col("_new").alias("comp")))
 
     if tree is None:
         return graph.nodes.sparkSession.createDataFrame(
@@ -170,12 +164,10 @@ def prize_steiner_tree(graph: SparkGraph, prizes: DataFrame,
     cfg = config or PrizeSteinerConfig()
     ROOT = F.lit(-1).cast("long")
     pz = prizes.select("id", F.col("prize").cast("double"))
-    state = truncate(
+    state = truncate_mem(
         graph.nodes.select("id").join(pz, "id", "left")
-        .select("id", F.coalesce("prize", F.lit(0.0)).alias("dp")),
-        "pcst_state",
-    )
-    edges = truncate(spanning_tree(graph), "pcst_edges") \
+        .select("id", F.coalesce("prize", F.lit(0.0)).alias("dp")))
+    edges = truncate_mem(spanning_tree(graph)) \
         .select(SRC, DST, W)
     peeled: DataFrame | None = None
     spark = graph.nodes.sparkSession
@@ -215,28 +207,24 @@ def prize_steiner_tree(graph: SparkGraph, prizes: DataFrame,
             .alias("cost"),
             "dp",
         ).unionByName(iso)
-        rows = truncate(rows, "pcst_rows")
-        peeled = rows if peeled is None else truncate(
-            peeled.unionByName(rows), "pcst_peeled")
+        rows = truncate_mem(rows)
+        peeled = rows if peeled is None else truncate_mem(
+            peeled.unionByName(rows))
         gains = rows.filter(F.col("parent") >= 0) \
             .groupBy(F.col("parent").alias("id")) \
             .agg(F.sum(F.col("dp") - F.col("cost")).alias("_gain"))
-        state = truncate(
+        state = truncate_mem(
             state.join(rows.select("id"), "id", "left_anti")
             .join(gains, "id", "left")
             .select("id", (F.col("dp") + F.coalesce("_gain", F.lit(0.0)))
-                    .alias("dp")),
-            "pcst_state",
-        )
-        edges = truncate(
+                    .alias("dp")))
+        edges = truncate_mem(
             edges.join(rows.select(F.col("id").alias(SRC)), SRC, "left_anti")
-            .join(rows.select(F.col("id").alias(DST)), DST, "left_anti"),
-            "pcst_edges",
-        )
+            .join(rows.select(F.col("id").alias(DST)), DST, "left_anti"))
 
     if peeled is None:
         return spark.createDataFrame([], "id long, parent long, cost double")
-    peeled = truncate(peeled, "pcst_final")
+    peeled = truncate_mem(peeled)
     # best subtree = argmax dp at peel time (tie: min id, deterministic)
     best = peeled.orderBy(F.desc("dp"), F.asc("id")).limit(1) \
         .select(F.col("id").alias("_root")).collect()
@@ -246,12 +234,10 @@ def prize_steiner_tree(graph: SparkGraph, prizes: DataFrame,
     links = peeled.filter(F.col("parent") >= 0).select("id", "parent", "cost")
     kept = spark.createDataFrame([(int(root_id),)], "id long")
     for _ in range(cfg.max_rounds):
-        grown = truncate(
+        grown = truncate_mem(
             kept.unionByName(
                 links.join(kept.withColumnRenamed("id", "parent"), "parent")
-                .select("id")).distinct(),
-            "pcst_kept",
-        )
+                .select("id")).distinct())
         if grown.count() == kept.count():
             kept = grown
             break
@@ -285,16 +271,14 @@ def steiner_tree(graph: SparkGraph, source: int, targets: list[int],
     O(V) predecessor map."""
     from .paths import PathConfig, _deterministic_predecessors, shortest_paths
 
-    e = truncate(graph.aggregated_edges("MIN"), "steiner_edges")
+    e = truncate_mem(graph.aggregated_edges("MIN"))
     spark = graph.nodes.sparkSession
-    tree_nodes = truncate(
-        spark.createDataFrame([(int(source),)], "id long"), "steiner_nodes")
-    rem = truncate(
+    tree_nodes = truncate_mem(
+        spark.createDataFrame([(int(source),)], "id long"))
+    rem = truncate_mem(
         spark.createDataFrame(
             [(int(t),) for t in dict.fromkeys(targets) if int(t) != int(source)],
-            "id long"),
-        "steiner_rem",
-    )
+            "id long"))
     tree_edges: DataFrame | None = None
     while not rem.isEmpty():
         dist = shortest_paths(graph, tree_nodes, PathConfig())
@@ -306,9 +290,9 @@ def steiner_tree(graph: SparkGraph, source: int, targets: list[int],
         nxt = int(pick[0]["id"])
         preds = _deterministic_predecessors(e, dist)
         pmap = preds.select(F.col("id").alias("_cur"), "pred") \
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         at_tree = dist.filter(F.col("dist") <= 0.0) \
-            .select(F.col("id").alias("pred")).localCheckpoint(eager=True)
+            .select(F.col("id").alias("pred")).transform(truncate_mem)
         # single-row pred-chain walk: frontier is 1 row, pmap join broadcasts
         # the frontier side; stops when pred lands on a dist-0 (tree) node
         walk = spark.createDataFrame([(nxt,)], "_cur long")
@@ -316,7 +300,7 @@ def steiner_tree(graph: SparkGraph, source: int, targets: list[int],
         for _ in range(max_path_len):
             step = walk.join(pmap, "_cur").select(
                 F.col("pred").alias(SRC), F.col("_cur").alias(DST)
-            ).localCheckpoint(eager=True)
+            ).transform(truncate_mem)
             if step.isEmpty():
                 break
             path_edges = step if path_edges is None else \
@@ -326,17 +310,15 @@ def steiner_tree(graph: SparkGraph, source: int, targets: list[int],
                 break
             walk = step.select(F.col(SRC).alias("_cur"))
         if path_edges is not None:
-            path_edges = truncate(path_edges, "steiner_path")
-            tree_edges = path_edges if tree_edges is None else truncate(
-                tree_edges.unionByName(path_edges).distinct(), "steiner_tree")
-            tree_nodes = truncate(
+            path_edges = truncate_mem(path_edges)
+            tree_edges = path_edges if tree_edges is None else truncate_mem(
+                tree_edges.unionByName(path_edges).distinct())
+            tree_nodes = truncate_mem(
                 tree_nodes.unionByName(
                     path_edges.select(F.col(SRC).alias("id")))
                 .unionByName(path_edges.select(F.col(DST).alias("id")))
-                .distinct(),
-                "steiner_nodes",
-            )
-        rem = truncate(rem.filter(F.col("id") != nxt), "steiner_rem")
+                .distinct())
+        rem = truncate_mem(rem.filter(F.col("id") != nxt))
     if tree_edges is None:
         return spark.createDataFrame([], f"{SRC} long, {DST} long, {W} double")
     te = tree_edges.distinct()

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
+from ..plans.checkpoint import truncate_mem
 from ..plans.local_kernel import local_wcc, should_run_local
 from ..plans.pregel import (
     PregelConfig, PregelResult, auto_partitions, prepare_edges, run_pregel,
@@ -95,9 +96,13 @@ def wcc(graph: SparkGraph, config: WccConfig | None = None) -> PregelResult:
         ccol = ("component" if "component" in prev.columns
                 else prev.columns[1])
         # dedup per id (min matches the fixpoint semantics) so duplicate
-        # ids can't duplicate state rows
+        # ids can't duplicate state rows; a label that is no live node id
+        # (a removed member, a foreign id space) is stale and would win
+        # every min, so those nodes cold-start at their own id instead
         init = (prev.select(F.col(prev.columns[0]).alias("id"),
                             F.col(ccol).cast("long").alias("_c0"))
+                .join(graph.nodes.select(F.col("id").alias("_c0")), "_c0",
+                      "left_semi")
                 .groupBy("id").agg(F.min("_c0").alias("_c0")))
         state0 = (state0.join(init, "id", "left")
                   .select("id", F.coalesce("_c0", F.col("comp"))
@@ -202,7 +207,7 @@ def wcc_two_phase(graph: SparkGraph, config: WccConfig | None = None,
         e.select(F.least(SRC, DST).alias("a"), F.greatest(SRC, DST).alias("b"))
         .filter(F.col("a") != F.col("b")).distinct()
         .select(F.col("b").alias("child"), F.col("a").alias("parent"))
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     )
     rounds = 0
     prev_n = pairs.count()
@@ -220,7 +225,7 @@ def wcc_two_phase(graph: SparkGraph, config: WccConfig | None = None,
             .join(mins, "u")
             .select(F.col("parent").alias("child"), F.col("m").alias("parent"))
             .filter(F.col("child") != F.col("parent")).distinct()
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         # ---- small-star ----
         # every node's ≤-neighbors (its parents) re-attach to the min parent
@@ -238,7 +243,7 @@ def wcc_two_phase(graph: SparkGraph, config: WccConfig | None = None,
                 .select(F.col("parent").alias("child"),
                         F.col("m").alias("parent")))
             .filter(F.col("child") != F.col("parent")).distinct()
-            .localCheckpoint(eager=True)
+            .transform(truncate_mem)
         )
         n = pairs.count()
         # fixpoint: star graphs only — every child's parent is a root

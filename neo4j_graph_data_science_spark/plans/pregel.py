@@ -15,8 +15,7 @@ Reference semantics (pregel/src/main/java/org/neo4j/gds/beta/pregel/):
 
 What GDS does NOT have and this kernel adds (north rule):
   * per-superstep checkpoint of vertex state + lineage/metrics, resumable
-    mid-iteration (plans/checkpoint.py). The snapshots double as Spark
-    lineage truncation -- the classic iterative-DataFrame plan-blowup fix.
+    mid-iteration (plans/checkpoint.py).
 
 Scale notes (10^12 turns / 10^9+ edges):
   * Edges are hash-partitioned by src once and persisted; each superstep
@@ -24,8 +23,10 @@ Scale notes (10^12 turns / 10^9+ edges):
     combined messages by dst -- both O(V) after map-side combine, never O(E).
   * Hot destination vertices (hubs) are handled by the map-side combiner
     (messages to one dst collapse per input partition) plus AQE skew split.
-  * Lineage is cut every TRUNCATE_EVERY supersteps; in between we rotate
-    persisted state (persist new -> materialize -> unpersist old).
+  * Lineage is cut (plans/checkpoint.truncate_mem, the package's one cut)
+    at every batched boundary and every TRUNCATE_EVERY supersteps; in
+    between we rotate persisted state (persist new -> materialize ->
+    unpersist old).
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, W, register_cache
-from .checkpoint import CheckpointManager, truncate_mem, unpersist_truncated
+from .checkpoint import CheckpointManager, truncate_mem
 
 Reducers: dict[str, Callable[[Column], Column]] = {
     # Reducer.java:34-86 -- Sum (identity 0), Min, Max, Count
@@ -67,11 +68,10 @@ class PregelConfig:
     # stats action) dominates wall time, and batching divides it by k.
     # Convergence detection is delayed by at most k-1 supersteps
     # (results are the same or MORE converged); fixed-iteration runs are
-    # bit-identical. Boundaries materialize via the stats-safe IN-MEMORY
-    # plan cut (plans/checkpoint.truncate_mem: persist + LogicalRDD rewrap
-    # with default stats), because a k-deep chain whose supersteps
-    # reference the state twice compounds localCheckpoint's estimated
-    # sizeInBytes 2^k-fold per boundary. Keep k SMALL: the
+    # bit-identical. Every boundary is a lineage cut
+    # (plans/checkpoint.truncate_mem), whose size-estimate clamp is what
+    # keeps a k-deep chain that references the state twice per superstep
+    # from compounding the estimate 2^k-fold per boundary. Keep k SMALL: the
     # unresolved plan itself also grows 2^k-fold (state is referenced twice
     # per superstep), so Catalyst analysis eats the win back. Measured on
     # the 192k-edge event graph, 55 supersteps, local[32]: k=1 70-120 s,
@@ -99,10 +99,10 @@ class PregelResult:
 # graphs keep one wave and huge graphs don't drown the scheduler.
 EDGE_ROWS_PER_PARTITION = 400_000
 
-# Truncate Spark lineage every 2nd superstep (eager localCheckpoint) when
-# supersteps are not batched -- without it, iterative plans grow (and
-# superstep plans that reference the state twice, e.g. WCC pointer
-# jumping, grow 2^k-fold) and Catalyst analysis time blows up.
+# Cut Spark lineage (truncate_mem) every 2nd superstep when supersteps are
+# not batched -- without it, iterative plans grow (and superstep plans that
+# reference the state twice, e.g. WCC pointer jumping, grow 2^k-fold) and
+# Catalyst analysis time blows up.
 TRUNCATE_EVERY = 2
 
 # AQE is off inside the superstep loop. AQE re-plans EVERY shuffle stage of
@@ -286,17 +286,11 @@ def _pregel_loop(state, superstep, config, ckpt, it, stats, converged_stats):
         new_state = state
         for b in range(batch):
             new_state = superstep(new_state, it + b)
-        if batch > 1:
-            # stats-safe boundary: the k-deep chain runs as one job, then
-            # the plan is cut IN MEMORY (truncate_mem: persist + JVM
-            # LogicalRDD rewrap with default stats). Round 2 used a parquet
-            # round-trip here; the write+read of the full vertex state every
-            # k supersteps is a per-boundary fixed cost that does not shrink
-            # with parallelism and capped measured scaling (round-3 finding)
+        if batch > 1 or (it + 1) % TRUNCATE_EVERY == 0:
+            # a k-deep chain runs as one job; the cut materializes it in
+            # memory (a parquet round-trip here was a per-boundary fixed
+            # cost that capped measured scaling, round-3 finding)
             new_state = truncate_mem(new_state)
-        elif (it + 1) % TRUNCATE_EVERY == 0:
-            # eager localCheckpoint: materializes AND cuts the logical plan
-            new_state = new_state.localCheckpoint(eager=True)
         else:
             new_state = new_state.persist()
         row = new_state.agg(F.count(F.lit(1)), *stats).collect()[0]
@@ -310,10 +304,10 @@ def _pregel_loop(state, superstep, config, ckpt, it, stats, converged_stats):
             )
         if ckpt:
             saved = ckpt.save(new_state, it, metrics[-1] if metrics else {})
-            unpersist_truncated(new_state)
+            new_state.unpersist()
             new_state = saved.persist()
             new_state.count()
-        unpersist_truncated(state)
+        state.unpersist()
         state = new_state
         if done:
             did_converge = True

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import DST, REL, SRC, W, SparkGraph
+from ..plans.checkpoint import truncate_mem
 
 
 @dataclass
@@ -181,11 +182,11 @@ def rwr_sample(graph: SparkGraph, config: RwrSampleConfig | None = None) -> Spar
     cfg = config or RwrSampleConfig()
     n_total = graph.nodes.count()
     target = max(int(n_total * cfg.sampling_ratio), len(cfg.start_nodes))
-    edges = graph.edges.select(SRC, DST).distinct().localCheckpoint(eager=True)
+    edges = graph.edges.select(SRC, DST).distinct().transform(truncate_mem)
 
     visited = graph.nodes.filter(
         F.col("id").isin([int(s) for s in cfg.start_nodes])
-    ).select("id").localCheckpoint(eager=True)
+    ).select("id").transform(truncate_mem)
     frontier = visited
     for _ in range(cfg.max_rounds):
         if visited.count() >= target or frontier.count() == 0:
@@ -203,8 +204,8 @@ def rwr_sample(graph: SparkGraph, config: RwrSampleConfig | None = None) -> Spar
             .select(F.col(DST).alias("id"))
             .distinct()
         )
-        frontier = kept.join(visited, "id", "left_anti").localCheckpoint(eager=True)
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
+        frontier = kept.join(visited, "id", "left_anti").transform(truncate_mem)
+        visited = visited.unionByName(frontier).transform(truncate_mem)
 
     sub_nodes = visited
     sub_edges = (
@@ -252,7 +253,7 @@ def cnarw_sample(graph: SparkGraph, config: CnarwSampleConfig | None = None) -> 
     )
     both = und.select(F.col("a").alias(SRC), F.col("b").alias(DST)) \
         .unionByName(und.select(F.col("b").alias(SRC), F.col("a").alias(DST))) \
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
     deg = both.groupBy(F.col(SRC).alias("id")).agg(F.count(F.lit(1)).alias("d"))
     # common neighbors per undirected edge: wedges (a-w-b) with a<b edge
     wa = both.select(F.col(DST).alias("w"), F.col(SRC).alias("a"))
@@ -272,11 +273,11 @@ def cnarw_sample(graph: SparkGraph, config: CnarwSampleConfig | None = None) -> 
     edges_w = weighted.select(F.col("a").alias(SRC), F.col("b").alias(DST), "_w") \
         .unionByName(weighted.select(F.col("b").alias(SRC),
                                      F.col("a").alias(DST), "_w")) \
-        .localCheckpoint(eager=True)
+        .transform(truncate_mem)
 
     visited = graph.nodes.filter(
         F.col("id").isin([int(s) for s in cfg.start_nodes])
-    ).select("id").localCheckpoint(eager=True)
+    ).select("id").transform(truncate_mem)
     frontier = visited
     from pyspark.sql.window import Window
 
@@ -311,8 +312,8 @@ def cnarw_sample(graph: SparkGraph, config: CnarwSampleConfig | None = None) -> 
             .select(F.col(DST).alias("id"))
             .distinct()
         )
-        frontier = kept.join(visited, "id", "left_anti").localCheckpoint(eager=True)
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
+        frontier = kept.join(visited, "id", "left_anti").transform(truncate_mem)
+        visited = visited.unionByName(frontier).transform(truncate_mem)
 
     sub_nodes = visited
     sub_edges = (

@@ -1,13 +1,17 @@
 """Checkpoint/resume: a run killed after superstep k resumes and produces
-identical output (north-rule resumability requirement; BASELINE.md)."""
+identical output (north-rule resumability requirement; BASELINE.md). Also
+pins the lineage cut (truncate_mem) every iterative loop goes through."""
 
 from __future__ import annotations
 
 import math
 
+from pyspark.sql import functions as F
+
 from neo4j_graph_data_science_spark import from_edge_list
 from neo4j_graph_data_science_spark.operators.pagerank import PageRankConfig, page_rank
-from neo4j_graph_data_science_spark.plans.checkpoint import CheckpointManager
+from neo4j_graph_data_science_spark.plans.checkpoint import CheckpointManager, truncate_mem
+from neo4j_graph_data_science_spark.plans.pregel import LOOP_CONFS, pinned_confs
 
 EDGES = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (5, 2), (1, 5)]
 
@@ -60,3 +64,38 @@ def test_checkpoint_metrics_lineage(spark, tmp_path):
         assert sum(lin["partition_rows"].values()) == 6
         assert lin["partitions"] == len(lin["partition_rows"])
     assert all(m["partitions"] >= 1 for m in ms)
+
+
+def test_truncate_mem_keeps_partitioning_and_ordering(spark):
+    """The cut keeps the executed plan's hash partitioning (and sort order),
+    so the next superstep's join on the same key plans no Exchange. Pinned
+    under the loop confs (AQE off), as in run_pregel."""
+    df = spark.range(100).select("id", (F.col("id") % 7).alias("v"))
+    with pinned_confs(spark, LOOP_CONFS):
+        cut = truncate_mem(df.repartition(8, "id").sortWithinPartitions("id"))
+        plan = cut._jdf.queryExecution().executedPlan()
+        assert plan.outputPartitioning().toString().startswith(
+            "hashpartitioning(id")
+        assert plan.outputPartitioning().numPartitions() == 8
+        assert plan.outputOrdering().size() == 1
+        assert sorted(cut.collect()) == sorted(df.collect())
+
+
+def test_truncate_mem_clamps_compounding_size_estimate(spark):
+    """A state joined three times per round multiplies its carried
+    sizeInBytes estimate every round; through the cut it stays at most
+    Long.MaxValue and the rows equal the uncut computation."""
+    n, rounds = 50, 12
+    state = spark.range(n).select("id", (F.col("id") % 5).alias("v"))
+    want = {i: i % 5 for i in range(n)}
+    for _ in range(rounds):
+        a, b, c = state.alias("a"), state.alias("b"), state.alias("c")
+        state = truncate_mem(
+            a.join(b, "id").join(c, "id").select(
+                "id", ((F.col("a.v") + 2 * F.col("b.v") + 3 * F.col("c.v")
+                        + F.col("id")) % 11).alias("v")))
+        size = state._jdf.logicalPlan().stats().sizeInBytes()
+        assert size <= 2 ** 63 - 1
+        want = {i: (6 * v + i) % 11 for i, v in want.items()}
+    assert size == 2 ** 63 - 1  # the clamp engaged
+    assert {r.id: r.v for r in state.collect()} == want

@@ -179,6 +179,22 @@ def test_wcc_warm_start_same_result_fewer_supersteps(spark):
         wcc(g2, WccConfig(initial_components=prev.select("id")))
 
 
+@pytest.mark.parametrize("small_graph_edges", [None, 0])
+def test_wcc_warm_start_drops_stale_labels(spark, small_graph_edges):
+    """A warm-start label that is no live node id (-7 here) must not win
+    the min: those nodes cold-start, so both engines give the cold answer.
+    A live label from the same component (4 -> 3) is still accepted."""
+    g = from_edge_list(spark, [(1, 2), (3, 4)], node_ids=[0, 1, 2, 3, 4])
+    warm_frame = spark.createDataFrame([(2, -7), (4, 3)],
+                                       "id long, component long")
+    cold = wcc(g, WccConfig(small_graph_edges=small_graph_edges))
+    warm = wcc(g, WccConfig(small_graph_edges=small_graph_edges,
+                            initial_components=warm_frame))
+    want = {0: 0, 1: 1, 2: 1, 3: 3, 4: 3}
+    assert {r.id: r.component for r in cold.state.collect()} == want
+    assert {r.id: r.component for r in warm.state.collect()} == want
+
+
 def test_lpa_warm_start_stable_labels_reconverge_immediately(spark):
     """A converged LPA labeling re-fed as initial_labels on the unchanged
     graph is already stable: one superstep confirms convergence and the

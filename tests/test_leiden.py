@@ -85,8 +85,8 @@ def test_leiden_md5_parity_mode_same_structure(spark):
     cfg = LeidenConfig(max_levels=2, max_local_moves=8,
                        max_refine_moves=8, min_gain=-1.0)
     labels, _, _ = leiden(g, cfg, parity_mode="md5")
-    # collect BEFORE the second run: truncate() re-snapshots per tag and
-    # garbage-collects the first run's files
+    # collect BEFORE the second run, so the comparison is over plain rows
+    # rather than the first run's in-memory lineage cuts
     first = sorted(tuple(r) for r in labels.collect())
     got = {i: c for i, c in first}
     assert got[0] == got[1] == got[2]

@@ -52,8 +52,8 @@ def test_louvain_md5_parity_mode_same_structure_and_deterministic(spark):
     g = from_edge_list(spark, tri1 + tri2 + [(2, 3)], n_nodes=6)
     labels, _, _ = louvain(g, LouvainConfig(max_levels=2, min_gain=-1.0),
                            parity_mode="md5")
-    # collect BEFORE the second run: truncate() re-snapshots per tag and
-    # garbage-collects the first run's files
+    # collect BEFORE the second run, so the comparison is over plain rows
+    # rather than the first run's in-memory lineage cuts
     first = sorted(tuple(r) for r in labels.collect())
     got = {i: c for i, c in first}
     assert got[0] == got[1] == got[2]
