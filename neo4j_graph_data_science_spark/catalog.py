@@ -180,8 +180,8 @@ class SparkGraph:
         aggregation=X)`` already holds the collapsed (src, dst, weight)
         rows bucketed+sorted by src, so a matching request under NATURAL
         orientation returns the column-pruned scan directly -- no groupBy,
-        and the scan's hash layout and sort order flow through to the
-        Pregel projection (prepare_edges pre_partitioned path)."""
+        and the scan's plan reports the hash layout and sort order that
+        plans/pregel.prepare_edges reads to skip its repartition+sort."""
         a = Aggregation(aggregation)
         o = Orientation(orientation or self.orientation)
         if (a != Aggregation.NONE and o == Orientation.NATURAL
@@ -353,10 +353,11 @@ class GraphCatalog:
         once (RelationshipProjection.aggregation,
         ScanningRelationshipsImporter.java). A matching later
         ``aggregated_edges()`` call then returns the bucketed scan
-        directly (no groupBy), and the Pregel-family operators detect the
-        layout and skip prepare_edges' repartition+sort entirely: the
-        whole projection phase of an iterative run over a bucketed graph
-        is a column-pruned sorted scan, zero Exchange, zero Sort.
+        directly (no groupBy), and prepare_edges reads the layout from the
+        scan's plan and skips its repartition+sort: the projection phase
+        of every loop over those edges (PageRank, ArticleRank,
+        Eigenvector) is a column-pruned sorted scan, zero Exchange, zero
+        Sort, and the loop runs at the bucket width.
 
         At 100 TB size ``buckets`` so one bucket is one task's worth of
         edges (~10^4 buckets for 10^12 edges)."""

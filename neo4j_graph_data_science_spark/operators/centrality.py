@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
 from ..plans.checkpoint import truncate_mem
 from ..plans.local_kernel import local_hits, should_run_local
-from ..plans.pregel import auto_partitions, prepare_edges
+from ..plans.pregel import prepare_edges
 
 
 @dataclass
@@ -54,8 +54,7 @@ def hits(graph: SparkGraph, config: HitsConfig | None = None) -> DataFrame:
                          cfg.hits_iterations)
         eset.unpersist()
         return out
-    edges = prepare_edges(
-        eset, cfg.partitions or auto_partitions(n_edges, eset.sparkSession))
+    edges = prepare_edges(eset, cfg.partitions)
     nodes = graph.nodes.select("id")
 
     def _l2_normalized(df: DataFrame, col: str) -> DataFrame:

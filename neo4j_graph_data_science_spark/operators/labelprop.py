@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
 from ..plans.local_kernel import local_label_propagation, should_run_local
 from ..plans.pregel import (
-    PregelConfig, PregelResult, auto_partitions, prepare_edges, run_pregel,
+    PregelConfig, PregelResult, prepare_edges, run_pregel,
 )
 
 
@@ -127,9 +127,7 @@ def label_propagation(
                       "wall_s": round(wall, 4)}],
         )
 
-    edges = prepare_edges(
-        eset, cfg.partitions or auto_partitions(n_edges, eset.sparkSession))
-    loop_parts = cfg.partitions or edges.rdd.getNumPartitions()
+    edges = prepare_edges(eset, cfg.partitions)
     state0 = state0.withColumn("changed", F.lit(True))
 
     def superstep(state: DataFrame, it: int) -> DataFrame:
@@ -155,8 +153,8 @@ def label_propagation(
         )
 
     res = run_pregel(
-        state0, superstep,
-        PregelConfig(max_iterations=cfg.max_iterations, partitions=loop_parts,
+        edges, state0, superstep,
+        PregelConfig(max_iterations=cfg.max_iterations,
                      checkpoint_dir=cfg.checkpoint_dir, run_id=cfg.run_id,
                      check_every=cfg.check_every),
         stats=[F.max(F.col("changed").cast("int"))],

@@ -45,8 +45,7 @@ from pyspark.sql import functions as F
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
 from ..plans.local_kernel import local_page_rank, should_run_local
 from ..plans.pregel import (
-    PregelConfig, PregelResult, auto_partitions, bucketed_layout,
-    prepare_edges, run_pregel,
+    PregelConfig, PregelResult, prepare_edges, run_pregel,
 )
 
 
@@ -116,28 +115,8 @@ def page_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> Pregel
     cfg = config or PageRankConfig()
     d = cfg.damping_factor
     agg_mode = "SUM" if cfg.weighted else "COUNT"
-    # durable bucketed projection (project_bucketed(aggregation=...)):
-    # edges already collapsed + hash-by-src + sorted on disk, so the whole
-    # in-memory projection degrades to a column-pruned persist -- no
-    # re-repartition, no re-sort (round-4 verdict #4), and the loop runs
-    # at the bucket width so the state exchange co-locates.
-    bucket_width = bucketed_layout(graph, agg_mode)
-    if bucket_width is not None and cfg.partitions in (None, bucket_width):
-        # the persist MUST happen inside prepare_edges (pre_partitioned
-        # pins autoBucketedScan off + the legacy sort-order conf on at
-        # cache-compile time); persisting the raw scan here first would
-        # freeze a cache compiled under default confs, without the hash
-        # layout -- silently re-introducing the per-superstep Exchange.
-        # The returned cached frame then serves degrees/base too.
-        agg = prepare_edges(graph.aggregated_edges(agg_mode), bucket_width,
-                            pre_partitioned=True)
-        n_edges = agg.count()   # cached; one cheap job
-        parts = bucket_width
-    else:
-        bucket_width = None
-        agg = register_cache(graph.aggregated_edges(agg_mode).persist())
-        n_edges = agg.count()
-        parts = None
+    agg = register_cache(graph.aggregated_edges(agg_mode).persist())
+    n_edges = agg.count()
     deg = _out_degrees(agg)
     nodes = graph.nodes.select("id")
 
@@ -186,14 +165,10 @@ def page_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> Pregel
                       "wall_s": round(wall, 4)}],
         )
 
-    if bucket_width is not None:
-        edges = agg   # already the prepared (pruned, persisted) frame
-    else:
-        parts = cfg.partitions or auto_partitions(n_edges, agg.sparkSession)
-        edges = prepare_edges(agg, parts)
-    # loop shuffles run at the resolved edge width (auto-sized when None)
-    # so the reduce granularity matches the persisted edge blocks
-    loop_parts = parts
+    # a durable bucketed projection (project_bucketed(aggregation=...))
+    # comes back as ``agg`` itself: already collapsed, hash-by-src and
+    # sorted, so no re-repartition and no re-sort
+    edges = prepare_edges(agg, cfg.partitions)
 
     # state: (id, rank, alpha, out_deg, contrib = rank/out_deg)
     state0 = (
@@ -230,13 +205,13 @@ def page_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> Pregel
         )
 
     res = run_pregel(
+        edges,
         state0,
         superstep,
         PregelConfig(
             max_iterations=max(cfg.max_iterations - 1, 0),  # GDS superstep 0 is send-only
             checkpoint_dir=cfg.checkpoint_dir,
             run_id=cfg.run_id,
-            partitions=loop_parts,
             check_every=cfg.check_every,
         ),
         stats=[F.max("delta")],
@@ -289,9 +264,8 @@ def article_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> Pre
             (F.col("_new") / (F.col("out_deg") + F.lit(avg_deg))).alias("contrib"),
         )
 
-    res = run_pregel(state0, superstep,
+    res = run_pregel(edges, state0, superstep,
                      PregelConfig(max_iterations=cfg.max_iterations,
-                                  partitions=cfg.partitions,
                                   checkpoint_dir=cfg.checkpoint_dir,
                                   run_id=cfg.run_id),
                      stats=[F.max("delta")],
@@ -368,9 +342,8 @@ def eigenvector(graph: SparkGraph, config: PageRankConfig | None = None) -> Preg
             )
         )
 
-    res = run_pregel(state0, superstep,
+    res = run_pregel(edges, state0, superstep,
                      PregelConfig(max_iterations=max(cfg.max_iterations - 1, 0),
-                                  partitions=cfg.partitions,
                                   checkpoint_dir=cfg.checkpoint_dir,
                                   run_id=cfg.run_id),
                      stats=[F.max("delta")],

@@ -72,8 +72,8 @@ def _relax_loop(edges: DataFrame, state0: DataFrame, cost, max_iters: int) -> Da
             )
         )
 
-    res = run_pregel(state0, superstep,
-                     PregelConfig(max_iterations=max_iters, track_metrics=False),
+    res = run_pregel(edges, state0, superstep,
+                     PregelConfig(max_iterations=max_iters),
                      stats=[F.max(F.col("changed").cast("int"))],
                      converged_stats=lambda row, it: not row[1])
     return res.state.select("id", "dist")

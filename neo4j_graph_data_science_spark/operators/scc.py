@@ -71,8 +71,8 @@ def _min_propagate(edges: DataFrame, nodes: DataFrame, reverse: bool,
             (F.coalesce("msg", F.col("comp")) < F.col("comp")).alias("changed"),
         )
 
-    res = run_pregel(state0, superstep,
-                     PregelConfig(max_iterations=max_iters, track_metrics=False),
+    res = run_pregel(edges, state0, superstep,
+                     PregelConfig(max_iterations=max_iters),
                      stats=[F.max(F.col("changed").cast("int"))],
                      converged_stats=lambda row, it: not row[1])
     return res.state.select("id", "comp")

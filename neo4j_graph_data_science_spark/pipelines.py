@@ -233,12 +233,23 @@ def _forest_kwargs(p: dict) -> dict:
     return kw
 
 
+def _class_count(data: DataFrame) -> int:
+    """Label count of a classification frame (labels must be 0..k-1)."""
+    return int(data.agg(F.max("label")).collect()[0][0]) + 1
+
+
 def _make_classifier(method: str, seed: int, data: DataFrame,
+                     n_classes: int | None,
                      mlp_hidden_layers: tuple[int, ...] = (16,),
                      params: dict | None = None):
     """The ClassifierTrainerFactory dispatch (ml/ml-algo/.../models/
     ClassifierTrainerFactory.java:79): LogisticRegression / RandomForest /
     MLPClassifier, mapped onto the distributed spark.ml estimators.
+
+    ``n_classes`` sizes the MLP output layer (unused by the others).
+    Callers probe it once from the full labelled frame (_class_count): a
+    CV training fold can miss the top class, and probing the fold would
+    then build an output layer too narrow for the labels it is scored on.
 
     ``params`` carries candidate hyperparameters under the reference's
     names: penalty (-> regParam), max_epochs (-> maxIter), max_depth,
@@ -259,13 +270,10 @@ def _make_classifier(method: str, seed: int, data: DataFrame,
         return RandomForestClassifier(featuresCol=_FEAT, labelCol="label",
                                       seed=seed, **_forest_kwargs(p))
     if method == "mlp":
-        # spark.ml's MLP wants the full layer spec: probe input width from
-        # one row, class count from the labels (0..k-1 contiguous required)
+        # spark.ml's MLP wants the full layer spec: input width from one row
         hidden = tuple(int(h) for h in p.get("hidden_layer_sizes",
                                              mlp_hidden_layers))
-        first = data.select(_FEAT, "label").first()
-        n_features = len(first[_FEAT])
-        n_classes = int(data.agg(F.max("label")).collect()[0][0]) + 1
+        n_features = len(data.select(_FEAT).first()[_FEAT])
         return MultilayerPerceptronClassifier(
             featuresCol=_FEAT, labelCol="label", seed=seed,
             layers=[n_features, *hidden, max(n_classes, 2)],
@@ -317,6 +325,8 @@ class NodeClassificationPipeline(_BasePipeline):
             labelCol="label", predictionCol="prediction"
         )
         tuning_stats: dict = {}
+        methods = [c["method"] for c in self.model_candidates] or [method]
+        n_classes = _class_count(data) if "mlp" in methods else None
         if self.model_candidates:
             folded = _stratified_folds(train_df, validation_folds, seed,
                                        "label", ["id"])
@@ -324,7 +334,8 @@ class NodeClassificationPipeline(_BasePipeline):
             def fit(df, cfg):
                 m = cfg["method"]
                 p = {k: v for k, v in cfg.items() if k != "method"}
-                return _make_classifier(m, seed, df, mlp_hidden_layers,
+                return _make_classifier(m, seed, df, n_classes,
+                                        mlp_hidden_layers,
                                         p).fit(df.drop("_fold"))
 
             best, stats = _cv_select(
@@ -340,7 +351,7 @@ class NodeClassificationPipeline(_BasePipeline):
                             "validation_score": best["avg_score"],
                             "model_candidates": stats}
         else:
-            model = _make_classifier(method, seed, data,
+            model = _make_classifier(method, seed, data, n_classes,
                                      mlp_hidden_layers).fit(train_df)
         pred = model.transform(test_df)
         metrics = {
@@ -547,6 +558,7 @@ class LinkPredictionPipeline(_BasePipeline):
             labelCol="label", rawPredictionCol="rawPrediction"
         )
         tuning_stats: dict = {}
+        n_classes = 2   # link / no link
         if self.model_candidates:
             # stratified by label over the (src, dst) key -- the LP split
             # semantics (LinkPredictionTrain CV over train relationships)
@@ -555,7 +567,7 @@ class LinkPredictionPipeline(_BasePipeline):
 
             def fit(df, cfg):
                 p = {k: v for k, v in cfg.items() if k != "method"}
-                return _make_classifier(cfg["method"], seed, df,
+                return _make_classifier(cfg["method"], seed, df, n_classes,
                                         mlp_hidden_layers,
                                         p).fit(df.drop("_fold"))
 
@@ -571,7 +583,7 @@ class LinkPredictionPipeline(_BasePipeline):
                             "validation_score": best["avg_score"],
                             "model_candidates": stats}
         else:
-            model = _make_classifier(method, seed, data,
+            model = _make_classifier(method, seed, data, n_classes,
                                      mlp_hidden_layers).fit(train_df)
         test_used = test_df if not test_df.isEmpty() else train_df
         metrics = {"auc": ev.evaluate(model.transform(test_used)),

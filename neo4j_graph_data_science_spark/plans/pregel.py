@@ -18,7 +18,10 @@ What GDS does NOT have and this kernel adds (north rule):
     mid-iteration (plans/checkpoint.py).
 
 Scale notes (10^12 turns / 10^9+ edges):
-  * Edges are hash-partitioned by src once and persisted; each superstep
+  * One edge-layout rule: prepare_edges hash-partitions edges by src once
+    and persists them, or only persists an input whose plan already
+    reports that layout (a project_bucketed scan); run_pregel runs every
+    loop shuffle at the prepared edges' partition count. Each superstep
     shuffles (a) the vertex state by src for the edge join and (b) the
     combined messages by dst -- both O(V) after map-side combine, never O(E).
   * Hot destination vertices (hubs) are handled by the map-side combiner
@@ -57,10 +60,8 @@ Reducers: dict[str, Callable[[Column], Column]] = {
 @dataclass
 class PregelConfig:
     max_iterations: int = 20
-    partitions: int | None = None          # shuffle width; None -> session default
     checkpoint_dir: str | None = None      # durable resume, saved every boundary
     run_id: str = "run"
-    track_metrics: bool = True
     # supersteps per materialization + convergence check. 1 = classic BSP
     # (one action per superstep). k>1 chains k supersteps LAZILY and runs
     # them as ONE Spark job per boundary -- on overhead-bound graphs (small
@@ -148,50 +149,52 @@ def auto_partitions(n_edges: int, spark: SparkSession) -> int:
     return max(cores, min(8 * cores, by_data))
 
 
-def bucketed_layout(graph, aggregation) -> int | None:
-    """Bucket width when ``graph``'s edges already sit in the durable
-    bucketed+sorted-by-src layout matching ``aggregation`` (written by
-    GraphCatalog.project_bucketed(aggregation=...)), else None. Operators
-    use it to skip prepare_edges' repartition+sort (pre_partitioned=True)
-    and to run the loop at the bucket width -- otherwise a bucketed graph
-    would pay the projection shuffle twice (round-4 verdict #4)."""
-    from ..catalog import Aggregation, Orientation
-
-    props = getattr(graph, "graph_props", None) or {}
-    try:
-        a = Aggregation(aggregation)
-    except ValueError:
+def _src_layout(df: DataFrame) -> int | None:
+    """Width n when ``df``'s physical plan already reports
+    hashpartitioning(src, n) with ``src`` as its leading ascending sort
+    order, else None. Holds for a project_bucketed scan under the
+    bucketed-scan confs that session.get_spark sets, and for a cache of
+    one; plain, AQE-planned, aggregated and distinct inputs report
+    UnknownPartitioning or another key."""
+    plan = df._jdf.queryExecution().executedPlan()
+    part, order = plan.outputPartitioning(), plan.outputOrdering()
+    if (part.getClass().getSimpleName() != "HashPartitioning"
+            or part.expressions().size() != 1 or order.isEmpty()):
         return None
-    if (props.get("bucketed_aggregation") == a.value
-            and graph.orientation == Orientation.NATURAL):
-        width = int(props.get("bucketed_buckets") or 0)
-        return width or None
+    key, lead = part.expressions().head(), order.head()
+    if (key.getClass().getSimpleName() == "AttributeReference"
+            and key.name() == SRC and lead.isAscending()
+            and lead.child().semanticEquals(key)):
+        return part.numPartitions()
     return None
 
 
-def prepare_edges(edges: DataFrame, partitions: int | None = None,
-                  pre_partitioned: bool = False) -> DataFrame:
+def prepare_edges(edges: DataFrame, partitions: int | None = None) -> DataFrame:
     """Hash-partition edges by src once, persist for reuse across supersteps.
 
     This is the GDS 'project once, iterate many' shape: the per-superstep
     state join on src then co-locates with a single exchange of the (small)
     state side instead of re-shuffling the edge table every iteration.
 
+    The layout is read from the input's plan. An input that already
+    reports hashpartitioning(src, n) with a src sort order (a
+    project_bucketed scan, or a cache of one) is only persisted when
+    ``partitions`` is None or n, so a bucketed graph pays its projection
+    shuffle exactly once, at write time. On a session not built by
+    session.get_spark the bucketed scan does not report its layout and is
+    simply repartitioned. An input that already has exactly the
+    (src, dst[, weight]) columns is not re-selected, so a caller's cached
+    frame comes back as the prepared one instead of a second cache.
+
     ``partitions=None`` sizes the width from the data (auto_partitions):
     one extra pre-repartition count() pass, paid once per projection,
     bought a measured 1.7-1.8x loop throughput on the 26.8M-edge probe.
-
-    ``pre_partitioned=True`` asserts the input ALREADY carries the
-    hash-by-src partitioning and per-partition src order (a
-    project_bucketed scan: bucketBy+sortBy with one file per bucket) --
-    the repartition+sort is skipped and only the column-pruned persist
-    remains, so a bucketed graph pays its projection shuffle exactly once,
-    at write time. The caller must run the loop at the bucket width
-    (bucketed_layout) or the state-side exchange won't co-locate.
+    run_pregel reads the loop's shuffle width back from the result.
     """
     cols = [SRC, DST] + ([W] if W in edges.columns else [])
-    e = edges.select(*cols)
-    if not pre_partitioned:
+    e = edges if edges.columns == cols else edges.select(*cols)
+    width = _src_layout(e)
+    if width is None or partitions not in (None, width):
         if partitions is None:
             partitions = auto_partitions(e.count(), e.sparkSession)
         # repartition + SORT WITHIN PARTITIONS by src, then persist: the
@@ -206,31 +209,14 @@ def prepare_edges(edges: DataFrame, partitions: int | None = None,
         # interleaved reps on a noisy shared host, best-of kept as in
         # bench): 2.67M -> 3.40M edges/s/superstep (+27%).
         e = e.repartition(partitions, SRC).sortWithinPartitions(SRC)
+    if not e.is_cached:
         e = register_cache(e.persist())
-        e.count()  # materialize so every superstep reuses the same blocks
-        return e
-    # pre-partitioned (bucketed-table) path: two confs pin the scan plan
-    # that gets frozen into the cache at persist-time compilation:
-    #   * autoBucketedScan off -- DisableUnnecessaryBucketedScan would see
-    #     a bare scan+persist (no join above it at cache-build time) and
-    #     silently compile the cache WITHOUT the hash layout,
-    #     re-introducing the per-superstep Exchange this path avoids;
-    #   * legacy bucketedTableScan.outputOrdering on -- since Spark 3.0
-    #     the scan reports its sortBy order only behind this flag (multi-
-    #     file buckets would need a merge-read); write_bucketed_edges
-    #     guarantees ONE file per bucket (repartition-by-key before
-    #     bucketBy), the regime where the reported order is exact, and
-    #     Spark still verifies the single-file condition before reporting.
-    # Both restored after; the cached blocks keep partitioning AND order.
-    with pinned_confs(e.sparkSession, {
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
-            "spark.sql.legacy.bucketedTableScan.outputOrdering": "true"}):
-        e = register_cache(e.persist())
-        e.count()
+    e.count()  # materialize so every superstep reuses the same blocks
     return e
 
 
 def run_pregel(
+    edges: DataFrame,
     state: DataFrame,
     superstep: Callable[[DataFrame, int], DataFrame],
     config: PregelConfig,
@@ -242,7 +228,9 @@ def run_pregel(
     ``superstep(state, i) -> new_state`` expresses one iteration as lazy
     DataFrame transformations; this loop owns materialization, persist
     rotation, checkpointing, metrics and the convergence check so algorithm
-    code stays declarative.
+    code stays declarative. ``edges`` is the prepare_edges frame the
+    superstep joins against; its partition count is the loop's shuffle
+    width.
 
     ``stats`` are aggregate Columns over the new state (e.g.
     ``[F.max("delta")]``); ``converged_stats(row, it)`` sees
@@ -261,15 +249,13 @@ def run_pregel(
         if resumed is not None:
             start_iter, state = resumed
 
-    # loop-scoped session conf: LOOP_CONFS and, when the caller resolved an
-    # edge partition width, the same width for every loop shuffle (message
-    # groupBy(dst), state exchanges) -- with AQE off the reduce width is
-    # spark.sql.shuffle.partitions, and a width mismatched to the persisted
-    # edge blocks either re-exchanges the edge side or runs the reduce at
-    # the wrong granularity (probe: 1.7x).
-    confs = dict(LOOP_CONFS)
-    if config.partitions:
-        confs["spark.sql.shuffle.partitions"] = str(config.partitions)
+    # loop-scoped session conf: LOOP_CONFS and the prepared edges' width
+    # for every loop shuffle (message groupBy(dst), state exchanges) --
+    # with AQE off the reduce width is spark.sql.shuffle.partitions, and a
+    # width mismatched to the persisted edge blocks either re-exchanges the
+    # edge side or runs the reduce at the wrong granularity (probe: 1.7x).
+    confs = dict(LOOP_CONFS, **{
+        "spark.sql.shuffle.partitions": str(edges.rdd.getNumPartitions())})
     with pinned_confs(sess, confs):
         state = state.persist()
         state.count()
@@ -297,13 +283,12 @@ def _pregel_loop(state, superstep, config, ckpt, it, stats, converged_stats):
         done = converged_stats(tuple(row), it + batch - 1)
         wall = time.time() - t0
         it += batch
-        if config.track_metrics:
-            metrics.append(
-                {"iteration": it, "vertices": row[0], "wall_s": round(wall, 4),
-                 "supersteps": batch, "converged": done}
-            )
+        metrics.append(
+            {"iteration": it, "vertices": row[0], "wall_s": round(wall, 4),
+             "supersteps": batch, "converged": done}
+        )
         if ckpt:
-            saved = ckpt.save(new_state, it, metrics[-1] if metrics else {})
+            saved = ckpt.save(new_state, it, metrics[-1])
             new_state.unpersist()
             new_state = saved.persist()
             new_state.count()

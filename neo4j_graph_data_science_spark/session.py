@@ -4,7 +4,9 @@ Local-mode defaults mirror what we'd set on a real cluster: AQE on
 (runtime re-plan + skew-join splitting), shuffle partitions sized to
 cores (not the 200 default), Arrow enabled for the pandas-UDF kernels,
 UTC session timezone so results compare bit-stable against the DuckDB
-oracle.
+oracle, and bucketed scans that always report their hash-by-src layout and
+sort order, so plans/pregel.prepare_edges reads a project_bucketed graph's
+layout from the plan instead of re-shuffling it.
 """
 
 from __future__ import annotations
@@ -40,6 +42,22 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # a project_bucketed scan keeps its hash-by-src layout and sort
+        # order through plans/pregel.prepare_edges' persist:
+        #   * autoBucketedScan off -- DisableUnnecessaryBucketedScan would
+        #     see a bare scan+persist (no join above it at cache-build
+        #     time) and silently compile the cache WITHOUT the hash layout,
+        #     re-introducing the per-superstep Exchange;
+        #   * legacy bucketedTableScan.outputOrdering on -- since Spark 3.0
+        #     the scan reports its sortBy order only behind this flag
+        #     (multi-file buckets would need a merge-read);
+        #     write_bucketed_edges guarantees ONE file per bucket
+        #     (repartition-by-key before bucketBy), the regime where the
+        #     reported order is exact, and Spark still verifies the
+        #     single-file condition before reporting.
+        # Set session-wide, no persist order can lose the layout.
+        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

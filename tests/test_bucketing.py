@@ -7,6 +7,7 @@ import contextlib
 import io
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from neo4j_graph_data_science_spark.sources.bucketing import (
@@ -72,18 +73,20 @@ def test_catalog_project_bucketed_roundtrip(spark):
     spark.sql("DROP TABLE IF EXISTS bktest_edges_bucketed_inv")
 
 
-def test_pagerank_over_bucketed_projection_parity(spark):
+@pytest.mark.parametrize("op", ["page_rank", "article_rank", "eigenvector"])
+def test_pagerank_over_bucketed_projection_parity(spark, op):
     """A project_bucketed(aggregation=COUNT) graph runs the DISTRIBUTED
-    pregel loop on the pre_partitioned fast path (no projection
-    repartition/sort) and converges to the same scores as the plain
-    graph, including parallel-edge multiplicity."""
+    pregel loop over the bucketed scan as prepare_edges reads it from the
+    plan (no projection repartition/sort) and converges to the same scores
+    as the plain graph, including parallel-edge multiplicity."""
     import math
 
     from neo4j_graph_data_science_spark.catalog import (
         GraphCatalog, from_edge_list,
     )
+    from neo4j_graph_data_science_spark.operators import pagerank
     from neo4j_graph_data_science_spark.operators.pagerank import (
-        PageRankConfig, page_rank,
+        PageRankConfig,
     )
 
     edges = [(i, (i * 3 + 1) % 30) for i in range(30)] + \
@@ -92,11 +95,12 @@ def test_pagerank_over_bucketed_projection_parity(spark):
     g = from_edge_list(spark, edges, n_nodes=30)
     cat = GraphCatalog()
     gb = cat.project_bucketed("bkpr", g, buckets=4, aggregation="COUNT")
+    run = getattr(pagerank, op)
     try:
         cfg = dict(max_iterations=60, tolerance=1e-8, small_graph_edges=0,
                    partitions=None)
-        plain = page_rank(g, PageRankConfig(**cfg))
-        bucketed = page_rank(gb, PageRankConfig(**cfg))
+        plain = run(g, PageRankConfig(**cfg))
+        bucketed = run(gb, PageRankConfig(**cfg))
         p = {r.id: r.score for r in plain.state.collect()}
         b = {r.id: r.score for r in bucketed.state.collect()}
         assert set(p) == set(b)

@@ -233,3 +233,33 @@ def test_auto_tuning_link_prediction_runs_cv(spark):
     assert metrics["auc"] > 0.5
     assert len(metrics["model_candidates"]) == 3  # 1 concrete + 2 draws
     assert "penalty" in metrics["best_candidate"]
+
+
+def test_mlp_output_layer_covers_every_label_in_each_fold(spark, monkeypatch):
+    """A singleton top class lands in one CV fold only, so the training
+    folds of that split lack it. Every MLP built during model selection
+    (each fold and the final refit) must still have one output unit per
+    label, probed once from the full labelled frame."""
+    from neo4j_graph_data_science_spark import pipelines
+
+    outputs: list[int] = []
+    orig = pipelines._make_classifier
+
+    def spy(*args, **kwargs):
+        est = orig(*args, **kwargs)
+        outputs.append(est.getLayers()[-1])
+        return est
+
+    monkeypatch.setattr(pipelines, "_make_classifier", spy)
+    g = _two_cliques(spark)
+    pipe = (
+        NodeClassificationPipeline()
+        .add_node_property("side", lambda gr: gr.nodes.select(
+            "id", (F.col("id") < 10).cast("double").alias("v")))
+        .add_model_candidate("mlp", hidden_layer_sizes=[4], max_epochs=5)
+    )
+    labels = g.nodes.select("id", F.when(F.col("id") == 19, 2)
+                            .when(F.col("id") >= 10, 1).otherwise(0)
+                            .cast("long").alias("label"))
+    pipe.train(g, labels, holdout=0.2, seed=3, validation_folds=2)
+    assert outputs == [3, 3, 3]   # two folds + the final refit

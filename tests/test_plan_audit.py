@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -170,15 +171,16 @@ def test_pregel_edge_side_needs_no_exchange_and_no_sort(spark):
 def test_bucketed_projection_feeds_pregel_without_reshuffle(spark):
     """Round-4 verdict #4: a graph projected via project_bucketed(
     aggregation=...) must NOT pay the projection shuffle twice. The
-    projection phase (aggregated_edges + prepare_edges pre_partitioned)
-    is a pure column-pruned bucketed scan -- no Exchange, no Sort, no
-    re-aggregation -- and the per-superstep SortMergeJoin still needs
-    neither an Exchange nor a Sort on the edge side, exactly as with the
-    in-memory sorted cache."""
+    projection phase (aggregated_edges + prepare_edges, which reads the
+    bucketed layout from the plan) is a pure column-pruned bucketed scan
+    -- no Exchange, no Sort, no re-aggregation -- and the per-superstep
+    SortMergeJoin still needs neither an Exchange nor a Sort on the edge
+    side, exactly as with the in-memory sorted cache."""
     from neo4j_graph_data_science_spark.catalog import GraphCatalog
-    from neo4j_graph_data_science_spark.plans.pregel import (
-        bucketed_layout, prepare_edges,
-    )
+    from neo4j_graph_data_science_spark.plans.pregel import prepare_edges
+
+    def cached_plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -190,9 +192,26 @@ def test_bucketed_projection_feeds_pregel_without_reshuffle(spark):
                            n_nodes=50)
         cat = GraphCatalog()
         gb = cat.project_bucketed("bkplan", g, buckets=4, aggregation="COUNT")
-        assert bucketed_layout(gb, "COUNT") == 4
-        assert bucketed_layout(gb, "SUM") is None      # mode mismatch
-        assert bucketed_layout(g, "COUNT") is None     # unbucketed graph
+        # no flag: the bucketed layout is read from the scan's plan, and
+        # the cache holds the scan as-is at the bucket width
+        edges = prepare_edges(gb.aggregated_edges("COUNT"))
+        plan = cached_plan(edges)
+        assert "Exchange" not in plan, plan
+        assert "Sort [" not in plan, plan
+        assert edges.rdd.getNumPartitions() == 4
+        # an explicit width other than the bucket count repartitions
+        p3 = prepare_edges(gb.aggregated_edges("COUNT"), 3)
+        assert re.search(r"Exchange hashpartitioning\(src#\d+L, 3\), "
+                         "REPARTITION_BY_NUM", cached_plan(p3))
+        assert p3.rdd.getNumPartitions() == 3
+        p3.unpersist()
+        # mode mismatch (SUM re-aggregates the scan) and an unbucketed
+        # graph carry no src layout: both are repartitioned
+        for other in (gb.aggregated_edges("SUM"), g.aggregated_edges("COUNT")):
+            prepared = prepare_edges(other)
+            assert re.search(r"Exchange hashpartitioning\(src#\d+L, \d+\), "
+                             "REPARTITION_BY_NUM", cached_plan(prepared))
+            prepared.unpersist()
 
         # projection-time plan: pure scan, already collapsed -- no
         # re-aggregation, no Exchange, no Sort
@@ -206,7 +225,6 @@ def test_bucketed_projection_feeds_pregel_without_reshuffle(spark):
         rows = agg.collect()
         assert len(rows) == 50 and all(r.weight == 2.0 for r in rows)
 
-        edges = prepare_edges(agg, 4, pre_partitioned=True)
         state = (gb.nodes.select("id", F.lit(1.0).alias("rank"))
                  .repartition(4, "id").persist())
         state.count()

@@ -11,11 +11,13 @@ from __future__ import annotations
 import sys
 import threading
 import time
+from contextlib import contextmanager
 
 import pytest
 
 from neo4j_graph_data_science_spark import from_edge_list
 from neo4j_graph_data_science_spark.operators import wcc as wcc_mod
+from neo4j_graph_data_science_spark.operators.scc import SccConfig, scc
 from neo4j_graph_data_science_spark.operators.wcc import WccConfig, wcc
 from neo4j_graph_data_science_spark.plans import pregel
 
@@ -69,7 +71,7 @@ def test_overlapping_loops_keep_results_and_session_confs(spark, monkeypatch):
 
     orig = wcc_mod.run_pregel
 
-    def gated_run_pregel(state, superstep, *args, **kwargs):
+    def gated_run_pregel(edges, state, superstep, *args, **kwargs):
         name = threading.current_thread().name
 
         def gated(s, it):
@@ -81,7 +83,7 @@ def test_overlapping_loops_keep_results_and_session_confs(spark, monkeypatch):
                 first_done.wait(WAIT_S)
             return superstep(s, it)
 
-        return orig(state, gated, *args, **kwargs)
+        return orig(edges, state, gated, *args, **kwargs)
 
     monkeypatch.setattr(wcc_mod, "run_pregel", gated_run_pregel)
 
@@ -167,3 +169,26 @@ def test_pinned_confs_stress_many_threads(spark):
         sys.setswitchinterval(interval)
     assert errors == []
     assert spark.conf.get(WIDTH) == before
+
+
+def test_loop_width_is_the_prepared_edge_width(spark, monkeypatch):
+    """SCC passes no width of its own to the loop: its propagation loops
+    must still run every shuffle at the width prepare_edges gave the
+    edges, not at the session default."""
+    assert spark.conf.get(WIDTH) != "3"
+    widths: list[str] = []
+    orig = pregel.pinned_confs
+
+    @contextmanager
+    def spy(session, confs):
+        with orig(session, confs):
+            if AQE in confs:   # run_pregel's loop pin
+                widths.append(session.conf.get(WIDTH))
+            yield
+
+    monkeypatch.setattr(pregel, "pinned_confs", spy)
+    g = from_edge_list(spark, EDGES, n_nodes=N_NODES)
+    got = {r["id"]: r["component"]
+           for r in scc(g, SccConfig(partitions=3, small_graph_edges=0)).collect()}
+    assert got[9] == got[10] == got[11] == 9
+    assert widths and set(widths) == {"3"}, widths
