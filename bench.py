@@ -148,7 +148,7 @@ def main() -> None:
         n_edges * supersteps / timings["pagerank_events"], 1)
     extras["pagerank_converged"] = res.converged
     # which engine the auto dispatch picked (plans/local_kernel.py engages
-    # the single-task numpy kernel below 2M edges — sf0.1 is subcritical)
+    # the driver-side numpy kernel below 2M edges — sf0.1 is subcritical)
     extras["pagerank_kernel"] = (
         "local-task" if res.metrics and res.metrics[0].get("kernel") == "local-task"
         else "distributed-pregel")

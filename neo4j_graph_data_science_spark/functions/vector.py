@@ -40,11 +40,6 @@ def euclidean_distance(a: Column, b: Column) -> Column:
     )
 
 
-def euclidean_similarity(a: Column, b: Column) -> Column:
-    """GDS euclidean similarity = 1 / (1 + distance)."""
-    return 1.0 / (1.0 + euclidean_distance(a, b))
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Set Jaccard over array elements (gds.similarity.jaccard)."""
     inter = F.size(F.array_intersect(a, b)).cast("double")

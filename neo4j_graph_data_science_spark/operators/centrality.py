@@ -48,8 +48,9 @@ def hits(graph: SparkGraph, config: HitsConfig | None = None) -> DataFrame:
     """(id, auth, hub): L2-normalized per phase, GDS phase order."""
     cfg = config or HitsConfig()
     eset = register_cache(graph.edges.select(SRC, DST).persist())
-    n_edges = eset.count()
-    if should_run_local(n_edges, cfg.small_graph_edges, None):
+    local, _ = should_run_local(eset, graph.nodes, cfg.small_graph_edges,
+                                None)
+    if local:
         out = local_hits(eset, graph.nodes.select("id"),
                          cfg.hits_iterations)
         eset.unpersist()

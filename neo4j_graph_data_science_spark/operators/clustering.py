@@ -161,13 +161,6 @@ def lloyd_loop(v: DataFrame, k: int,
     return final, cent
 
 
-def kmeans_node_property(graph: SparkGraph, property_col: str,
-                         config: KmeansConfig | None = None) -> DataFrame:
-    """GDS entry shape: cluster graph nodes on an array node property."""
-    return kmeans(graph.nodes.select("id", property_col), config,
-                  id_col="id", vec_col=property_col)
-
-
 @dataclass
 class HdbscanConfig:
     min_pts: int = 5             # core-distance neighbor count

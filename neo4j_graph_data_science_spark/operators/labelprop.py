@@ -92,7 +92,8 @@ def label_propagation(
     if not cfg.weighted and not cfg.node_weight_property:
         edges = edges.withColumn(W, F.lit(1.0))
     eset = register_cache(edges.persist())
-    n_edges = eset.count()
+    local, _ = should_run_local(eset, graph.nodes, cfg.small_graph_edges,
+                                cfg.checkpoint_dir)
 
     if cfg.seed_property:
         state0 = graph.nodes.select(
@@ -116,7 +117,7 @@ def label_propagation(
                   .select("id", F.coalesce("_l0", F.col("label"))
                           .alias("label")))
 
-    if should_run_local(n_edges, cfg.small_graph_edges, cfg.checkpoint_dir):
+    if local:
         state, iters, conv, wall = local_label_propagation(
             eset, state0, cfg.max_iterations)
         eset.unpersist()

@@ -67,8 +67,8 @@ class PageRankConfig:
     # vector after convergence): one of operators/scaling.SCALERS or None
     scaler: str | None = None
     # subcritical fast path (plans/local_kernel.py): graphs at or below this
-    # many aggregated edges run the whole loop in ONE executor task instead
-    # of one Spark job per check_every supersteps. None -> module default
+    # many aggregated edges run the whole loop in the driver instead of
+    # one Spark job per check_every supersteps. None -> module default
     # (2M edges); 0 disables. Identical results (parity-pinned).
     small_graph_edges: int | None = None
     # ENGINE EXTENSION (no GDS counterpart): warm-start ranks for
@@ -116,7 +116,8 @@ def page_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> Pregel
     d = cfg.damping_factor
     agg_mode = "SUM" if cfg.weighted else "COUNT"
     agg = register_cache(graph.aggregated_edges(agg_mode).persist())
-    n_edges = agg.count()
+    local, _ = should_run_local(agg, graph.nodes, cfg.small_graph_edges,
+                                cfg.checkpoint_dir)
     deg = _out_degrees(agg)
     nodes = graph.nodes.select("id")
 
@@ -152,7 +153,7 @@ def page_rank(graph: SparkGraph, config: PageRankConfig | None = None) -> Pregel
                 .select("id", F.coalesce("_r0", F.col("rank")).alias("rank"),
                         "alpha", "out_deg"))
 
-    if should_run_local(n_edges, cfg.small_graph_edges, cfg.checkpoint_dir):
+    if local:
         state, iters, conv, wall = local_page_rank(
             agg, base, d, max(cfg.max_iterations - 1, 0), cfg.tolerance)
         agg.unpersist()

@@ -84,14 +84,15 @@ def bfs(graph: SparkGraph, sources: Sequence[int],
     """(id, dist): minimum hop count from any source; unreachable omitted."""
     cfg = config or PathConfig()
     eset = register_cache(graph.edges.select(SRC, DST).distinct().persist())
-    n_edges = eset.count()
+    local, _ = should_run_local(eset, graph.nodes, cfg.small_graph_edges,
+                                None)
     src_list = [int(s) for s in sources]
     state0 = graph.nodes.select(
         "id",
         F.when(F.col("id").isin(src_list), F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
         F.col("id").isin(src_list).alias("changed"),
     )
-    if should_run_local(n_edges, cfg.small_graph_edges, None):
+    if local:
         out = local_relax_dist(eset, state0.select("id", "dist"),
                                cfg.max_iterations, hop_cost=True)
         eset.unpersist()
@@ -114,7 +115,7 @@ def shortest_paths(graph: SparkGraph, sources: Sequence[int] | DataFrame,
     (e.g. the Steiner tree's growing node set) never collect it."""
     cfg = config or PathConfig()
     e = graph.aggregated_edges("MIN").persist()
-    n_edges = e.count()
+    local, _ = should_run_local(e, graph.nodes, cfg.small_graph_edges, None)
     if isinstance(sources, DataFrame):
         src_df = sources.select(
             F.col(sources.columns[0]).cast("long").alias("id"),
@@ -132,7 +133,7 @@ def shortest_paths(graph: SparkGraph, sources: Sequence[int] | DataFrame,
             F.when(F.col("id").isin(src_list), F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
             F.col("id").isin(src_list).alias("changed"),
         )
-    if should_run_local(n_edges, cfg.small_graph_edges, None):
+    if local:
         out = local_relax_dist(e, state0.select("id", "dist"),
                                cfg.max_iterations)
         e.unpersist()
@@ -327,11 +328,11 @@ def dijkstra(graph: SparkGraph, source: int, target: int | None = None,
     fixpoint (pinned by test_paths_family parity test)."""
     cfg = config or PathConfig()
     e = graph.aggregated_edges("MIN").transform(truncate_mem)
-    n_edges = e.count()
-    if should_run_local(n_edges,
-                        (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
-                         else cfg.small_graph_edges), None):
-        # whole dist/pred/backtrack pipeline in one task: Yen's runs one
+    local, _ = should_run_local(
+        e, graph.nodes, (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
+                         else cfg.small_graph_edges), None)
+    if local:
+        # whole dist/pred/backtrack pipeline in the driver: Yen's runs one
         # dijkstra per spur candidate, each of which was ~10 Spark jobs of
         # pure fixed cost on subcritical spur graphs
         out = local_dijkstra_paths(e, graph.nodes.select("id"), source,
@@ -391,10 +392,10 @@ def astar(graph: SparkGraph, source: int, target: int,
     """
     cfg = config or PathConfig()
     e = graph.aggregated_edges("MIN").persist()
-    n_edges = e.count()
-    if should_run_local(n_edges,
-                        (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
-                         else cfg.small_graph_edges), None):
+    local, _ = should_run_local(
+        e, graph.nodes, (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
+                         else cfg.small_graph_edges), None)
+    if local:
         # admissible h only prunes the search order, never the answer, so
         # the subcritical path reuses the exact dijkstra kernel
         out = local_dijkstra_paths(e, graph.nodes.select("id"), source,
@@ -537,8 +538,8 @@ def yens(graph: SparkGraph, source: int, target: int, k: int = 3,
     Spur/root decomposition with the classic candidate queue; the spur
     Dijkstras of each k-iteration run BATCHED as one multi-source,
     per-walker-masked job (_multi_spur_dijkstra) in the distributed
-    regime, or through the single-task subcritical kernel below the
-    LOCAL_PATHS_MAX_EDGES gate (where per-spur calls are one task each and
+    regime, or through the driver-side subcritical kernel below the
+    LOCAL_PATHS_MAX_EDGES gate (where per-spur calls run no loop jobs and
     batching would buy nothing). Returns (index, source, target,
     total_cost, node_ids) for up to k paths, ordered by cost.
     """
@@ -555,10 +556,10 @@ def yens(graph: SparkGraph, source: int, target: int, k: int = 3,
               list(first[0]["costs"]))]
     candidates: list[tuple[float, list[int], list[float]]] = []
     edges_base = graph.aggregated_edges("MIN").transform(truncate_mem)
-    n_edges = edges_base.count()
-    subcritical = should_run_local(
-        n_edges, (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
-                  else cfg.small_graph_edges), None)
+    subcritical, _ = should_run_local(
+        edges_base, graph.nodes,
+        (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
+         else cfg.small_graph_edges), None)
     batched = not subcritical
     if batched:
         wmin = edges_base.agg(F.min(W)).collect()[0][0]

@@ -83,14 +83,3 @@ def scale_property(
         std = var ** 0.5 if var > 0 else 0.0
         expr = zero if std < CLOSE_TO_ZERO else (v - F.lit(s["_avg"])) / F.lit(std)
     return df.select(F.col(id_col).alias("id"), expr.alias(out))
-
-
-def scale_properties(
-    df: DataFrame, value_col: str, scalers: list[str], id_col: str = "id"
-) -> DataFrame:
-    """(id, <col>_<scaler>...): several scalers of one column in one pass."""
-    out = df.select(F.col(id_col).alias("id"), F.col(value_col))
-    for sc in scalers:
-        scaled = scale_property(df, value_col, sc, id_col)
-        out = out.join(scaled, "id")
-    return out.drop(value_col)

@@ -42,7 +42,7 @@ class SccConfig:
     max_outer_rounds: int = 50
     max_propagation_iters: int = 200
     partitions: int | None = None
-    # subcritical fast path: one-task iterative Tarjan (the reference's own
+    # subcritical fast path: driver-side iterative Tarjan (the reference's own
     # execution shape) below 2M edges; 0 disables.
     small_graph_edges: int | None = None
 
@@ -85,8 +85,9 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
     # the previous round's DFs multiple times, so only a true cut keeps
     # Catalyst analysis O(1) per round.
     all_edges = graph.edges.select(SRC, DST).distinct().transform(truncate_mem)
-    n_edges = all_edges.count()
-    if should_run_local(n_edges, cfg.small_graph_edges, None):
+    local, _ = should_run_local(all_edges, graph.nodes, cfg.small_graph_edges,
+                                None)
+    if local:
         return local_scc(all_edges, graph.nodes.select("id"))
     remaining = graph.nodes.select("id").transform(truncate_mem)
     assigned_parts: list[DataFrame] = []

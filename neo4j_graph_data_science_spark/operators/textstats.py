@@ -118,17 +118,3 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
         F.col(id_col).alias("doc_id"),
         F.md5(F.array_join(F.split(t, r"\s+"), "\x01")).alias("fingerprint"),
     )
-
-
-def rolling_fingerprint(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
-    """(doc_id, fingerprint): position-keyed rolling 64-bit hash
-    (xxhash64 over (pos, token), summed, re-hashed). Order-sensitive and
-    partition-stable; Spark-only dialect (no SQL oracle)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("pos", "tok"),
-    )
-    return toks.groupBy("doc_id").agg(
-        F.xxhash64(F.sum(F.xxhash64("pos", "tok"))).alias("fingerprint")
-    )

@@ -21,6 +21,11 @@ hub fan-out quadratic in hub degree; the standard fix is DEGREE ordering
 wedge fan-out by graph arboricity. Implemented as ``degree_ordered=True``
 (default) -- identical counts, different join cardinality. AQE skew-join
 splits any residual hot partitions.
+
+At or below ``small_graph_edges`` canonical edges and nodes (2M by
+default) the joins are skipped: plans/local_kernel.local_triangles closes
+the same degree-oriented wedges with numpy in the driver, unless there
+are more than LOCAL_TRIANGLES_MAX_WEDGES of them.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, register_cache
+from ..plans.local_kernel import local_triangles, should_run_local
 
 
 @dataclass
@@ -44,6 +50,11 @@ class TriangleCountConfig:
     # shuffle join, exactly the previous plan. ~20M canonical edges is
     # ~300 MB broadcast -- the conventional executor-memory ceiling.
     broadcast_closure_max_edges: int = 20_000_000
+    # subcritical fast path (plans/local_kernel.py): at or below this many
+    # canonical edges and nodes, and at most LOCAL_TRIANGLES_MAX_WEDGES
+    # wedges, the counts come from one numpy pass in the driver.
+    # None -> module default (2M); 0 disables. Identical counts.
+    small_graph_edges: int | None = None
 
 
 def _canonical_edges(graph: SparkGraph) -> DataFrame:
@@ -63,14 +74,20 @@ def triangle_count(
     cfg = config or TriangleCountConfig()
     # canon feeds degree, orientation, the wedge self-join AND the closure:
     # persist so the (possibly expensive) edge derivation upstream runs
-    # once, not four times. ONE aggregate materializes the cache and
-    # yields the broadcast-decision count plus the key-packing id bounds.
+    # once, not four times. The dispatch count materializes the cache and
+    # yields the broadcast-decision count.
     canon = register_cache(_canonical_edges(graph).persist())
-    stats = canon.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.greatest(SRC, DST)).alias("m"),
-        F.min(F.least(SRC, DST)).alias("lo")).collect()[0]
-    n_canon = stats["n"]
+    local, n_canon = should_run_local(canon, graph.nodes,
+                                      cfg.small_graph_edges, None)
+    # the driver kernel declines graphs with too many wedges (None)
+    out = (local_triangles(canon, graph.nodes.select("id"), cfg.max_degree)
+           if local else None)
+    if out is not None:
+        canon.unpersist()
+        return out
+    # the key-packing id bounds
+    stats = canon.agg(F.max(F.greatest(SRC, DST)).alias("m"),
+                      F.min(F.least(SRC, DST)).alias("lo")).collect()[0]
 
     # persisted: referenced by both orientation joins (d1/d2) -- without
     # the cache each reference re-runs the union+aggregate pipeline

@@ -79,7 +79,8 @@ def wcc(graph: SparkGraph, config: WccConfig | None = None) -> PregelResult:
     if cfg.threshold is not None:
         e = e.filter(F.col(W) > cfg.threshold)
     eset = register_cache(e.select(SRC, DST).distinct().persist())
-    n_edges = eset.count()
+    local, _ = should_run_local(eset, graph.nodes, cfg.small_graph_edges,
+                                cfg.checkpoint_dir)
 
     if cfg.seed_property:
         state0 = graph.nodes.select(
@@ -108,7 +109,7 @@ def wcc(graph: SparkGraph, config: WccConfig | None = None) -> PregelResult:
                   .select("id", F.coalesce("_c0", F.col("comp"))
                           .alias("comp")))
 
-    if should_run_local(n_edges, cfg.small_graph_edges, cfg.checkpoint_dir):
+    if local:
         state, iters, wall = local_wcc(eset, state0)
         eset.unpersist()
         comp = state.select("id", F.col("comp").alias("component"))

@@ -10,9 +10,8 @@ every superstep snapshots vertex state so a killed run resumes
 mid-iteration with identical output, and a `_metrics` table records
 per-iteration lineage (iteration, vertices, wall time, convergence flag).
 
-Backend: Iceberg tables when an Iceberg catalog is configured on the
-session (`df.writeTo(...)`), else plain parquet directories with an atomic
-`_COMMITTED` marker -- same protocol, same layout:
+Backend: plain parquet directories, each snapshot committed by an atomic
+`_COMMITTED` marker written last:
 
     {root}/{run_id}/state/iter=N/   (snapshot; _COMMITTED written last)
     {root}/{run_id}/metrics/        (append-only metric rows)
@@ -60,18 +59,6 @@ def truncate_mem(df: DataFrame) -> DataFrame:
                       plan.stream(), jspark, none, none)
     return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         jspark, fresh), df.sparkSession)
-
-
-def _has_iceberg(spark: SparkSession) -> bool:
-    try:
-        jconf = spark.conf
-        for k in ("spark.sql.catalog.spark_catalog", "spark.sql.catalog.local"):
-            v = jconf.get(k, None)
-            if v and "iceberg" in str(v).lower():
-                return True
-    except Exception:
-        pass
-    return False
 
 
 class CheckpointManager:

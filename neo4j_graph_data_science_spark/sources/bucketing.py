@@ -24,7 +24,7 @@ ScanningRelationshipsImporter.java (one-time import), Pregel.java:204
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..catalog import DST, SRC
 
@@ -60,8 +60,4 @@ def write_bucketed_edges(
     if path:
         w = w.option("path", path)
     w.saveAsTable(table_name)
-    return spark.table(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)

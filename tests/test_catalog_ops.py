@@ -124,7 +124,7 @@ def test_clear_caches_releases_operator_persists(spark):
         NodeSimilarityConfig, node_similarity,
     )
     from neo4j_graph_data_science_spark.operators.triangle import (
-        triangle_count,
+        TriangleCountConfig, triangle_count,
     )
 
     from neo4j_graph_data_science_spark import catalog as catmod
@@ -138,7 +138,8 @@ def test_clear_caches_releases_operator_persists(spark):
     assert len(catmod._OPERATOR_CACHES) == 0
 
     g = from_edge_list(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4)])
-    triangle_count(g).count()
+    # the distributed plan: the driver-side kernel persists only canon
+    triangle_count(g, TriangleCountConfig(small_graph_edges=0)).count()
     adj = g.edges.select("src", "dst")
     node_similarity(adj, "src", "dst", NodeSimilarityConfig(top_k=3)).count()
     registered = list(catmod._OPERATOR_CACHES)

@@ -1,8 +1,8 @@
-"""Parity pins for the subcritical single-task kernels
+"""Parity pins for the subcritical driver-side kernels
 (plans/local_kernel.py): the local numpy loop must reproduce the
 distributed Pregel loop's results — same init semantics, same tie-breaks,
 same iteration accounting — because operators silently dispatch on edge
-count. Forcing: small_graph_edges=huge forces the local path,
+and node count. Forcing: small_graph_edges=huge forces the local path,
 small_graph_edges=0 forces the distributed path, on the SAME graph."""
 
 from __future__ import annotations
@@ -243,3 +243,125 @@ def test_scc_local_matches_distributed(spark):
     assert cl == cd
     assert cl[0] == cl[1] == cl[2] == 0 and cl[3] == cl[4] == 3
     assert cl[5] == 5 and cl[6] == 6 and cl[7] == 7 and cl[8] == 8
+
+
+# self-loops (3,3) and (6,6), a parallel (0,1) and reciprocal (1,0)/(2,1)
+# pairs, two triangles sharing edge 1-2, a 4-cycle with one chord, nodes
+# 9..11 isolated; degree 3: nodes 0, 1, 2, 4, 6
+TRI_EDGES = [
+    (0, 1), (0, 1), (1, 0), (1, 2), (2, 1), (2, 0), (3, 3), (1, 3), (3, 2),
+    (4, 5), (5, 6), (6, 7), (7, 4), (4, 6), (6, 6), (8, 0),
+]
+# K4 on 0..3 plus node 4 joined to all of them and to pendant 5
+K4_HUB = [(a, b) for a in range(4) for b in range(a + 1, 5)] + [(4, 5)]
+
+
+def _triangles(g, limit, **kwargs):
+    from neo4j_graph_data_science_spark.operators.triangle import (
+        TriangleCountConfig, triangle_count,
+    )
+
+    cfg = TriangleCountConfig(small_graph_edges=limit, **kwargs)
+    return {r["id"]: r["triangles"] for r in triangle_count(g, cfg).collect()}
+
+
+@pytest.mark.parametrize("edges,kwargs", [
+    (TRI_EDGES, {}),
+    (TRI_EDGES, {"max_degree": 2}),     # the degree-3 nodes get -1
+    (TRI_EDGES, {"max_degree": 0}),     # every non-isolated node excluded
+    ([], {}),                           # empty edge set, isolated nodes only
+])
+def test_triangles_local_matches_distributed(spark, edges, kwargs):
+    g = from_edge_list(spark, edges, n_nodes=12)
+    loc = _triangles(g, FORCE_LOCAL, **kwargs)
+    assert loc == _triangles(g, FORCE_DIST, **kwargs)
+    assert len(loc) == 12 and loc[9] == loc[10] == loc[11] == 0
+
+
+def test_triangles_local_max_degree_exclusion(spark):
+    # node 4 (degree 5) is excluded, so only the K4's own triangles count
+    g = from_edge_list(spark, K4_HUB, n_nodes=6)
+    loc = _triangles(g, FORCE_LOCAL, max_degree=4)
+    assert loc == _triangles(g, FORCE_DIST, max_degree=4)
+    assert loc == {0: 3, 1: 3, 2: 3, 3: 3, 4: -1, 5: 0}
+
+
+def test_triangles_local_hub_spans_wedge_chunks(spark, monkeypatch):
+    from neo4j_graph_data_science_spark.plans import local_kernel
+
+    # K8 on 0..7: equal degrees, so node 0 is the apex of all 21 of its
+    # wedges, and its first edge alone has 6 -- more than one chunk. Hub
+    # 10 joined to the ring 11..22 (plus chords) closes 15 triangles.
+    k8 = [(a, b) for a in range(8) for b in range(a + 1, 8)]
+    ring = [(11 + i, 11 + (i + 1) % 12) for i in range(12)]
+    chords = [(11, 14), (12, 17), (15, 19)]
+    hub = [(10, i) for i in range(11, 23)]
+    g = from_edge_list(spark, k8 + ring + chords + hub, n_nodes=24)
+    monkeypatch.setattr(local_kernel, "WEDGE_CHUNK", 5)
+    loc = _triangles(g, FORCE_LOCAL)
+    assert loc == _triangles(g, FORCE_DIST)
+    assert [loc[i] for i in range(8)] == [21] * 8
+    assert loc[10] == 15 and loc[8] == loc[9] == loc[23] == 0
+
+
+def test_triangles_wedge_cap_falls_back_to_joins(spark, monkeypatch):
+    from neo4j_graph_data_science_spark.plans import local_kernel
+
+    # K8 has 56 degree-oriented wedges: over a cap of 55 the driver kernel
+    # declines and the distributed joins give the same counts
+    k8 = [(a, b) for a in range(8) for b in range(a + 1, 8)]
+    g = from_edge_list(spark, k8, n_nodes=9)
+    canon = g.edges.select("src", "dst")
+    nodes = g.nodes.select("id")
+    monkeypatch.setattr(local_kernel, "LOCAL_TRIANGLES_MAX_WEDGES", 56)
+    assert local_kernel.local_triangles(canon, nodes, None) is not None
+    monkeypatch.setattr(local_kernel, "LOCAL_TRIANGLES_MAX_WEDGES", 55)
+    assert local_kernel.local_triangles(canon, nodes, None) is None
+    loc = _triangles(g, FORCE_LOCAL)
+    assert loc == _triangles(g, FORCE_DIST)
+    assert loc == {**{i: 21 for i in range(8)}, 8: 0}
+
+
+def test_triangle_aggregates_match_across_engines(spark):
+    from neo4j_graph_data_science_spark.operators.triangle import (
+        TriangleCountConfig, global_triangle_count,
+        local_clustering_coefficient,
+    )
+
+    g = from_edge_list(spark, TRI_EDGES, n_nodes=12)
+    for kwargs in ({}, {"max_degree": 2}):
+        loc = TriangleCountConfig(small_graph_edges=FORCE_LOCAL, **kwargs)
+        dist = TriangleCountConfig(small_graph_edges=FORCE_DIST, **kwargs)
+        assert global_triangle_count(g, loc) == global_triangle_count(g, dist)
+        ll = {r["id"]: r["lcc"] for r in
+              local_clustering_coefficient(g, loc).collect()}
+        ld = {r["id"]: r["lcc"] for r in
+              local_clustering_coefficient(g, dist).collect()}
+        assert ll.keys() == ld.keys()
+        for k in ll:   # excluded nodes are NaN on both engines
+            assert ll[k] == ld[k] or (ll[k] != ll[k] and ld[k] != ld[k]), k
+    assert global_triangle_count(
+        g, TriangleCountConfig(small_graph_edges=FORCE_LOCAL)) == 4
+
+
+def test_dispatch_bounds_node_rows(spark):
+    from neo4j_graph_data_science_spark.plans.local_kernel import (
+        should_run_local,
+    )
+
+    # 3 edges but 150 mostly isolated nodes: the driver kernel would read
+    # 150 state rows, so a 100-row limit keeps the distributed engine
+    g = from_edge_list(spark, [(0, 1), (1, 2), (2, 0)], n_nodes=150)
+    assert should_run_local(g.edges, g.nodes, 100, None) == (False, 3)
+    assert should_run_local(g.edges, g.nodes, 150, None) == (True, 3)
+    assert should_run_local(g.edges, g.nodes, 0, None) == (False, 3)
+    assert should_run_local(g.edges, g.nodes, 150, "ckpt") == (False, 3)
+    empty = from_edge_list(spark, [], n_nodes=5)
+    assert should_run_local(empty.edges, empty.nodes, 5, None) == (True, 0)
+
+    def kernel(limit):
+        res = page_rank(g, PageRankConfig(small_graph_edges=limit))
+        return res.metrics[0].get("kernel")
+
+    assert kernel(150) == "local-task"
+    assert kernel(100) is None

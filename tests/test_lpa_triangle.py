@@ -133,6 +133,9 @@ def test_triangles_int32_ids(spark):
             F.col("dst").cast("int").alias("dst"),
             "rel_type", "weight"),
     )
-    assert global_triangle_count(g32) == 11
-    per = {r["id"]: r["triangles"] for r in triangle_count(g32).collect()}
-    assert per[0] == 6 and per[5] == 1 and per[7] == 0
+    for limit in (0, None):     # distributed join plan, driver-side kernel
+        cfg = TriangleCountConfig(small_graph_edges=limit)
+        assert global_triangle_count(g32, cfg) == 11
+        per = {r["id"]: r["triangles"]
+               for r in triangle_count(g32, cfg).collect()}
+        assert per[0] == 6 and per[5] == 1 and per[7] == 0

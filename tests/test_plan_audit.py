@@ -98,7 +98,7 @@ def test_triangle_subcritical_plan_broadcasts_and_caches(spark):
     )
 
     g = from_edge_list(spark, [(0, 1), (1, 2), (2, 0), (2, 3)])
-    df = triangle_count(g, TriangleCountConfig())
+    df = triangle_count(g, TriangleCountConfig(small_graph_edges=0))
     plan = _plan(df)
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "InMemoryTableScan" in plan, plan
@@ -108,7 +108,8 @@ def test_triangle_subcritical_plan_broadcasts_and_caches(spark):
     # explicit broadcast hints -- join strategy is left to the planner/AQE,
     # which at real scale resolves to shuffle joins
     df_big = triangle_count(
-        g, TriangleCountConfig(broadcast_closure_max_edges=0))
+        g, TriangleCountConfig(broadcast_closure_max_edges=0,
+                               small_graph_edges=0))
     logical = _plan(df_big, mode="extended")
     optimized = logical.split("== Optimized Logical Plan ==")[1]
     assert "ResolvedHint" not in optimized and "hints=[broadcast]" not in optimized, optimized

@@ -55,8 +55,8 @@ parts = max(hi_cores, min(8 * hi_cores, by_data))
 # the local[2] leg must fit the subprocess timeout with margin).
 # small_graph_edges=0 everywhere: this harness measures the DISTRIBUTED
 # loop's scaling by definition -- without it a small --convs probe would
-# silently dispatch to the single-task subcritical kernel and "measure"
-# a one-task job at both levels.
+# silently dispatch to the driver-side subcritical kernel and "measure"
+# no distributed work at either level.
 page_rank(g, PageRankConfig(max_iterations=2, tolerance=0.0,
                             partitions=parts,
                             small_graph_edges=0)).state.count()
