@@ -18,8 +18,8 @@ components"):
      propagation to fixpoint); b(v) = min id v can reach (backward).
      Vertices with f(v) == b(v) == c are exactly SCC(c) for each root c
      that is the minimum of both reachability sets; assign component=f(v),
-     remove them, repeat. Each round removes at least the SCC of the
-     minimum remaining id.
+     remove them, repeat until no vertex remains. Each round removes at
+     least the SCC of the minimum remaining id.
 
 All phases are edge joins + min-reduced shuffles on the Pregel kernel.
 """
@@ -39,8 +39,6 @@ from ..plans.pregel import PregelConfig, prepare_edges, run_pregel
 
 @dataclass
 class SccConfig:
-    max_outer_rounds: int = 50
-    max_propagation_iters: int = 200
     partitions: int | None = None
     # subcritical fast path: driver-side iterative Tarjan (the reference's own
     # execution shape) below 2M edges; 0 disables.
@@ -92,9 +90,7 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
     remaining = graph.nodes.select("id").transform(truncate_mem)
     assigned_parts: list[DataFrame] = []
 
-    for _ in range(cfg.max_outer_rounds):
-        if remaining.limit(1).count() == 0:
-            break
+    while (n := remaining.count()) > 0:
         e = (
             all_edges.join(remaining.withColumnRenamed("id", SRC), SRC, "left_semi")
             .join(remaining.withColumnRenamed("id", DST), DST, "left_semi")
@@ -109,8 +105,10 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
                 .transform(truncate_mem)
             trimmed = remaining.join(on_cycle, "id", "left_anti") \
                 .transform(truncate_mem)
-            if trimmed.count() == 0:
+            peeled = trimmed.count()
+            if peeled == 0:
                 break
+            n -= peeled
             assigned_parts.append(
                 trimmed.select("id", F.col("id").alias("component"))
             )
@@ -121,12 +119,14 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
                 .join(remaining.withColumnRenamed("id", DST), DST, "left_semi")
                 .transform(truncate_mem)
             )
-        if remaining.limit(1).count() == 0:
+        if n == 0:
             break
-        # ---- peel: forward/backward min labels over remaining subgraph ----
+        # ---- peel: forward/backward min labels over remaining subgraph;
+        # a label travels along a shortest path, at most n-1 edges, so n
+        # supersteps always reach the fixpoint ----
         ep = prepare_edges(e, cfg.partitions)
-        fwd = _min_propagate(ep, remaining, False, cfg.max_propagation_iters)
-        bwd = _min_propagate(ep, remaining, True, cfg.max_propagation_iters)
+        fwd = _min_propagate(ep, remaining, False, n)
+        bwd = _min_propagate(ep, remaining, True, n)
         both = fwd.withColumnRenamed("comp", "f").join(
             bwd.withColumnRenamed("comp", "b"), "id"
         )

@@ -51,12 +51,6 @@ class WccConfig:
     partitions: int | None = None
     consecutive_ids: bool = False
     check_every: int = 1
-    # pointer jumping (comp <- comp(comp)) after each neighbor-min step:
-    # turns O(diameter) rounds into ~O(log diameter). Transcript NEXT-chains
-    # have diameter ~ conversation length, so this is the difference between
-    # ~10 and ~hundreds of shuffles at scale. Output is identical (labels
-    # only ever decrease to ids of members of the same component).
-    pointer_jumping: bool = True
     # subcritical fast path (plans/local_kernel.py); None -> 2M-edge default,
     # 0 disables. Output identical (min-member component ids).
     small_graph_edges: int | None = None
@@ -137,23 +131,23 @@ def wcc(graph: SparkGraph, config: WccConfig | None = None) -> PregelResult:
             F.least(F.col("comp"), F.coalesce("msg", F.col("comp"))).alias("comp"),
             (F.coalesce("msg", F.col("comp")) < F.col("comp")).alias("changed"),
         )
-        if cfg.pointer_jumping:
-            # comp <- comp(comp): one extra self-join; labels stay member ids
-            # of the same component, so the fixpoint (= min member) is
-            # unchanged but chains collapse exponentially fast.
-            parent = new.select(F.col("id").alias("comp"), F.col("comp").alias("_pc"))
-            new = (
-                new.join(parent, "comp", "left")
-                .select(
-                    "id",
-                    F.least(F.col("comp"), F.coalesce("_pc", F.col("comp"))).alias("comp"),
-                    (
-                        F.col("changed")
-                        | (F.coalesce("_pc", F.col("comp")) < F.col("comp"))
-                    ).alias("changed"),
-                )
+        # pointer jumping, comp <- comp(comp): one extra self-join turns
+        # O(diameter) rounds into ~O(log diameter) (transcript NEXT-chains
+        # have diameter ~ conversation length: ~10 vs ~hundreds of
+        # shuffles at scale). Labels stay member ids of the same component,
+        # so the fixpoint (= min member) is unchanged.
+        parent = new.select(F.col("id").alias("comp"), F.col("comp").alias("_pc"))
+        return (
+            new.join(parent, "comp", "left")
+            .select(
+                "id",
+                F.least(F.col("comp"), F.coalesce("_pc", F.col("comp"))).alias("comp"),
+                (
+                    F.col("changed")
+                    | (F.coalesce("_pc", F.col("comp")) < F.col("comp"))
+                ).alias("changed"),
             )
-        return new
+        )
 
     res = run_pregel(
         edges, state0, superstep,

@@ -2,7 +2,8 @@
 
 ``truncate_mem`` is the package's ONE lineage cut: every iterative loop
 (``run_pregel`` and every driver-side loop in ``operators/``) hands its
-state from one round to the next through it.
+state from one round to the next through it. ``release`` drops the blocks
+of a cut once a newer one has superseded it.
 
 ``CheckpointManager`` is the durable, opt-in part (north-rule requirement
 absent from GDS, which only *logs* progress, progress-tracking/ module):
@@ -61,6 +62,16 @@ def truncate_mem(df: DataFrame) -> DataFrame:
         jspark, fresh), df.sparkSession)
 
 
+def release(df: DataFrame) -> None:
+    """Unpersist the blocks of a ``truncate_mem`` cut now instead of when
+    the JVM happens to collect the frame. A no-op on any other plan (e.g.
+    a resumed parquet read). The cut is unreadable afterwards, so only
+    call this on a frame nothing will evaluate again."""
+    plan = df._jdf.logicalPlan()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 class CheckpointManager:
     def __init__(self, root: str, run_id: str) -> None:
         self.root = root.rstrip("/")
@@ -71,10 +82,12 @@ class CheckpointManager:
     def _iter_dir(self, iteration: int) -> str:
         return f"{self.dir}/state/iter={iteration:05d}"
 
-    def save(self, state: DataFrame, iteration: int, metric: dict) -> DataFrame:
-        """Write the snapshot, commit-mark it, append the metric row +
-        per-partition lineage, and return the re-read DataFrame (lineage
-        truncated).
+    def save(self, state: DataFrame, iteration: int, metric: dict) -> None:
+        """Write the snapshot of ``state``, commit-mark it and append the
+        metric row + per-partition lineage. ``state`` is the boundary's
+        in-memory cut: the write and the lineage job read its blocks, and
+        the caller keeps that cut as the live state, so nothing is read
+        back from the snapshot.
 
         Per-partition lineage (north rule; GDS has no equivalent — its
         progress-tracking/ module only logs task progress): for every
@@ -106,7 +119,6 @@ class CheckpointManager:
             f.write(json.dumps({"iteration": iteration,
                                 "partitions": lineage["partitions"],
                                 **metric}) + "\n")
-        return state.sparkSession.read.parquet(path)
 
     def lineage(self, iteration: int) -> Optional[dict]:
         p = f"{self._iter_dir(iteration)}/_LINEAGE"

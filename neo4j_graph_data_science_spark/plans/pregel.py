@@ -26,10 +26,11 @@ Scale notes (10^12 turns / 10^9+ edges):
     combined messages by dst -- both O(V) after map-side combine, never O(E).
   * Hot destination vertices (hubs) are handled by the map-side combiner
     (messages to one dst collapse per input partition) plus AQE skew split.
-  * Lineage is cut (plans/checkpoint.truncate_mem, the package's one cut)
-    at every batched boundary and every TRUNCATE_EVERY supersteps; in
-    between we rotate persisted state (persist new -> materialize ->
-    unpersist old).
+  * Every boundary is one Spark job: the lineage cut
+    (plans/checkpoint.truncate_mem, the package's one cut) over the new
+    state with the vertex count and convergence stats observed on the same
+    pass. The superseded boundary's cut is released as soon as the new one
+    exists, so a loop holds one state's blocks at a time.
 """
 
 from __future__ import annotations
@@ -40,11 +41,12 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
+from pyspark.serializers import CPickleSerializer
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, W, register_cache
-from .checkpoint import CheckpointManager, truncate_mem
+from .checkpoint import CheckpointManager, release, truncate_mem
 
 Reducers: dict[str, Callable[[Column], Column]] = {
     # Reducer.java:34-86 -- Sum (identity 0), Min, Max, Count
@@ -62,11 +64,11 @@ class PregelConfig:
     max_iterations: int = 20
     checkpoint_dir: str | None = None      # durable resume, saved every boundary
     run_id: str = "run"
-    # supersteps per materialization + convergence check. 1 = classic BSP
-    # (one action per superstep). k>1 chains k supersteps LAZILY and runs
+    # supersteps per boundary (one cut + convergence check). 1 = classic
+    # BSP (one job per superstep). k>1 chains k supersteps LAZILY and runs
     # them as ONE Spark job per boundary -- on overhead-bound graphs (small
     # state, many iterations) the per-superstep fixed cost (job scheduling,
-    # stats action) dominates wall time, and batching divides it by k.
+    # plan analysis) dominates wall time, and batching divides it by k.
     # Convergence detection is delayed by at most k-1 supersteps
     # (results are the same or MORE converged); fixed-iteration runs are
     # bit-identical. Every boundary is a lineage cut
@@ -99,12 +101,6 @@ class PregelResult:
 # only when partitions are oversized). Clamped to [cores, 8*cores] so tiny
 # graphs keep one wave and huge graphs don't drown the scheduler.
 EDGE_ROWS_PER_PARTITION = 400_000
-
-# Cut Spark lineage (truncate_mem) every 2nd superstep when supersteps are
-# not batched -- without it, iterative plans grow (and superstep plans that
-# reference the state twice, e.g. WCC pointer jumping, grow 2^k-fold) and
-# Catalyst analysis time blows up.
-TRUNCATE_EVERY = 2
 
 # AQE is off inside the superstep loop. AQE re-plans EVERY shuffle stage of
 # EVERY superstep job on the driver -- measured round 3 on the 31M-edge
@@ -226,19 +222,20 @@ def run_pregel(
     """Generic BSP loop (Pregel.java:204-245 analogue).
 
     ``superstep(state, i) -> new_state`` expresses one iteration as lazy
-    DataFrame transformations; this loop owns materialization, persist
-    rotation, checkpointing, metrics and the convergence check so algorithm
-    code stays declarative. ``edges`` is the prepare_edges frame the
-    superstep joins against; its partition count is the loop's shuffle
-    width.
+    DataFrame transformations; this loop owns materialization,
+    checkpointing, metrics and the convergence check so algorithm code
+    stays declarative. ``edges`` is the prepare_edges frame the superstep
+    joins against; its partition count is the loop's shuffle width.
 
     ``stats`` are aggregate Columns over the new state (e.g.
     ``[F.max("delta")]``); ``converged_stats(row, it)`` sees
-    ``(vertex_count, *stats)``. The vertex count, the convergence
-    statistics and the materialization of the persisted state all happen in
-    ONE Spark job per boundary -- the classic "2 actions per iteration" tax
-    (count + converge-check) is what dominates superstep latency on
-    overhead-bound graphs and costs a full extra pass at scale.
+    ``(vertex_count, *stats)``. Every boundary is ONE Spark job: the
+    truncate_mem cut of the new state, with the vertex count and the stats
+    observed on the same pass (GDS likewise reads vote-to-halt from the
+    compute pass itself). The input state is cut the same way before the
+    first superstep, and each superseded cut is released once the next
+    one exists. A checkpoint writes the snapshot from the cut and the loop
+    keeps the cut.
     """
     sess = state.sparkSession
     ckpt: Optional[CheckpointManager] = None
@@ -257,10 +254,23 @@ def run_pregel(
     confs = dict(LOOP_CONFS, **{
         "spark.sql.shuffle.partitions": str(edges.rdd.getNumPartitions())})
     with pinned_confs(sess, confs):
-        state = state.persist()
-        state.count()
-        return _pregel_loop(state, superstep, config, ckpt, start_iter,
-                            stats, converged_stats)
+        return _pregel_loop(truncate_mem(state), superstep, config, ckpt,
+                            start_iter, stats, converged_stats)
+
+
+# Name of the metrics every boundary observes on its cut's own job.
+_BOUNDARY = "pregel_boundary"
+
+
+def _observed_row(df: DataFrame) -> tuple:
+    """The ``_BOUNDARY`` metrics of ``df``'s last run, as agg().collect()
+    would type them. Read from the executed plan rather than through an
+    ``Observation``: registering one gives the session a non-serializable
+    ObservationManager, and every later closure that captures the session
+    (MLlib training summaries) then fails with "Task not serializable"."""
+    jrow = df._jdf.queryExecution().observedMetrics().get(_BOUNDARY).get()
+    utils = df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    return tuple(CPickleSerializer().loads(utils.toPyRow(jrow)))
 
 
 def _pregel_loop(state, superstep, config, ckpt, it, stats, converged_stats):
@@ -272,15 +282,10 @@ def _pregel_loop(state, superstep, config, ckpt, it, stats, converged_stats):
         new_state = state
         for b in range(batch):
             new_state = superstep(new_state, it + b)
-        if batch > 1 or (it + 1) % TRUNCATE_EVERY == 0:
-            # a k-deep chain runs as one job; the cut materializes it in
-            # memory (a parquet round-trip here was a per-boundary fixed
-            # cost that capped measured scaling, round-3 finding)
-            new_state = truncate_mem(new_state)
-        else:
-            new_state = new_state.persist()
-        row = new_state.agg(F.count(F.lit(1)), *stats).collect()[0]
-        done = converged_stats(tuple(row), it + batch - 1)
+        observed = new_state.observe(_BOUNDARY, F.count(F.lit(1)), *stats)
+        new_state = truncate_mem(observed)
+        row = _observed_row(observed)
+        done = converged_stats(row, it + batch - 1)
         wall = time.time() - t0
         it += batch
         metrics.append(
@@ -288,11 +293,8 @@ def _pregel_loop(state, superstep, config, ckpt, it, stats, converged_stats):
              "supersteps": batch, "converged": done}
         )
         if ckpt:
-            saved = ckpt.save(new_state, it, metrics[-1])
-            new_state.unpersist()
-            new_state = saved.persist()
-            new_state.count()
-        state.unpersist()
+            ckpt.save(new_state, it, metrics[-1])
+        release(state)
         state = new_state
         if done:
             did_converge = True

@@ -1,16 +1,20 @@
 """Checkpoint/resume: a run killed after superstep k resumes and produces
 identical output (north-rule resumability requirement; BASELINE.md). Also
-pins the lineage cut (truncate_mem) every iterative loop goes through."""
+pins the lineage cut (truncate_mem) every iterative loop goes through, and
+the release of the cuts a Pregel loop supersedes."""
 
 from __future__ import annotations
 
 import math
+import random
 
 from pyspark.sql import functions as F
 
 from neo4j_graph_data_science_spark import from_edge_list
 from neo4j_graph_data_science_spark.operators.pagerank import PageRankConfig, page_rank
-from neo4j_graph_data_science_spark.plans.checkpoint import CheckpointManager, truncate_mem
+from neo4j_graph_data_science_spark.plans.checkpoint import (
+    CheckpointManager, release, truncate_mem,
+)
 from neo4j_graph_data_science_spark.plans.pregel import LOOP_CONFS, pinned_confs
 
 EDGES = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (5, 2), (1, 5)]
@@ -99,3 +103,47 @@ def test_truncate_mem_clamps_compounding_size_estimate(spark):
         want = {i: (6 * v + i) % 11 for i, v in want.items()}
     assert size == 2 ** 63 - 1  # the clamp engaged
     assert {r.id: r.v for r in state.collect()} == want
+
+
+def _cached_rdds(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_release_drops_a_cut_and_skips_other_plans(spark, tmp_path):
+    cut = truncate_mem(spark.range(50).repartition(4))
+    assert cut.rdd.getNumPartitions() == 4
+    before = _cached_rdds(spark)
+    release(cut)
+    assert len(before - _cached_rdds(spark)) == 1
+    path = str(tmp_path / "p")
+    spark.range(5).write.parquet(path)
+    read = spark.read.parquet(path)
+    release(read)      # not a cut: nothing to drop, still readable
+    release(spark.range(3))
+    assert read.count() == 5
+
+
+def test_distributed_pagerank_keeps_only_the_result_cut(spark):
+    """Every boundary releases the cut it superseded, so a distributed run
+    leaves one cached RDD behind: the cut holding the result."""
+    rng = random.Random(3)
+    g = from_edge_list(
+        spark, [(rng.randrange(300), rng.randrange(300)) for _ in range(2000)],
+        n_nodes=300)
+    before = _cached_rdds(spark)
+    res = page_rank(g, PageRankConfig(max_iterations=20, tolerance=0.0,
+                                      small_graph_edges=0))
+    assert len(res.state.collect()) == 300
+    assert len(_cached_rdds(spark) - before) == 1
+
+
+def test_pregel_loop_leaves_session_serializable(spark):
+    """The boundary stats are read from the cut's executed plan, not via an
+    Observation, whose ObservationManager would make the session (and so
+    every closure capturing it, such as MLlib training summaries)
+    unserializable."""
+    g = from_edge_list(spark, EDGES, n_nodes=6)
+    page_rank(g, PageRankConfig(max_iterations=4, small_graph_edges=0))
+    jvm = spark._jvm
+    jvm.java.io.ObjectOutputStream(
+        jvm.java.io.ByteArrayOutputStream()).writeObject(spark._jsparkSession)

@@ -2,10 +2,13 @@
 from one round to the next through ``plans/checkpoint.truncate_mem``. A raw
 ``localCheckpoint`` elsewhere would bring back the compounding size
 estimate (the round-1 Louvain hang); a second cut function would bring
-back a second policy."""
+back a second policy. The Pregel loop materializes every boundary one way,
+the observed cut: no persist branch, no cut cadence constant and no
+separate stats action."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -15,6 +18,9 @@ PKG = Path(neo4j_graph_data_science_spark.__file__).parent
 CUT = PKG / "plans" / "checkpoint.py"
 RAW_CUT = re.compile(r"localCheckpoint\(")
 SECOND_CUT = re.compile(r"^\s*def truncate\(")
+PREGEL = PKG / "plans" / "pregel.py"
+LOOP_FNS = {"run_pregel", "_pregel_loop"}
+SECOND_MATERIALIZATION = re.compile(r"\.persist\(|\.agg\(")
 
 
 def test_one_lineage_cut():
@@ -24,4 +30,24 @@ def test_one_lineage_cut():
             if (RAW_CUT.search(line) and path != CUT) \
                     or SECOND_CUT.match(line):
                 offenders.append(f"{path.relative_to(PKG)}:{n}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
+def test_no_cut_cadence_constant():
+    offenders = [f"{path.relative_to(PKG)}:{n}"
+                 for path in sorted(PKG.rglob("*.py"))
+                 for n, line in enumerate(path.read_text().splitlines(), 1)
+                 if "TRUNCATE_EVERY" in line]
+    assert not offenders, offenders
+
+
+def test_pregel_loop_has_one_materialization():
+    src = PREGEL.read_text()
+    lines = src.splitlines()
+    fns = [node for node in ast.walk(ast.parse(src))
+           if isinstance(node, ast.FunctionDef) and node.name in LOOP_FNS]
+    assert {f.name for f in fns} == LOOP_FNS
+    offenders = [f"{f.name}:{n}: {lines[n - 1].strip()}" for f in fns
+                 for n in range(f.lineno, f.end_lineno + 1)
+                 if SECOND_MATERIALIZATION.search(lines[n - 1])]
     assert not offenders, "\n".join(offenders)

@@ -225,24 +225,51 @@ def test_astar_local_matches_distributed(spark):
     assert list(lr[0]["node_ids"]) == list(dr[0]["node_ids"])
 
 
-def test_scc_local_matches_distributed(spark):
+# two cycles bridged one-way, a chain, a self-loop, an isolate
+SCC_MIXED = [
+    (0, 1), (1, 2), (2, 0),          # SCC {0,1,2}
+    (2, 3), (3, 4), (4, 3),          # SCC {3,4}
+    (5, 6),                          # singletons
+    (7, 7),                          # self-loop singleton
+]
+# 0<->1 -> 2<->3 -> 4<->5: nothing trims, and each outer round peels only
+# the pair holding the minimum remaining id, so it takes three rounds
+SCC_PAIR_CHAIN = [(0, 1), (1, 0), (1, 2), (2, 3), (3, 2), (3, 4), (4, 5),
+                  (5, 4)]
+
+
+def _random_edges(n, m, seed):
+    import random
+
+    rng = random.Random(seed)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+PAIRS = {0: 0, 1: 0, 2: 2, 3: 2, 4: 4, 5: 4}
+
+
+@pytest.mark.parametrize("edges,n_nodes,want", [
+    (SCC_MIXED, 9, {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5, 6: 6, 7: 7, 8: 8}),
+    (SCC_PAIR_CHAIN, 6, PAIRS),
+    ([(5 - a, 5 - b) for a, b in SCC_PAIR_CHAIN], 6, PAIRS),  # ids reversed
+    ([(i, (i + 1) % 12) for i in range(12)], 12, dict.fromkeys(range(12), 0)),
+    ([(6 * k + j, 6 * k + j + 1) for k in range(200) for j in range(5)],
+     1200, {i: i for i in range(1200)}),                 # DAG of 6-chains
+    (_random_edges(60, 120, seed=7), 60, None),
+], ids=["mixed", "pair-chain", "pair-chain-reversed", "cycle12",
+        "dag-chains", "random60"])
+def test_scc_local_matches_distributed(spark, edges, n_nodes, want):
     from neo4j_graph_data_science_spark.operators.scc import SccConfig, scc
 
-    # two cycles bridged one-way, a chain, a self-loop, an isolate
-    edges = [
-        (0, 1), (1, 2), (2, 0),          # SCC {0,1,2}
-        (2, 3), (3, 4), (4, 3),          # SCC {3,4}
-        (5, 6),                          # singletons
-        (7, 7),                          # self-loop singleton
-    ]
-    g = from_edge_list(spark, edges, n_nodes=9)
+    g = from_edge_list(spark, edges, n_nodes=n_nodes)
     loc = scc(g, SccConfig(small_graph_edges=FORCE_LOCAL))
     dist = scc(g, SccConfig(small_graph_edges=FORCE_DIST))
     cl = {r["id"]: r["component"] for r in loc.collect()}
     cd = {r["id"]: r["component"] for r in dist.collect()}
+    assert len(cd) == n_nodes
     assert cl == cd
-    assert cl[0] == cl[1] == cl[2] == 0 and cl[3] == cl[4] == 3
-    assert cl[5] == 5 and cl[6] == 6 and cl[7] == 7 and cl[8] == 8
+    if want is not None:
+        assert cd == want
 
 
 # self-loops (3,3) and (6,6), a parallel (0,1) and reciprocal (1,0)/(2,1)

@@ -151,14 +151,18 @@ def test_article_rank_and_eigenvector_shapes(spark):
 def test_pagerank_check_every_batching_parity(spark):
     """check_every>1 chains supersteps into one job per boundary; a
     fixed-iteration run must be numerically identical to the classic
-    one-action-per-superstep loop."""
+    one-action-per-superstep loop. Pinned to the distributed loop: the
+    driver kernel has no boundaries to batch."""
     from pyspark.sql import functions as F
 
     g = from_edge_list(spark, WIKI_EDGES, n_nodes=11)
-    r1 = page_rank(g, PageRankConfig(max_iterations=12, tolerance=0.0))
+    r1 = page_rank(g, PageRankConfig(max_iterations=12, tolerance=0.0,
+                                     small_graph_edges=0))
     r4 = page_rank(g, PageRankConfig(max_iterations=12, tolerance=0.0,
-                                     check_every=4))
+                                     check_every=4, small_graph_edges=0))
     assert r1.iterations == r4.iterations == 12
+    assert [m["supersteps"] for m in r4.metrics] == [4, 4, 3]
+    assert all(m["vertices"] == 11 for m in r1.metrics + r4.metrics)
     diff = (r1.state.join(r4.state.withColumnRenamed("score", "s4"), "id")
             .agg(F.max(F.abs(F.col("score") - F.col("s4")))).collect()[0][0])
     assert diff < 1e-12
