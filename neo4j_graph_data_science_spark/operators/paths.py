@@ -10,12 +10,24 @@ Reference semantics:
     frontier relaxation -- exactly delta-stepping with a single unbounded
     bucket. For non-negative weights the fixpoint equals Dijkstra's output.
 
-Spark plan per round: frontier (vertices whose dist improved) joins the
-src-partitioned edges, candidate dists combine per dst with a min-reducer
-(one map-side-combined shuffle -- the ReducingMessenger), then fold into
-state with least(). Rounds = graph diameter for BFS / #relaxation waves for
-SSSP. Scale: frontier is a filtered state DF, so message volume tracks the
-active set, not V; hubs are handled by the min-combiner + AQE.
+One relaxation step (``_relax``): the frontier (the state rows allowed to
+send) joins the src-partitioned edges, candidate dists combine per dst with
+a min-reducer (plans/pregel.reduced_messages: one map-side-combined shuffle
+-- the ReducingMessenger), then fold into state with least(). BFS, SSSP,
+Bellman-Ford with and without predecessors, the target-pruned search behind
+Dijkstra/A* and delta-stepping's light and heavy passes all run it; they
+differ only in which rows send and which columns ride along (the A* bound
+``h``, ``pred``, delta's pending set). DAG longest path (max-plus) and Yen's
+(walker, id)-keyed spur search keep their own message blocks.
+
+Every fixpoint loop and the pred-chain walk (``_walk_preds``) run on
+plans/pregel.run_pregel: one observed lineage cut per boundary, superseded
+cuts released, AQE off and the shuffle width pinned to the edges'. Each
+loop's stop test is a stat observed on the boundary's cut, so a round
+costs no separate emptiness action. Rounds = graph diameter for BFS /
+#relaxation waves for SSSP. Scale: frontier is a filtered state DF, so
+message volume tracks the active set, not V; hubs are handled by the
+min-combiner.
 """
 
 from __future__ import annotations
@@ -23,16 +35,18 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
-from ..plans.checkpoint import truncate_mem
+from ..plans.checkpoint import release, truncate_mem
 from ..plans.local_kernel import (
     LOCAL_PATHS_MAX_EDGES, local_dijkstra_paths, local_relax_dist,
     should_run_local,
 )
-from ..plans.pregel import PregelConfig, prepare_edges, run_pregel
+from ..plans.pregel import (
+    PregelConfig, PregelResult, prepare_edges, reduced_messages, run_pregel,
+)
 
 INF = float("inf")
 
@@ -41,7 +55,6 @@ INF = float("inf")
 class PathConfig:
     max_iterations: int = 200
     weighted: bool = False
-    partitions: int | None = None
     # subcritical fast path (plans/local_kernel.py): dist-only ops (bfs /
     # shortest_paths) default to the 2M-edge kernel threshold; the
     # with-paths ops (dijkstra/astar) default to the tighter
@@ -49,34 +62,66 @@ class PathConfig:
     small_graph_edges: int | None = None
 
 
-def _relax_loop(edges: DataFrame, state0: DataFrame, cost, max_iters: int) -> DataFrame:
-    """Generic relaxation: state (id, dist, changed); cost = Column over the
-    joined (edge, src-state) row giving the candidate dist at dst."""
+def _seeded(nodes: DataFrame, is_source: Column) -> DataFrame:
+    """(id, dist, changed): dist 0 and changed at the sources, +inf and
+    unchanged elsewhere."""
+    return nodes.select(
+        "id",
+        F.when(is_source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
+        is_source.alias("changed"),
+    )
+
+
+def _relax(edges: DataFrame, state: DataFrame, frontier: DataFrame,
+           cost: Column | None = None, pending: Column | None = None
+           ) -> DataFrame:
+    """One min-plus relaxation superstep over an (id, dist, changed, ...)
+    ``state``: every ``frontier`` row (a filter of ``state``) sends
+    dist + ``cost`` (default: the edge weight) along its out-edges, the
+    candidates combine per dst with min, and fold in with least(). With a
+    ``pred`` column the reducer is the least (candidate, src), so pred
+    follows the argmin. ``changed`` marks the rows this step improved, or
+    that stay ``pending`` (a Column over the old row). Every other column
+    rides along unchanged."""
+    has_pred = "pred" in state.columns
+    cand = F.col("_sd") + (F.col(W) if cost is None else cost)
+    msgs = reduced_messages(
+        edges, frontier.select("id", F.col("dist").alias("_sd")),
+        F.struct(cand.alias("c"), F.col(SRC).alias("p")) if has_pred else cand,
+        "min")
+    c = F.col("msg.c") if has_pred else F.col("msg")
+    better = F.coalesce(c, F.lit(INF)) < F.col("dist")
+    ride = [F.when(better, F.col("msg.p")).otherwise(F.col("pred")).alias("pred")
+            if col == "pred" else col
+            for col in state.columns if col not in ("id", "dist", "changed")]
+    return state.join(msgs, "id", "left").select(
+        "id",
+        F.least(F.col("dist"), F.coalesce(c, F.col("dist"))).alias("dist"),
+        (better if pending is None else better | pending).alias("changed"),
+        *ride,
+    )
+
+
+def _any_changed() -> list[Column]:
+    return [F.max(F.col("changed").cast("int"))]
+
+
+def _none_changed(row: tuple, it: int) -> bool:
+    return not row[1]
+
+
+def _relax_fixpoint(edges: DataFrame, state0: DataFrame, max_iterations: int,
+                    cost: Column | None = None) -> PregelResult:
+    """``_relax`` from the changed rows on run_pregel until no row changes
+    or ``max_iterations`` supersteps ran (``converged`` tells which)."""
 
     def superstep(state: DataFrame, it: int) -> DataFrame:
         frontier = state.filter(F.col("changed") & (F.col("dist") != INF))
-        cands = (
-            edges.join(
-                frontier.select(F.col("id").alias(SRC), F.col("dist").alias("_sd")), SRC
-            )
-            .select(F.col(DST).alias("id"), cost.alias("_cand"))
-            .groupBy("id")
-            .agg(F.min("_cand").alias("cand"))
-        )
-        return (
-            state.join(cands, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
-                (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
-            )
-        )
+        return _relax(edges, state, frontier, cost)
 
-    res = run_pregel(edges, state0, superstep,
-                     PregelConfig(max_iterations=max_iters),
-                     stats=[F.max(F.col("changed").cast("int"))],
-                     converged_stats=lambda row, it: not row[1])
-    return res.state.select("id", "dist")
+    return run_pregel(edges, state0, superstep,
+                      PregelConfig(max_iterations=max_iterations),
+                      stats=_any_changed(), converged_stats=_none_changed)
 
 
 def bfs(graph: SparkGraph, sources: Sequence[int],
@@ -86,19 +131,14 @@ def bfs(graph: SparkGraph, sources: Sequence[int],
     eset = register_cache(graph.edges.select(SRC, DST).distinct().persist())
     local, _ = should_run_local(eset, graph.nodes, cfg.small_graph_edges,
                                 None)
-    src_list = [int(s) for s in sources]
-    state0 = graph.nodes.select(
-        "id",
-        F.when(F.col("id").isin(src_list), F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-        F.col("id").isin(src_list).alias("changed"),
-    )
+    state0 = _seeded(graph.nodes, F.col("id").isin([int(s) for s in sources]))
     if local:
         out = local_relax_dist(eset, state0.select("id", "dist"),
                                cfg.max_iterations, hop_cost=True)
         eset.unpersist()
         return out.select("id", F.col("dist").cast("long").alias("dist"))
-    edges = prepare_edges(eset, cfg.partitions)
-    out = _relax_loop(edges, state0, F.col("_sd") + F.lit(1.0), cfg.max_iterations)
+    edges = prepare_edges(eset)
+    out = _relax_fixpoint(edges, state0, cfg.max_iterations, F.lit(1.0)).state
     edges.unpersist()
     eset.unpersist()
     return out.filter(F.col("dist") != INF).select(
@@ -121,28 +161,21 @@ def shortest_paths(graph: SparkGraph, sources: Sequence[int] | DataFrame,
             F.col(sources.columns[0]).cast("long").alias("id"),
             F.lit(True).alias("_is_src"),
         ).distinct()
-        state0 = graph.nodes.select("id").join(src_df, "id", "left").select(
-            "id",
-            F.when(F.col("_is_src"), F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-            F.coalesce("_is_src", F.lit(False)).alias("changed"),
-        )
+        state0 = _seeded(graph.nodes.select("id").join(src_df, "id", "left"),
+                         F.coalesce("_is_src", F.lit(False)))
     else:
-        src_list = [int(s) for s in sources]
-        state0 = graph.nodes.select(
-            "id",
-            F.when(F.col("id").isin(src_list), F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-            F.col("id").isin(src_list).alias("changed"),
-        )
+        state0 = _seeded(graph.nodes,
+                         F.col("id").isin([int(s) for s in sources]))
     if local:
         out = local_relax_dist(e, state0.select("id", "dist"),
                                cfg.max_iterations)
         e.unpersist()
         return out
-    edges = prepare_edges(e, cfg.partitions)
-    out = _relax_loop(edges, state0, F.col("_sd") + F.col(W), cfg.max_iterations)
+    edges = prepare_edges(e)
+    out = _relax_fixpoint(edges, state0, cfg.max_iterations).state
     edges.unpersist()
     e.unpersist()
-    return out.filter(F.col("dist") != INF)
+    return out.filter(F.col("dist") != INF).select("id", "dist")
 
 
 def collapse_path(graph: SparkGraph, rel_types: Sequence[str],
@@ -178,6 +211,8 @@ def topological_sort(graph: SparkGraph, max_iterations: int = 10000) -> DataFram
     # previous round's DataFrames multiple times, so without a true cut
     # the logical plan tree doubles every round and Catalyst
     # analysis time grows exponentially (the classic iterative-DF pitfall).
+    # The layers are the result; every other cut is released once the next
+    # round's replaces it.
     edges = graph.edges.select(SRC, DST).filter(F.col(SRC) != F.col(DST)) \
         .distinct().transform(truncate_mem)
     remaining = graph.nodes.select("id").transform(truncate_mem)
@@ -186,12 +221,18 @@ def topological_sort(graph: SparkGraph, max_iterations: int = 10000) -> DataFram
         has_in = edges.select(F.col(DST).alias("id")).distinct()
         layer = remaining.join(has_in, "id", "left_anti").transform(truncate_mem)
         if layer.count() == 0:
+            release(layer)
             break
         levels.append(layer.select("id", F.lit(level).cast("long").alias("level")))
-        remaining = remaining.join(layer, "id", "left_anti") \
+        rest = remaining.join(layer, "id", "left_anti").transform(truncate_mem)
+        release(remaining)
+        remaining = rest
+        rest = edges.join(layer.withColumnRenamed("id", SRC), SRC, "left_anti") \
             .transform(truncate_mem)
-        edges = edges.join(layer.withColumnRenamed("id", SRC), SRC, "left_anti") \
-            .transform(truncate_mem)
+        release(edges)
+        edges = rest
+    release(remaining)
+    release(edges)
     if not levels:
         return graph.nodes.select("id", F.lit(0).cast("long").alias("level")).limit(0)
     out = levels[0]
@@ -219,91 +260,107 @@ def _deterministic_predecessors(edges: DataFrame, dist: DataFrame) -> DataFrame:
     )
 
 
-def _reconstruct_paths(dist: DataFrame, preds: DataFrame, source: int,
-                       max_len: int = 200) -> DataFrame:
-    """(target, total_cost, node_ids): backtrack pred pointers from every
-    reachable target to the source; O(max path length) joins."""
-    walk = (
-        dist.filter((F.col("dist") != INF) & (F.col("id") != source))
-        .select(F.col("id").alias("target"), F.col("dist").alias("total_cost"),
-                F.col("id").alias("_cur"), F.array("id").alias("node_ids"))
-        .transform(truncate_mem)
-    )
-    done = []
-    pmap = preds.select(F.col("id").alias("_cur"), "pred").transform(truncate_mem)
-    for _ in range(max_len):
-        if walk.isEmpty():
-            break
-        walk = (
-            walk.join(pmap, "_cur")
-            .select("target", "total_cost", F.col("pred").alias("_cur"),
-                    F.concat(F.array("pred"), "node_ids").alias("node_ids"))
-            .transform(truncate_mem)
+def _walk_preds(seeds: DataFrame, pmap: DataFrame, max_len: int,
+                keys: Sequence[str] = ()) -> DataFrame:
+    """The pred-chain walk of dijkstra, astar, Yen's spur search and DAG
+    longest path, one hop per run_pregel superstep. Every seed row
+    (*keys, target, total_cost, arrived) starts the path [target] and
+    prepends pred(_cur) from ``pmap`` (*keys, _cur, pred, _stop) until it
+    lands on a pred whose ``_stop`` is set. A row whose chain dead-ends,
+    or that is still walking after ``max_len`` hops, is dropped. Returns
+    (*keys, target, total_cost, node_ids) of the arrived rows."""
+    keys = list(keys)
+    pmap = pmap.transform(truncate_mem)
+    walk0 = seeds.select(*keys, "target", "total_cost",
+                         F.col("target").alias("_cur"),
+                         F.array("target").alias("node_ids"), "arrived")
+
+    def hop(walk: DataFrame, it: int) -> DataFrame:
+        moved = (
+            walk.filter(~F.col("arrived")).join(pmap, keys + ["_cur"])
+            .select(*keys, "target", "total_cost", F.col("pred").alias("_cur"),
+                    F.concat(F.array("pred"), "node_ids").alias("node_ids"),
+                    F.col("_stop").alias("arrived"))
         )
-        arrived = walk.filter(F.col("_cur") == source)
-        done.append(arrived.select("target", "total_cost", "node_ids"))
-        walk = walk.filter(F.col("_cur") != source)
-    if not done:
-        schema_df = dist.sparkSession.createDataFrame(
-            [], "target long, total_cost double, node_ids array<bigint>")
-        return schema_df
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    return out
+        return walk.filter("arrived").unionByName(moved)
+
+    res = run_pregel(pmap, walk0, hop, PregelConfig(max_iterations=max_len),
+                     stats=[F.min(F.col("arrived").cast("int"))],
+                     converged_stats=lambda row, it: row[1] != 0)
+    release(pmap)
+    return res.state.filter("arrived").select(*keys, "target", "total_cost",
+                                              "node_ids")
+
+
+def _source_walk(dist: DataFrame, preds: DataFrame, source: int,
+                 max_len: int) -> DataFrame:
+    """(target, total_cost, node_ids): the path from ``source`` to every
+    other ``dist`` row, backtracked along ``preds`` (id, pred)."""
+    seeds = dist.filter(F.col("id") != source).select(
+        F.col("id").alias("target"), F.col("dist").alias("total_cost"),
+        F.lit(False).alias("arrived"))
+    pmap = preds.select(F.col("id").alias("_cur"), "pred",
+                        (F.col("pred") == source).alias("_stop"))
+    return _walk_preds(seeds, pmap, max_len)
+
+
+def _with_costs(paths: DataFrame, dist: DataFrame,
+                keys: Sequence[str] = ()) -> DataFrame:
+    """``paths`` (*keys, target, ..., node_ids) plus ``costs``: the dist of
+    each path node, in path order."""
+    keys = list(keys)
+    dmap = dist.select(*keys, F.col("id").alias("_n"), F.col("dist").alias("_nd"))
+    costs = (
+        paths.select(*keys, "target", F.posexplode("node_ids").alias("pos", "_n"))
+        .join(dmap, keys + ["_n"])
+        .groupBy(*keys, "target")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "_nd"))).alias("_pc"))
+        .select(*keys, "target", F.col("_pc._nd").alias("costs"))
+    )
+    return paths.join(costs, keys + ["target"])
 
 
 def _target_pruned_dist(nodes: DataFrame, edges: DataFrame, source: int,
                         target: int, max_iterations: int,
                         heuristic: DataFrame | None = None) -> DataFrame:
-    """Branch-and-bound pruned relaxation toward one target: a frontier row
-    is expanded only while dist(v) + h(v) < best known target distance,
-    with best_t kept IN the plan (1-row broadcast cross join) so each
-    superstep costs exactly one action (the emptiness check). Exact for the
-    target, and — for h=0 and strictly positive weights — exact for EVERY
-    node with true distance < dist(target) (the only nodes a target
-    pred-chain backtrack can touch). Returns the raw pruned (id, dist)
-    state: distances of nodes at/beyond the target's distance may be
-    overestimates and must be filtered by the caller before pred
-    derivation."""
-    state = nodes.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-        (F.col("id") == source).alias("changed"),
-    ).transform(truncate_mem)
-    h = (heuristic.select("id", F.col("h").cast("double"))
-         if heuristic is not None else None)
-    for _ in range(max_iterations):
-        best_t = (state.filter(F.col("id") == target)
-                  .select(F.col("dist").alias("_best_t")))
-        frontier = state.filter(F.col("changed") & (F.col("dist") != INF))
-        if h is not None:
-            frontier = frontier.join(h, "id", "left").fillna(0.0, ["h"])
-        else:
-            frontier = frontier.withColumn("h", F.lit(0.0))
-        frontier = (
-            frontier.crossJoin(F.broadcast(best_t))
-            .filter(F.col("dist") + F.col("h") < F.col("_best_t"))
-            .drop("_best_t", "h")
-        )
-        if frontier.isEmpty():
-            break
-        cands = (
-            edges.join(frontier.select(F.col("id").alias(SRC),
-                                       F.col("dist").alias("_sd")), SRC)
-            .select(F.col(DST).alias("id"), (F.col("_sd") + F.col(W)).alias("_cand"))
-            .groupBy("id").agg(F.min("_cand").alias("cand"))
-        )
-        state = (
-            state.join(cands, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
-                (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
-            )
-            .transform(truncate_mem)
-        )
-    return state.select("id", "dist").filter(F.col("dist") != INF)
+    """Branch-and-bound pruned relaxation toward one target on run_pregel:
+    a changed row sends only while dist(v) + h(v) < dist(target), the
+    target's current distance read in the plan (a 1-row broadcast), and
+    the loop stops at the first boundary where no changed row passes that
+    test -- min(dist + h) over the changed rows and dist(target) are
+    observed on the boundary's cut. h (0 without a heuristic) rides along
+    in the state. Exact for the target, and — for h=0 and strictly positive
+    weights — exact for EVERY node with true distance < dist(target) (the
+    only nodes a target pred-chain backtrack can touch). Returns the raw
+    pruned (id, dist) state: distances of nodes at/beyond the target's
+    distance may be overestimates and must be filtered by the caller before
+    pred derivation."""
+    state0 = _seeded(nodes, F.col("id") == source)
+    if heuristic is not None:
+        state0 = state0.join(heuristic.select("id", F.col("h").cast("double")),
+                             "id", "left").fillna(0.0, ["h"])
+    else:
+        state0 = state0.withColumn("h", F.lit(0.0))
+    is_target = F.col("id") == target
+
+    def superstep(state: DataFrame, it: int) -> DataFrame:
+        best = state.filter(is_target).select(F.col("dist").alias("_bt"))
+        frontier = (state.filter(F.col("changed") & (F.col("dist") != INF))
+                    .crossJoin(F.broadcast(best))
+                    .filter(F.col("dist") + F.col("h") < F.col("_bt")))
+        return _relax(edges, state, frontier)
+
+    def pruned_out(row: tuple, it: int) -> bool:
+        lowest, best = row[1], row[2]
+        return lowest is None or best is None or lowest >= best
+
+    res = run_pregel(
+        edges, state0, superstep, PregelConfig(max_iterations=max_iterations),
+        stats=[F.min(F.when(F.col("changed") & (F.col("dist") != INF),
+                            F.col("dist") + F.col("h"))),
+               F.min(F.when(is_target, F.col("dist")))],
+        converged_stats=pruned_out)
+    return res.state.select("id", "dist").filter(F.col("dist") != INF)
 
 
 def dijkstra(graph: SparkGraph, source: int, target: int | None = None,
@@ -337,6 +394,7 @@ def dijkstra(graph: SparkGraph, source: int, target: int | None = None,
         # pure fixed cost on subcritical spur graphs
         out = local_dijkstra_paths(e, graph.nodes.select("id"), source,
                                    target, cfg.max_iterations)
+        release(e)
         return out.select(F.lit(source).cast("long").alias("source"),
                           "target", "total_cost", "node_ids", "costs")
     pruned_ok = False
@@ -344,7 +402,7 @@ def dijkstra(graph: SparkGraph, source: int, target: int | None = None,
         wmin = e.agg(F.min(W).alias("_w")).collect()[0]["_w"]
         pruned_ok = wmin is not None and wmin > 0
     if pruned_ok:
-        edges = prepare_edges(e, cfg.partitions)
+        edges = prepare_edges(e)
         raw = _target_pruned_dist(graph.nodes.select("id"), edges, source,
                                   int(target), cfg.max_iterations)
         edges.unpersist()
@@ -358,25 +416,16 @@ def dijkstra(graph: SparkGraph, source: int, target: int | None = None,
                 .select("id", "dist").transform(truncate_mem))
     else:
         dist = shortest_paths(graph, [source], cfg)
-    preds = _deterministic_predecessors(e, dist)
     # with a single target, backtrack ONLY its pred chain (a 1-row walk per
     # hop) instead of every reachable node's -- Yen's runs one dijkstra per
     # spur candidate, so this is its inner-loop cost
     seed = dist if target is None else dist.filter(F.col("id") == target)
-    paths = _reconstruct_paths(seed, preds, source, cfg.max_iterations)
-    dmap = dist.select(F.col("id").alias("_n"), F.col("dist").alias("_nd"))
-    costs = (
-        paths.select("target", F.posexplode("node_ids").alias("pos", "_n"))
-        .join(dmap, "_n")
-        .groupBy("target")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "_nd"))).alias("_pc"))
-        .select("target", F.col("_pc._nd").alias("costs"))
-    )
-    return (
-        paths.join(costs, "target")
-        .select(F.lit(source).cast("long").alias("source"), "target",
-                "total_cost", "node_ids", "costs")
-    )
+    paths = _source_walk(seed, _deterministic_predecessors(e, dist), source,
+                         cfg.max_iterations)
+    release(e)
+    return _with_costs(paths, dist).select(
+        F.lit(source).cast("long").alias("source"), "target", "total_cost",
+        "node_ids", "costs")
 
 
 def astar(graph: SparkGraph, source: int, target: int,
@@ -403,33 +452,32 @@ def astar(graph: SparkGraph, source: int, target: int,
         e.unpersist()
         return out.select(F.lit(source).cast("long").alias("source"),
                           "target", "total_cost", "node_ids")
-    edges = prepare_edges(e, cfg.partitions)
+    edges = prepare_edges(e)
     dist = _target_pruned_dist(graph.nodes.select("id"), edges, source,
                                target, cfg.max_iterations, heuristic=heuristic)
     edges.unpersist()
-    e2 = graph.aggregated_edges("MIN")
-    preds = _deterministic_predecessors(e2, dist)
-    out = (
-        _reconstruct_paths(dist, preds, source, cfg.max_iterations)
-        .filter(F.col("target") == target)
-        .select(F.lit(source).cast("long").alias("source"), "target",
-                "total_cost", "node_ids")
-    )
+    out = _source_walk(dist.filter(F.col("id") == target),
+                       _deterministic_predecessors(e, dist), source,
+                       cfg.max_iterations)
     e.unpersist()
-    return out
+    return out.select(F.lit(source).cast("long").alias("source"), "target",
+                      "total_cost", "node_ids")
 
 
 def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
                          cfg: PathConfig) -> dict[int, tuple]:
     """ALL spur candidates of one Yen's k-iteration as ONE multi-source,
-    per-walker-masked Dijkstra (round-4 verdict #5). Walker w starts at
-    its spur node carrying its own excluded-node/edge masks (a broadcast
-    walker table); every walker relaxes in the SAME per-superstep job and
-    is target-pruned independently, and a single collect at the end
-    returns every spur path -- replacing the per-spur dijkstra().collect()
-    loop, where each spur paid full Spark job latency per superstep AND
-    per spur. Requires strictly positive weights (caller checks; GDS Yens
-    is Dijkstra-backed with the same requirement, paths/yens/Yens.java).
+    per-walker-masked Dijkstra on run_pregel. Walker w starts at its spur
+    node carrying its own excluded-node/edge masks (a broadcast walker
+    table); every walker relaxes in the SAME superstep and is
+    target-pruned independently (a changed row sends only while its dist is
+    below its walker's target distance; the loop stops at the first
+    superstep that changes no row), and a single collect at the end
+    returns every spur path -- replacing the per-spur
+    dijkstra().collect() loop, where each spur paid full Spark job latency
+    per superstep AND per spur. ``edges`` are the prepared (src-partitioned)
+    edges. Requires strictly positive weights (caller checks; GDS Yens is
+    Dijkstra-backed with the same requirement, paths/yens/Yens.java).
 
     ``walkers``: [{"wid", "spur", "exn": [node...], "exe": [(u, v)...]}].
     Returns {wid: (total_cost, node_ids, costs)} for walkers that reached
@@ -442,19 +490,17 @@ def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
         "exe array<struct<u:long,v:long>>"))
     edge_key = F.struct(F.col(SRC).alias("u"), F.col(DST).alias("v"))
     # sparse per-walker state: only discovered (wid, id) rows exist
-    state = spark.createDataFrame(
+    state0 = spark.createDataFrame(
         [(w["wid"], int(w["spur"]), 0.0, True) for w in walkers],
         "wid long, id long, dist double, changed boolean",
-    ).transform(truncate_mem)
-    for _ in range(cfg.max_iterations):
-        best_t = (state.filter(F.col("id") == target)
-                  .select("wid", F.col("dist").alias("_bt")))
+    )
+
+    def superstep(state: DataFrame, it: int) -> DataFrame:
+        best = (state.filter(F.col("id") == target)
+                .select("wid", F.col("dist").alias("_bt")))
         frontier = (state.filter("changed")
-                    .join(F.broadcast(best_t), "wid", "left")
-                    .filter(F.col("dist") < F.coalesce("_bt", F.lit(INF)))
-                    .select("wid", "id", "dist"))
-        if frontier.isEmpty():
-            break
+                    .join(F.broadcast(best), "wid", "left")
+                    .filter(F.col("dist") < F.coalesce("_bt", F.lit(INF))))
         cands = (
             edges.join(frontier.select("wid", F.col("id").alias(SRC),
                                        F.col("dist").alias("_sd")), SRC)
@@ -465,15 +511,19 @@ def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
                     (F.col("_sd") + F.col(W)).alias("_cand"))
             .groupBy("wid", "id").agg(F.min("_cand").alias("cand"))
         )
-        state = (
+        return (
             state.join(cands, ["wid", "id"], "full")
             .select("wid", "id",
                     F.least(F.coalesce("dist", F.lit(INF)),
                             F.coalesce("cand", F.lit(INF))).alias("dist"),
                     (F.coalesce("cand", F.lit(INF))
                      < F.coalesce("dist", F.lit(INF))).alias("changed"))
-            .transform(truncate_mem)
         )
+
+    state = run_pregel(edges, state0, superstep,
+                       PregelConfig(max_iterations=cfg.max_iterations),
+                       stats=_any_changed(),
+                       converged_stats=_none_changed).state
     # exact-set filter (positive weights): per walker keep nodes strictly
     # closer than its target plus the target row; walkers that never
     # reached the target drop out here
@@ -482,51 +532,25 @@ def _multi_spur_dijkstra(edges: DataFrame, walkers: list[dict], target: int,
     dist = (state.join(F.broadcast(bt), "wid")
             .filter((F.col("dist") < F.col("_bt")) | (F.col("id") == target))
             .select("wid", "id", "dist").transform(truncate_mem))
+    release(state)
     du = dist.select("wid", F.col("id").alias(SRC), F.col("dist").alias("_du"))
     dv = dist.select("wid", F.col("id").alias(DST), F.col("dist").alias("_dv"))
-    preds = (
+    pmap = (
         edges.join(du, SRC).join(dv, ["wid", DST])
         .join(masks, "wid")
         .filter(~F.array_contains(F.col("exe"), edge_key))
         .filter(F.abs(F.col("_du") + F.col(W) - F.col("_dv")) < 1e-9)
-        .groupBy("wid", F.col(DST).alias("id"))
+        .groupBy("wid", F.col(DST).alias("_cur"))
         .agg(F.min(SRC).alias("pred"))
+        .join(masks.select("wid", "spur"), "wid")
+        .select("wid", "_cur", "pred", (F.col("pred") == F.col("spur")).alias("_stop"))
     )
-    pmap = preds.select("wid", F.col("id").alias("_cur"),
-                        "pred").transform(truncate_mem)
-    spur_map = masks.select("wid", F.col("spur").alias("_spur"))
-    walk = (dist.filter(F.col("id") == target)
-            .select("wid", F.col("dist").alias("total_cost"),
-                    F.col("id").alias("_cur"), F.array("id").alias("node_ids"))
-            .transform(truncate_mem))
-    done = []
-    for _ in range(cfg.max_iterations):
-        if walk.isEmpty():
-            break
-        walk = (
-            walk.join(pmap, ["wid", "_cur"])
-            .select("wid", "total_cost", F.col("pred").alias("_cur"),
-                    F.concat(F.array("pred"), "node_ids").alias("node_ids"))
-            .join(spur_map, "wid")
-            .transform(truncate_mem)
-        )
-        done.append(walk.filter(F.col("_cur") == F.col("_spur"))
-                    .select("wid", "total_cost", "node_ids"))
-        walk = walk.filter(F.col("_cur") != F.col("_spur")).drop("_spur")
-    if not done:
-        return {}
-    arrived = done[0]
-    for d in done[1:]:
-        arrived = arrived.unionByName(d)
-    costs = (
-        arrived.select("wid", F.posexplode("node_ids").alias("pos", "_n"))
-        .join(dist.select("wid", F.col("id").alias("_n"),
-                          F.col("dist").alias("_nd")), ["wid", "_n"])
-        .groupBy("wid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "_nd"))).alias("_pc"))
-        .select("wid", F.col("_pc._nd").alias("costs"))
-    )
-    rows = arrived.join(costs, "wid").collect()  # ONE collect per k-iteration
+    seeds = dist.filter(F.col("id") == target).select(
+        "wid", F.col("id").alias("target"), F.col("dist").alias("total_cost"),
+        F.lit(False).alias("arrived"))
+    arrived = _walk_preds(seeds, pmap, cfg.max_iterations, keys=["wid"])
+    rows = _with_costs(arrived, dist, keys=["wid"]).collect()  # ONE collect
+    release(dist)
     return {int(r["wid"]): (float(r["total_cost"]), list(r["node_ids"]),
                             [float(c) for c in r["costs"]]) for r in rows}
 
@@ -560,10 +584,11 @@ def yens(graph: SparkGraph, source: int, target: int, k: int = 3,
         edges_base, graph.nodes,
         (LOCAL_PATHS_MAX_EDGES if cfg.small_graph_edges is None
          else cfg.small_graph_edges), None)
-    batched = not subcritical
-    if batched:
+    edges = None
+    if not subcritical:
         wmin = edges_base.agg(F.min(W)).collect()[0][0]
-        batched = wmin is not None and wmin > 0
+        if wmin is not None and wmin > 0:
+            edges = prepare_edges(edges_base)
 
     def merge_candidate(i, root, costs_prev, spur_result):
         total_cost_sp, nids, costs_sp = spur_result
@@ -588,8 +613,8 @@ def yens(graph: SparkGraph, source: int, target: int, k: int = 3,
                        if len(p) > i + 1 and p[:i + 1] == root}
             walkers.append({"wid": i, "spur": spur, "exn": sorted(root_set),
                             "exe": sorted(removed), "root": root})
-        if batched:
-            res = _multi_spur_dijkstra(edges_base, walkers, target, cfg)
+        if edges is not None:
+            res = _multi_spur_dijkstra(edges, walkers, target, cfg)
             for w in walkers:
                 if w["wid"] in res:
                     merge_candidate(w["wid"], w["root"], costs_prev,
@@ -616,7 +641,9 @@ def yens(graph: SparkGraph, source: int, target: int, k: int = 3,
             break
         candidates.sort(key=lambda t: (t[0], t[1]))
         paths.append(candidates.pop(0))
-    edges_base.unpersist()
+    if edges is not None:
+        edges.unpersist()
+    release(edges_base)
     rows = [(i, source, p[-1], c, p) for i, (c, p, _) in enumerate(paths)]
     return graph.nodes.sparkSession.createDataFrame(
         rows, "index long, source long, target long, total_cost double, "
@@ -626,105 +653,55 @@ def yens(graph: SparkGraph, source: int, target: int, k: int = 3,
 def bellman_ford(graph: SparkGraph, source: int,
                  config: PathConfig | None = None) -> DataFrame:
     """(id, dist, in_negative_cycle): Bellman-Ford with negative-cycle
-    detection (paths/bellmanford/BellmanFord.java:49). Nodes still relaxing
-    after V rounds are on / downstream of a negative cycle; their dist is
-    reported as -inf, like the reference marks negative-cycle results."""
+    detection (paths/bellmanford/BellmanFord.java:49). A negative cycle is
+    reachable exactly when the relaxation has not converged after V+1
+    rounds; the nodes still relaxing then, and everything reachable from
+    them, are reported with dist -inf, like the reference marks
+    negative-cycle results."""
     cfg = config or PathConfig()
     n = graph.nodes.count()
-    e = graph.aggregated_edges("MIN")
-    edges = prepare_edges(e, cfg.partitions)
-    state = graph.nodes.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-        (F.col("id") == source).alias("changed"),
-    ).transform(truncate_mem)
-    changed_after_v = False
-    for rnd in range(n + 1):
-        frontier = state.filter(F.col("changed") & (F.col("dist") != INF))
-        if frontier.isEmpty():
-            break
-        cands = (
-            edges.join(frontier.select(F.col("id").alias(SRC),
-                                       F.col("dist").alias("_sd")), SRC)
-            .select(F.col(DST).alias("id"), (F.col("_sd") + F.col(W)).alias("_cand"))
-            .groupBy("id").agg(F.min("_cand").alias("cand"))
-        )
-        state = (
-            state.join(cands, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
-                (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
-            )
-            .transform(truncate_mem)
-        )
-        changed_after_v = rnd >= n - 1
+    edges = prepare_edges(graph.aggregated_edges("MIN"))
+    res = _relax_fixpoint(edges, _seeded(graph.nodes, F.col("id") == source),
+                          n + 1)
+    state = res.state
+    if res.converged:
+        edges.unpersist()
+        return state.select("id", "dist",
+                            F.lit(False).alias("in_negative_cycle"))
+    # the taint closure: hop-cost relaxation over the same edges from the
+    # still-changing rows (their true distance is unbounded below)
+    tainted = _relax_fixpoint(
+        edges, _seeded(state, F.col("changed")), cfg.max_iterations,
+        F.lit(1.0)).state
     edges.unpersist()
-    if changed_after_v and not state.filter(F.col("changed")).isEmpty():
-        # propagate the negative-cycle taint to everything reachable from
-        # still-changing nodes (their true distance is unbounded below):
-        # a BFS closure over the same edge set
-        seeds = state.filter(F.col("changed")).select("id")
-        tainted = bfs(graph, [r["id"] for r in seeds.collect()],
-                      PathConfig(max_iterations=cfg.max_iterations)).select("id")
-        return (
-            state.join(tainted.withColumn("_t", F.lit(True)), "id", "left")
-            .select(
-                "id",
-                F.when(F.col("_t"), F.lit(float("-inf"))).otherwise(F.col("dist"))
-                .alias("dist"),
-                F.coalesce("_t", F.lit(False)).alias("in_negative_cycle"),
-            )
+    return (
+        state.join(tainted.select("id", (F.col("dist") != INF).alias("_t")),
+                   "id")
+        .select(
+            "id",
+            F.when(F.col("_t"), F.lit(float("-inf"))).otherwise(F.col("dist"))
+            .alias("dist"),
+            F.col("_t").alias("in_negative_cycle"),
         )
-    return state.select("id", "dist", F.lit(False).alias("in_negative_cycle"))
+    )
 
 
-def _bf_pred_state(graph: SparkGraph, source: int,
-                   cfg: PathConfig) -> "tuple[DataFrame, int] | None":
-    """Shared Bellman-Ford relaxation with predecessor tracking: V+1
-    rounds of argmin-by-(candidate, src) relaxation; returns the final
-    ((id, dist, changed, pred) state, node count), or None when
-    relaxation converged (no negative cycle reachable from ``source``)."""
+def _bf_pred_state(graph: SparkGraph,
+                   source: int) -> "tuple[DataFrame, int] | None":
+    """Bellman-Ford relaxation with predecessor tracking (argmin by
+    (candidate, src)): the (id, dist, changed, pred) state after V+1
+    rounds and the node count V, or None when relaxation converged (no
+    negative cycle reachable from ``source``)."""
     n = graph.nodes.count()
-    e = graph.aggregated_edges("MIN")
-    edges = prepare_edges(e, cfg.partitions)
-    state = graph.nodes.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-        (F.col("id") == source).alias("changed"),
-        F.lit(None).cast("long").alias("pred"),
-    ).transform(truncate_mem)
-    for _ in range(n + 1):
-        frontier = state.filter(F.col("changed") & (F.col("dist") != INF))
-        if frontier.isEmpty():
-            edges.unpersist()
-            return None
-        cands = (
-            edges.join(frontier.select(F.col("id").alias(SRC),
-                                       F.col("dist").alias("_sd")), SRC)
-            .select(F.col(DST).alias("id"),
-                    F.struct((F.col("_sd") + F.col(W)).alias("c"),
-                             F.col(SRC).alias("p")).alias("_cp"))
-            .groupBy("id").agg(F.min("_cp").alias("_cp"))
-            .select("id", F.col("_cp.c").alias("cand"), F.col("_cp.p").alias("_np"))
-        )
-        state = (
-            state.join(cands, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
-                (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
-                F.when(F.coalesce("cand", F.lit(INF)) < F.col("dist"),
-                       F.col("_np")).otherwise(F.col("pred")).alias("pred"),
-            )
-            .transform(truncate_mem)
-        )
+    edges = prepare_edges(graph.aggregated_edges("MIN"))
+    state0 = _seeded(graph.nodes, F.col("id") == source) \
+        .withColumn("pred", F.lit(None).cast("long"))
+    res = _relax_fixpoint(edges, state0, n + 1)
     edges.unpersist()
-    return state, n
+    return None if res.converged else (res.state, n)
 
 
 def bellman_ford_negative_cycles(graph: SparkGraph, source: int,
-                                 config: PathConfig | None = None,
                                  max_walk: int = 400) -> DataFrame:
     """(index, node_ids, total_cost): an actual negative CYCLE as a node
     sequence (first == last), like the reference's NegativeCycle results
@@ -738,11 +715,10 @@ def bellman_ford_negative_cycles(graph: SparkGraph, source: int,
     from the seed with a 1-row distributed lookup per hop (the reference's
     walk is sequential too) until a node repeats, then normalized to start
     at its minimum member so the result is rotation-stable."""
-    cfg = config or PathConfig()
     spark = graph.nodes.sparkSession
     empty = spark.createDataFrame(
         [], "index long, node_ids array<bigint>, total_cost double")
-    res = _bf_pred_state(graph, source, cfg)
+    res = _bf_pred_state(graph, source)
     if res is None:
         return empty
     state, n = res
@@ -767,6 +743,7 @@ def bellman_ford_negative_cycles(graph: SparkGraph, source: int,
             break
         seen[p] = len(visited)
         visited.append(p)
+    release(pmap)
     if not cycle:
         return empty
     # rotation-normalize to start (and end) at the minimum member
@@ -784,7 +761,6 @@ def bellman_ford_negative_cycles(graph: SparkGraph, source: int,
 
 
 def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
-                                     config: PathConfig | None = None,
                                      max_walk: int = 400) -> DataFrame:
     """(index, node_ids, total_cost): EVERY negative cycle in the final
     predecessor graph, matching the reference's result type which carries
@@ -804,11 +780,10 @@ def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
 
     from .scc import scc
 
-    cfg = config or PathConfig()
     spark = graph.nodes.sparkSession
     empty = spark.createDataFrame(
         [], "index long, node_ids array<bigint>, total_cost double")
-    res = _bf_pred_state(graph, source, cfg)
+    res = _bf_pred_state(graph, source)
     if res is None:
         return empty
     state, _n = res
@@ -840,6 +815,8 @@ def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
                          F.col("start").alias("node"))
     active = starts.select("comp", "start", F.lit(0).alias("pos"),
                            F.col("start").alias("cur")).transform(truncate_mem)
+    # every hop's cut feeds `walk` until walk is cut below
+    hops_cut = [active]
     for _ in range(max_walk):
         if active.isEmpty():
             break
@@ -851,6 +828,7 @@ def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
                   .select("comp", "start", (F.col("pos") + 1).alias("pos"),
                           F.col("nxt").alias("cur"))
                   .transform(truncate_mem))
+        hops_cut.append(active)
     # a walker still active after max_walk hops never closed its cycle --
     # drop that component entirely rather than emitting a non-closed node
     # sequence with a partial cost (the single-cycle variant returns
@@ -859,6 +837,8 @@ def bellman_ford_all_negative_cycles(graph: SparkGraph, source: int,
         unfinished = active.select("comp").distinct()
         walk = walk.join(unfinished, "comp", "left_anti")
     walk = walk.transform(truncate_mem)
+    for df in hops_cut + [nxt_map, cyc_nodes, state]:
+        release(df)
     if walk.isEmpty():
         return empty
     # per-hop costs: consecutive (node, next-node) pairs join the edge set
@@ -884,68 +864,48 @@ def delta_stepping(graph: SparkGraph, source: int, delta: float = 2.0,
     """(id, dist): delta-stepping SSSP with real bucket scheduling
     (paths/delta/DeltaStepping.java:51): settle bucket b = [b*delta,
     (b+1)*delta) by repeated LIGHT-edge (w <= delta) relaxation inside the
-    bucket, then one HEAVY-edge pass, then advance to the next non-empty
-    bucket. Non-negative weights only."""
+    bucket (a run_pregel loop that stops once no member of b is pending),
+    then one HEAVY-edge pass, then advance to the next non-empty bucket.
+    Non-negative weights only.
+
+    ``changed`` is the PENDING (unsettled) set, not a per-round flag: nodes
+    outside the processed bucket keep their pending mark, nodes inside it
+    stay pending only if a relaxation improved them again. The HEAVY pass
+    sends from every settled member of b, pending or not: by the time the
+    light loop has emptied bucket b every member is un-pending, but their
+    heavy edges still must relax exactly once (DeltaStepping.java's
+    relaxHeavyEdges over the emptied bucket); heavy targets land in
+    buckets > b (w > delta), so this cannot re-open bucket b."""
     cfg = config or PathConfig()
     e = graph.aggregated_edges("MIN")
-    light = prepare_edges(e.filter(F.col(W) <= delta), cfg.partitions)
+    light = prepare_edges(e.filter(F.col(W) <= delta))
     heavy = e.filter(F.col(W) > delta).transform(truncate_mem)
-    state = graph.nodes.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-        (F.col("id") == source).alias("changed"),
-    ).transform(truncate_mem)
-
-    def relax(st: DataFrame, edge_df: DataFrame, in_bucket,
-              pending_only: bool = True) -> DataFrame:
-        # `changed` is the PENDING (unsettled) set, not a per-round flag:
-        # nodes outside the processed bucket keep their pending mark, nodes
-        # inside it stay pending only if this relaxation improved them again.
-        # The HEAVY pass sets pending_only=False: by the time the light loop
-        # has emptied bucket b every settled member is un-pending, but their
-        # heavy edges still must relax exactly once (DeltaStepping.java's
-        # relaxHeavyEdges over the emptied bucket); heavy targets land in
-        # buckets > b (w > delta), so this cannot re-open bucket b.
-        cond = (F.col("dist") != INF) & in_bucket
-        if pending_only:
-            cond = F.col("changed") & cond
-        frontier = st.filter(cond)
-        cands = (
-            edge_df.join(frontier.select(F.col("id").alias(SRC),
-                                         F.col("dist").alias("_sd")), SRC)
-            .select(F.col(DST).alias("id"), (F.col("_sd") + F.col(W)).alias("_cand"))
-            .groupBy("id").agg(F.min("_cand").alias("cand"))
-        )
-        return (
-            st.join(cands, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
-                (
-                    (F.coalesce("cand", F.lit(INF)) < F.col("dist"))
-                    | (F.col("changed") & ~in_bucket)
-                ).alias("changed"),
-            )
-            .transform(truncate_mem)
-        )
-
+    state = _seeded(graph.nodes, F.col("id") == source)
+    finite = F.col("dist") != INF
+    bucket = F.floor(F.col("dist") / delta)
+    settled = None
     for _ in range(cfg.max_iterations):
-        nxt = state.filter(F.col("changed") & (F.col("dist") != INF)) \
-            .agg(F.min(F.floor(F.col("dist") / delta))).collect()[0][0]
+        nxt = state.filter(F.col("changed") & finite) \
+            .agg(F.min(bucket)).collect()[0][0]
         if nxt is None:
             break
-        b = int(nxt)
-        in_b = F.floor(F.col("dist") / delta) == b
-        for _ in range(cfg.max_iterations):
-            new_state = relax(state, light, in_b)
-            still = new_state.filter(
-                F.col("changed") & (F.floor(F.col("dist") / delta) == b)
-            ).isEmpty()
-            state = new_state
-            if still:
-                break
-        state = relax(state, heavy, F.floor(F.col("dist") / delta) == b,
-                      pending_only=False)
+        in_b = bucket == int(nxt)
+        pending = F.col("changed") & ~in_b
+        # the light loop's first cut is `state`, the previous bucket's
+        # heavy pass: nothing reads the previous settled cut after it
+        done = run_pregel(
+            light, state,
+            lambda st, it: _relax(light, st,
+                                  st.filter(F.col("changed") & finite & in_b),
+                                  pending=pending),
+            PregelConfig(max_iterations=cfg.max_iterations),
+            stats=[F.max((F.col("changed") & in_b).cast("int"))],
+            converged_stats=_none_changed).state
+        if settled is not None:
+            release(settled)
+        settled = done
+        state = _relax(heavy, settled, settled.filter(finite & in_b),
+                       pending=pending)
     light.unpersist()
     return state.select("id", "dist").filter(F.col("dist") != INF)
 
@@ -955,9 +915,9 @@ def dag_longest_path(graph: SparkGraph, weighted: bool = False,
     """Longest path to every node of a DAG (dag/longestPath/
     DagLongestPath.java:57 -- 'implemented using topological sort').
 
-    Spark formulation: max-relaxation fixpoint (Bellman-Ford with max);
-    on a DAG it converges in depth rounds, the same wavefront the
-    reference's in-degree peeling follows. Returns (target, total_cost,
+    Spark formulation: max-relaxation fixpoint (Bellman-Ford with max) on
+    run_pregel; on a DAG it converges in depth rounds, the same wavefront
+    the reference's in-degree peeling follows. Returns (target, total_cost,
     node_ids) with the path reconstructed from deterministic argmax
     predecessors -- the result shape of the reference's PathFindingResult.
     """
@@ -965,65 +925,40 @@ def dag_longest_path(graph: SparkGraph, weighted: bool = False,
     e = graph.aggregated_edges("MAX" if weighted else "COUNT")
     if not weighted:
         e = e.withColumn(W, F.lit(1.0))
-    edges = prepare_edges(e, cfg.partitions)
-    state = graph.nodes.select(
-        "id", F.lit(0.0).alias("dist"), F.lit(True).alias("changed"))
-    state = state.transform(truncate_mem)
-    for _ in range(cfg.max_iterations):
-        frontier = state.filter(F.col("changed"))
-        if frontier.isEmpty():
-            break
-        cands = (
-            edges.join(frontier.select(F.col("id").alias(SRC),
-                                       F.col("dist").alias("_sd")), SRC)
-            .select(F.col(DST).alias("id"), (F.col("_sd") + F.col(W)).alias("_cand"))
-            .groupBy("id").agg(F.max("_cand").alias("cand"))
+    edges = prepare_edges(e)
+
+    def superstep(state: DataFrame, it: int) -> DataFrame:
+        cands = reduced_messages(edges, state.select("id", "dist"),
+                                 F.col("dist") + F.col(W), "max",
+                                 active=F.col("changed"))
+        return state.join(cands, "id", "left").select(
+            "id",
+            F.greatest(F.col("dist"), F.coalesce("msg", F.col("dist")))
+            .alias("dist"),
+            (F.coalesce("msg", F.lit(float("-inf"))) > F.col("dist"))
+            .alias("changed"),
         )
-        state = (
-            state.join(cands, "id", "left")
-            .select(
-                "id",
-                F.greatest(F.col("dist"), F.coalesce("cand", F.col("dist")))
-                .alias("dist"),
-                (F.coalesce("cand", F.lit(float("-inf"))) > F.col("dist"))
-                .alias("changed"),
-            )
-            .transform(truncate_mem)
-        )
-    edges.unpersist()
-    dist = state.select("id", "dist")
+
+    state0 = graph.nodes.select("id", F.lit(0.0).alias("dist"),
+                                F.lit(True).alias("changed"))
+    dist = run_pregel(edges, state0, superstep,
+                      PregelConfig(max_iterations=cfg.max_iterations),
+                      stats=_any_changed(),
+                      converged_stats=_none_changed).state
     # deterministic predecessor on an optimal in-edge, then backtrack;
-    # sources (dist 0 with no optimal in-edge) terminate the walk
-    du = dist.select(F.col("id").alias(SRC), F.col("dist").alias("_du"))
-    dv = dist.select(F.col("id").alias(DST), F.col("dist").alias("_dv"))
-    preds = (
-        e.join(du, SRC).join(dv, DST)
-        .filter(F.abs(F.col("_du") + F.col(W) - F.col("_dv")) < 1e-9)
-        .groupBy(F.col(DST).alias("id"))
-        .agg(F.min(SRC).alias("pred"))
-    )
-    walk = (
-        dist.select(F.col("id").alias("target"), F.col("dist").alias("total_cost"),
-                    F.col("id").alias("_cur"), F.array("id").alias("node_ids"))
-        .transform(truncate_mem)
-    )
-    pmap = preds.select(F.col("id").alias("_cur"), "pred").transform(truncate_mem)
-    done = [walk.join(pmap, "_cur", "left_anti")
-            .select("target", "total_cost", "node_ids")]
-    for _ in range(cfg.max_iterations):
-        walk = walk.join(pmap, "_cur")
-        if walk.isEmpty():
-            break
-        walk = walk.select(
-            "target", "total_cost", F.col("pred").alias("_cur"),
-            F.concat(F.array("pred"), "node_ids").alias("node_ids"),
-        ).transform(truncate_mem)
-        done.append(walk.join(pmap, "_cur", "left_anti")
-                    .select("target", "total_cost", "node_ids"))
-        walk = walk.join(pmap.select("_cur"), "_cur", "left_semi")
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
+    # sources (no optimal in-edge) end the walk
+    preds = _deterministic_predecessors(edges, dist)
+    roots = preds.select(F.col("id").alias("pred"), F.lit(False).alias("_stop"))
+    pmap = preds.join(roots, "pred", "left").select(
+        F.col("id").alias("_cur"), "pred",
+        F.coalesce("_stop", F.lit(True)).alias("_stop"))
+    seeds = dist.join(preds.select("id", F.lit(False).alias("arrived")),
+                      "id", "left").select(
+        F.col("id").alias("target"), F.col("dist").alias("total_cost"),
+        F.coalesce("arrived", F.lit(True)).alias("arrived"))
+    out = _walk_preds(seeds, pmap, cfg.max_iterations)
+    edges.unpersist()
+    release(dist)
     return out
 
 

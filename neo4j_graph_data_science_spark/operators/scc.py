@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph
-from ..plans.checkpoint import truncate_mem
+from ..plans.checkpoint import release, truncate_mem
 from ..plans.local_kernel import local_scc, should_run_local
 from ..plans.pregel import PregelConfig, prepare_edges, run_pregel
 
@@ -47,7 +47,8 @@ class SccConfig:
 
 def _min_propagate(edges: DataFrame, nodes: DataFrame, reverse: bool,
                    max_iters: int) -> DataFrame:
-    """Fixpoint of label(v) = min(label(v), min over in-neighbors' labels).
+    """Fixpoint of label(v) = min(label(v), min over in-neighbors' labels):
+    the loop's final (id, comp, changed) cut.
 
     reverse=False propagates along src->dst (f = min id reaching v);
     reverse=True along dst->src (b = min id v reaches).
@@ -69,11 +70,10 @@ def _min_propagate(edges: DataFrame, nodes: DataFrame, reverse: bool,
             (F.coalesce("msg", F.col("comp")) < F.col("comp")).alias("changed"),
         )
 
-    res = run_pregel(edges, state0, superstep,
-                     PregelConfig(max_iterations=max_iters),
-                     stats=[F.max(F.col("changed").cast("int"))],
-                     converged_stats=lambda row, it: not row[1])
-    return res.state.select("id", "comp")
+    return run_pregel(edges, state0, superstep,
+                      PregelConfig(max_iterations=max_iters),
+                      stats=[F.max(F.col("changed").cast("int"))],
+                      converged_stats=lambda row, it: not row[1]).state
 
 
 def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
@@ -88,6 +88,8 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
     if local:
         return local_scc(all_edges, graph.nodes.select("id"))
     remaining = graph.nodes.select("id").transform(truncate_mem)
+    # every cut is released once nothing reads it again, except the ones
+    # assigned_parts holds: those are the result
     assigned_parts: list[DataFrame] = []
 
     while (n := remaining.count()) > 0:
@@ -107,19 +109,27 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
                 .transform(truncate_mem)
             peeled = trimmed.count()
             if peeled == 0:
+                release(trimmed)
+                release(on_cycle)
                 break
             n -= peeled
             assigned_parts.append(
                 trimmed.select("id", F.col("id").alias("component"))
             )
-            remaining = remaining.join(on_cycle, "id", "inner") \
+            rest = remaining.join(on_cycle, "id", "inner") \
                 .transform(truncate_mem)
-            e = (
+            release(remaining)
+            release(on_cycle)
+            remaining = rest
+            rest = (
                 e.join(remaining.withColumnRenamed("id", SRC), SRC, "left_semi")
                 .join(remaining.withColumnRenamed("id", DST), DST, "left_semi")
                 .transform(truncate_mem)
             )
+            release(e)
+            e = rest
         if n == 0:
+            release(e)
             break
         # ---- peel: forward/backward min labels over remaining subgraph;
         # a label travels along a shortest path, at most n-1 edges, so n
@@ -127,16 +137,23 @@ def scc(graph: SparkGraph, config: SccConfig | None = None) -> DataFrame:
         ep = prepare_edges(e, cfg.partitions)
         fwd = _min_propagate(ep, remaining, False, n)
         bwd = _min_propagate(ep, remaining, True, n)
-        both = fwd.withColumnRenamed("comp", "f").join(
-            bwd.withColumnRenamed("comp", "b"), "id"
+        both = fwd.select("id", F.col("comp").alias("f")).join(
+            bwd.select("id", F.col("comp").alias("b")), "id"
         )
         done = both.filter(F.col("f") == F.col("b")).select(
             "id", F.col("f").alias("component")
         ).transform(truncate_mem)
+        release(fwd)
+        release(bwd)
         assigned_parts.append(done)
-        remaining = remaining.join(done, "id", "left_anti") \
+        rest = remaining.join(done, "id", "left_anti") \
             .transform(truncate_mem)
+        release(remaining)
+        remaining = rest
         ep.unpersist()
+        release(e)
+    release(remaining)
+    release(all_edges)
 
     out = assigned_parts[0] if assigned_parts else graph.nodes.select(
         "id", F.col("id").alias("component")

@@ -3,7 +3,11 @@
 ``truncate_mem`` is the package's ONE lineage cut: every iterative loop
 (``run_pregel`` and every driver-side loop in ``operators/``) hands its
 state from one round to the next through it. ``release`` drops the blocks
-of a cut once a newer one has superseded it.
+of a cut once nothing reads it again: ``run_pregel`` releases each
+boundary it supersedes, and the hand loops that remain (SCC's trim/peel,
+topological sort, the negative-cycle walk, delta-stepping's buckets)
+release theirs. A cut that a result still reads lazily (SCC's assigned
+components, topological layers) is kept.
 
 ``CheckpointManager`` is the durable, opt-in part (north-rule requirement
 absent from GDS, which only *logs* progress, progress-tracking/ module):

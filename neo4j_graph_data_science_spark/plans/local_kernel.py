@@ -222,7 +222,7 @@ def _relax(dist: np.ndarray, src_idx: np.ndarray, dst_idx: np.ndarray,
 def local_relax_dist(edges: DataFrame, state0: DataFrame,
                      max_iterations: int, hop_cost: bool = False):
     """Min-plus relaxation fixpoint in the driver (the numpy twin of
-    operators/paths._relax_loop): state0 is (id, dist) with dist 0.0 at
+    operators/paths._relax_fixpoint): state0 is (id, dist) with dist 0.0 at
     sources and +inf elsewhere; per round only edges out of just-changed
     nodes relax (same frontier semantics, so a max_iterations-truncated run
     matches the distributed iterate exactly). ``hop_cost=True`` ignores the

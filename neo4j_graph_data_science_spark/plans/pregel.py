@@ -251,8 +251,9 @@ def run_pregel(
     # with AQE off the reduce width is spark.sql.shuffle.partitions, and a
     # width mismatched to the persisted edge blocks either re-exchanges the
     # edge side or runs the reduce at the wrong granularity (probe: 1.7x).
-    confs = dict(LOOP_CONFS, **{
-        "spark.sql.shuffle.partitions": str(edges.rdd.getNumPartitions())})
+    # A cut of an empty frame has no partitions; the conf must be positive.
+    width = max(1, edges.rdd.getNumPartitions())
+    confs = dict(LOOP_CONFS, **{"spark.sql.shuffle.partitions": str(width)})
     with pinned_confs(sess, confs):
         return _pregel_loop(truncate_mem(state), superstep, config, ckpt,
                             start_iter, stats, converged_stats)

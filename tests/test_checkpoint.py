@@ -1,7 +1,7 @@
 """Checkpoint/resume: a run killed after superstep k resumes and produces
 identical output (north-rule resumability requirement; BASELINE.md). Also
 pins the lineage cut (truncate_mem) every iterative loop goes through, and
-the release of the cuts a Pregel loop supersedes."""
+the release of the cuts a loop supersedes."""
 
 from __future__ import annotations
 
@@ -135,6 +135,34 @@ def test_distributed_pagerank_keeps_only_the_result_cut(spark):
                                       small_graph_edges=0))
     assert len(res.state.collect()) == 300
     assert len(_cached_rdds(spark) - before) == 1
+
+
+def test_distributed_scc_releases_superseded_cuts(spark):
+    """The trim/peel loop releases every cut nothing reads again; only the
+    cuts that hold assigned components stay. The loop that kept every cut
+    left 34 new cached RDDs on this graph."""
+    from neo4j_graph_data_science_spark.operators.scc import SccConfig, scc
+
+    rng = random.Random(5)
+    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(400)]
+    g = from_edge_list(spark, edges, n_nodes=200)
+    before = _cached_rdds(spark)
+    comp = scc(g, SccConfig(small_graph_edges=0)).collect()
+    assert len(comp) == 200
+    assert len(_cached_rdds(spark) - before) < 34 / 2
+
+
+def test_distributed_bellman_ford_keeps_only_the_result_cut(spark):
+    from neo4j_graph_data_science_spark.operators.paths import (
+        PathConfig, bellman_ford,
+    )
+
+    g = from_edge_list(spark, [(a, b, 1.0 + (a * 3 + b) % 4)
+                               for a, b in EDGES], n_nodes=6)
+    before = _cached_rdds(spark)
+    rows = bellman_ford(g, 0, PathConfig(small_graph_edges=0)).collect()
+    assert len(rows) == 6
+    assert len(_cached_rdds(spark) - before) <= 1
 
 
 def test_pregel_loop_leaves_session_serializable(spark):

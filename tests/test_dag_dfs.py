@@ -26,6 +26,37 @@ def test_dag_longest_path_weighted(spark):
     assert list(rows[3]["node_ids"]) == [0, 2, 3]
 
 
+def test_dag_longest_path_matches_python_dp(spark):
+    """A seeded random DAG (every edge climbs in id, so ids are a
+    topological order) against a plain Python DP with the same min-id
+    tie-break among optimal predecessors."""
+    import random
+
+    rng = random.Random(11)
+    n = 30
+    pairs = sorted({(u, v) for u, v in ((rng.randrange(n), rng.randrange(n))
+                                        for _ in range(70)) if u < v})
+    edges = [(u, v, float(rng.randint(1, 5))) for u, v in pairs]
+    dist = [0.0] * n
+    for u, v, w in edges:     # sorted by u: dist[u] is final when read
+        dist[v] = max(dist[v], dist[u] + w)
+    pred = {}
+    for u, v, w in edges:
+        if dist[u] + w == dist[v]:
+            pred[v] = min(pred.get(v, u), u)
+
+    def path(v):
+        p = [v]
+        while p[0] in pred:
+            p.insert(0, pred[p[0]])
+        return p
+
+    g = from_edge_list(spark, edges, n_nodes=n)
+    got = {r["target"]: (r["total_cost"], list(r["node_ids"]))
+           for r in dag_longest_path(g, weighted=True).collect()}
+    assert got == {v: (dist[v], path(v)) for v in range(n)}
+
+
 def test_dfs_preorder(spark):
     # binary tree 0 -> (1,2), 1 -> (3,4): preorder with ascending-neighbor
     # order = 0,1,3,4,2

@@ -15,6 +15,7 @@ driver kernel, ``0`` the distributed path, on the same graph.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from neo4j_graph_data_science_spark import from_edge_list
 from neo4j_graph_data_science_spark.operators.labelprop import (
@@ -22,6 +23,10 @@ from neo4j_graph_data_science_spark.operators.labelprop import (
 )
 from neo4j_graph_data_science_spark.operators.pagerank import (
     PageRankConfig, page_rank,
+)
+from neo4j_graph_data_science_spark.operators.paths import (
+    PathConfig, astar, bellman_ford, dag_longest_path, delta_stepping,
+    dijkstra, yens,
 )
 from neo4j_graph_data_science_spark.operators.scc import SccConfig, scc
 from neo4j_graph_data_science_spark.operators.triangle import (
@@ -49,19 +54,52 @@ CALLS = {
         g, TriangleCountConfig(small_graph_edges=lim)),
 }
 
+# a weighted ladder: rails 0,2,..,10 and 1,3,..,11, rungs 2k -> 2k+1 and
+# crossings 2k+1 -> 2k+2. Every edge climbs in id (a DAG for
+# dag_longest_path), and 0 -> 11 has tied and near-tied routes for Yen's.
+LADDER = [e for k in range(6) for e in
+          [(2 * k, 2 * k + 1, 1.0 + (k * 3) % 4)]
+          + ([(2 * k, 2 * k + 2, 2.0 + (k * 5) % 3),
+              (2 * k + 1, 2 * k + 3, 1.0 + (k * 7) % 3),
+              (2 * k + 1, 2 * k + 2, 3.0 + k % 2)] if k < 5 else [])]
+
+_DIST_PATHS = PathConfig(small_graph_edges=DIST)
+
+# the path family on the distributed engine: (graph, id offset) -> result,
+# from node 0 (to node 11 where there is a target)
+PATH_CALLS = {
+    "bellman_ford": lambda g, o: bellman_ford(g, o, _DIST_PATHS),
+    "dijkstra_target": lambda g, o: dijkstra(g, o, o + 11, _DIST_PATHS),
+    "astar": lambda g, o: astar(
+        g, o, o + 11, g.nodes.select("id", F.lit(0.0).alias("h")),
+        _DIST_PATHS),
+    "dag_longest_path": lambda g, o: dag_longest_path(g, True, _DIST_PATHS),
+    "delta_stepping": lambda g, o: delta_stepping(g, o, 2.0, _DIST_PATHS),
+    "yens_k3": lambda g, o: yens(g, o, o + 11, 3, _DIST_PATHS),
+}
+
 # (operator, engine) -> jobs of one call plus its collect. The distributed
 # triangle path counts its edges for the dispatch rule and then reads the
 # key-packing id bounds in a second aggregate. The Pregel-loop ceilings
 # were lowered (pagerank 44 -> 31, wcc 23 -> 18, lpa 20 -> 17, scc
 # 139 -> 116) when every loop boundary became one observed cut with no
 # separate stats action, and SCC's post-trim emptiness probe became
-# arithmetic on the trim counts.
+# arithmetic on the trim counts. The path family ceilings were set when
+# every relaxation loop and pred-chain walk in operators/paths.py moved
+# onto run_pregel, whose boundary cut carries the stop test; the hand
+# loops before paid an emptiness action and a separate cut per round:
+# bellman_ford 55, dijkstra_target 109, astar 135, dag_longest_path 201,
+# delta_stepping 96, yens_k3 324 jobs on LADDER.
 CEILING = {
     ("pagerank", "local"): 8, ("pagerank", "dist"): 31,
     ("wcc", "local"): 6, ("wcc", "dist"): 18,
     ("lpa", "local"): 5, ("lpa", "dist"): 17,
     ("scc", "local"): 6, ("scc", "dist"): 116,
     ("triangles", "local"): 6, ("triangles", "dist"): 25,
+}
+PATH_CEILING = {
+    "bellman_ford": 26, "dijkstra_target": 52, "astar": 41,
+    "dag_longest_path": 52, "delta_stepping": 71, "yens_k3": 169,
 }
 
 
@@ -90,3 +128,13 @@ def test_job_budget(spark, op, engine):
     jobs = count_jobs(spark, f"budget-{op}-{engine}",
                       lambda: CALLS[op](g, limit).collect())
     assert 0 < jobs <= CEILING[op, engine], jobs
+
+
+@pytest.mark.parametrize("op", sorted(PATH_CEILING))
+def test_path_job_budget(spark, op):
+    off = 1000 + 100 * sorted(PATH_CEILING).index(op)
+    g = from_edge_list(spark, [(a + off, b + off, w) for a, b, w in LADDER],
+                       node_ids=range(off, off + 12))
+    jobs = count_jobs(spark, f"budget-path-{op}",
+                      lambda: PATH_CALLS[op](g, off).collect())
+    assert 0 < jobs <= PATH_CEILING[op], jobs

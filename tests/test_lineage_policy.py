@@ -4,7 +4,8 @@ from one round to the next through ``plans/checkpoint.truncate_mem``. A raw
 estimate (the round-1 Louvain hang); a second cut function would bring
 back a second policy. The Pregel loop materializes every boundary one way,
 the observed cut: no persist branch, no cut cadence constant and no
-separate stats action."""
+separate stats action. The path family's loops run on it: no emptiness
+probe and no cut inside a hand loop."""
 
 from __future__ import annotations
 
@@ -50,4 +51,33 @@ def test_pregel_loop_has_one_materialization():
     offenders = [f"{f.name}:{n}: {lines[n - 1].strip()}" for f in fns
                  for n in range(f.lineno, f.end_lineno + 1)
                  if SECOND_MATERIALIZATION.search(lines[n - 1])]
+    assert not offenders, "\n".join(offenders)
+
+
+PATHS = PKG / "operators" / "paths.py"
+# the path family's fixpoint loops and pred-chain walk, all on run_pregel
+PATH_LOOP_FNS = {
+    "_relax_fixpoint", "_target_pruned_dist", "bellman_ford",
+    "_bf_pred_state", "dijkstra", "astar", "_multi_spur_dijkstra",
+    "_walk_preds", "delta_stepping", "dag_longest_path",
+}
+
+
+def test_path_loops_run_on_pregel():
+    """No emptiness probe in the path family's loops, and no cut inside a
+    hand loop: run_pregel's boundary cut carries both the state and the
+    stop test."""
+    fns = [node for node in ast.walk(ast.parse(PATHS.read_text()))
+           if isinstance(node, ast.FunctionDef) and node.name in PATH_LOOP_FNS]
+    assert {f.name for f in fns} == PATH_LOOP_FNS
+    offenders = []
+    for f in fns:
+        for node in ast.walk(f):
+            if isinstance(node, ast.Attribute) and node.attr == "isEmpty":
+                offenders.append(f"{f.name}:{node.lineno}: isEmpty")
+            if isinstance(node, (ast.For, ast.While)):
+                offenders += [f"{f.name}:{n.lineno}: truncate_mem in a loop"
+                              for n in ast.walk(node)
+                              if isinstance(n, ast.Name)
+                              and n.id == "truncate_mem"]
     assert not offenders, "\n".join(offenders)

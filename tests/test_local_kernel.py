@@ -225,6 +225,71 @@ def test_astar_local_matches_distributed(spark):
     assert list(lr[0]["node_ids"]) == list(dr[0]["node_ids"])
 
 
+# hostile little weighted graphs for the path family: (edges, nodes,
+# target), every search from node 0
+PATH_GRAPHS = {
+    # a zero-weight edge on the shortest 0 -> 3 path: the pruned search and
+    # the batched Yen's need positive weights, so they fall back
+    "zero-weight": ([(0, 1, 0.0), (1, 2, 1.0), (0, 2, 2.0), (2, 3, 1.0),
+                     (1, 3, 3.0)], 4, 3),
+    # parallel edges: the lightest of each pair is the edge
+    "parallel": ([(0, 1, 5.0), (0, 1, 2.0), (1, 2, 1.0), (1, 2, 4.0),
+                  (0, 2, 4.0), (2, 3, 1.0), (2, 3, 0.5)], 4, 3),
+    # self-loops never shorten a path
+    "self-loop": ([(0, 0, 1.0), (0, 1, 1.0), (1, 1, 0.5), (1, 2, 2.0),
+                   (0, 2, 4.0), (2, 3, 1.0), (3, 3, 2.0)], 4, 3),
+    # the target sits in a component the source cannot reach
+    "unreachable": ([(0, 1, 1.0), (1, 2, 1.0), (0, 2, 3.0), (3, 4, 1.0)],
+                    5, 4),
+    # three two-hop chains out of the source, merging at node 7
+    "dag-chains": ([(0, 1, 1.0), (1, 2, 2.0), (0, 3, 2.0), (3, 4, 1.0),
+                    (0, 5, 1.5), (5, 6, 1.5), (2, 7, 1.0), (4, 7, 1.0),
+                    (6, 7, 1.0)], 8, 7),
+}
+
+
+def _dists(df):
+    return {r["id"]: r["dist"] for r in df.collect()
+            if r["dist"] != float("inf")}
+
+
+@pytest.mark.parametrize("name", sorted(PATH_GRAPHS))
+def test_path_family_engines_agree(spark, name):
+    """Every path operator with a driver kernel returns the same rows on
+    both engines, and the distributed-only SSSP variants (delta-stepping,
+    Bellman-Ford) equal the driver's SSSP on these non-negative weights."""
+    from neo4j_graph_data_science_spark.operators.paths import (
+        PathConfig, astar, bellman_ford, bfs, delta_stepping, dijkstra,
+        shortest_paths, yens,
+    )
+
+    edges, n_nodes, t = PATH_GRAPHS[name]
+    g = from_edge_list(spark, edges, n_nodes=n_nodes)
+    loc = PathConfig(small_graph_edges=FORCE_LOCAL)
+    dst = PathConfig(small_graph_edges=FORCE_DIST)
+    assert _path_rows(dijkstra(g, 0, config=loc)) \
+        == _path_rows(dijkstra(g, 0, config=dst))
+    assert _path_rows(dijkstra(g, 0, target=t, config=loc)) \
+        == _path_rows(dijkstra(g, 0, target=t, config=dst))
+    h = g.nodes.select("id", F.lit(0.0).alias("h"))
+    assert _path_rows(astar(g, 0, t, h, loc)) \
+        == _path_rows(astar(g, 0, t, h, dst))
+    for fn in (bfs, shortest_paths):
+        assert _dists(fn(g, [0], loc)) == _dists(fn(g, [0], dst)), \
+            fn.__name__
+    sssp = _dists(shortest_paths(g, [0], loc))
+    assert _dists(delta_stepping(g, 0, 2.0, dst)) == sssp
+    bf = bellman_ford(g, 0, dst)
+    assert _dists(bf) == sssp
+    assert not any(r["in_negative_cycle"] for r in bf.collect())
+
+    def k_paths(cfg):
+        return [(r["total_cost"], list(r["node_ids"]))
+                for r in yens(g, 0, t, 3, cfg).collect()]
+
+    assert k_paths(loc) == k_paths(dst)
+
+
 # two cycles bridged one-way, a chain, a self-loop, an isolate
 SCC_MIXED = [
     (0, 1), (1, 2), (2, 0),          # SCC {0,1,2}
