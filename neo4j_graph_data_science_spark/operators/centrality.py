@@ -5,8 +5,10 @@ phases INIT (auth = in-degree, L2-normalize) then per iteration
 CALCULATE_AUTHS -> NORMALIZE_AUTHS -> CALCULATE_HUBS -> NORMALIZE_HUBS:
   auth(v) = sum over in-neighbors of hub(u), then auth /= ||auth||_2
   hub(v)  = sum over out-neighbors of auth(w), then hub /= ||hub||_2
-Each phase is one groupBy-sum shuffle + one scalar norm (computed in the
-same agg pass as the materialization -- no extra job).
+Each phase is one groupBy-sum shuffle + one scalar norm (a broadcast
+1-row crossJoin, no driver collect). The distributed engine runs one
+plans/pregel.run_pregel superstep per iteration: both phases share one
+boundary cut.
 
 Harmonic / closeness (reference closeness/ClosenessCentrality.java:44,
 harmonic/HarmonicCentrality.java:37): exact values need all-source BFS.
@@ -29,9 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
-from ..plans.checkpoint import truncate_mem
 from ..plans.local_kernel import local_hits, should_run_local
-from ..plans.pregel import prepare_edges
+from ..plans.pregel import (
+    PregelConfig, prepare_edges, reduced_messages, run_pregel,
+)
 
 
 @dataclass
@@ -76,37 +79,34 @@ def hits(graph: SparkGraph, config: HitsConfig | None = None) -> DataFrame:
     indeg = edges.groupBy(F.col(DST).alias("id")).agg(
         F.count(F.lit(1)).cast("double").alias("auth")
     )
-    state = (
+    state = _l2_normalized(
         nodes.join(indeg, "id", "left")
         .select("id", F.coalesce("auth", F.lit(0.0)).alias("auth"),
-                F.lit(1.0).alias("hub"))
-    )
-    state = truncate_mem(_l2_normalized(state, "auth"))
+                F.lit(1.0).alias("hub")), "auth")
 
-    for _ in range(cfg.hits_iterations):
+    def superstep(state: DataFrame, it: int) -> DataFrame:
         # auth(v) = sum of hub over in-neighbors
-        auths = (
-            edges.join(state.select(F.col("id").alias(SRC), "hub"), SRC)
-            .groupBy(F.col(DST).alias("id"))
-            .agg(F.sum("hub").alias("_a"))
-        )
-        state = state.join(auths, "id", "left").select(
-            "id", F.coalesce("_a", F.lit(0.0)).alias("auth"), "hub"
-        )
-        state = truncate_mem(_l2_normalized(state, "auth"))
+        auths = reduced_messages(edges, state.select("id", "hub"),
+                                 F.col("hub"))
+        state = _l2_normalized(state.join(auths, "id", "left").select(
+            "id", F.coalesce("msg", F.lit(0.0)).alias("auth"), "hub"), "auth")
         # hub(v) = sum of auth over out-neighbors
         hubs = (
-            edges.join(state.select(F.col("id").alias(DST), "auth").withColumnRenamed("auth", "_na"), DST)
+            edges.join(state.select(F.col("id").alias(DST),
+                                    F.col("auth").alias("_na")), DST)
             .groupBy(F.col(SRC).alias("id"))
             .agg(F.sum("_na").alias("_h"))
         )
-        state = state.join(hubs, "id", "left").select(
-            "id", "auth", F.coalesce("_h", F.lit(0.0)).alias("hub")
-        )
-        state = truncate_mem(_l2_normalized(state, "hub"))
+        return _l2_normalized(state.join(hubs, "id", "left").select(
+            "id", "auth", F.coalesce("_h", F.lit(0.0)).alias("hub")), "hub")
+
+    # fixed iteration count: both phases of an iteration share one boundary
+    res = run_pregel(edges, state, superstep,
+                     PregelConfig(max_iterations=cfg.hits_iterations),
+                     stats=[], converged_stats=lambda row, it: False)
     edges.unpersist()
     eset.unpersist()
-    return state.select("id", "auth", "hub")
+    return res.state.select("id", "auth", "hub")
 
 
 @dataclass

@@ -15,6 +15,11 @@ conflict resolution loop: all nodes start color 0; on conflict (neighbor
 with same color) the higher id recolors to the smallest color absent from
 its neighborhood. Terminates when conflict-free; deterministic given ids.
 
+Both fixpoints run on plans/pregel.run_pregel over the prepared symmetric
+edges, one superstep per round: the state carries a flag (``_ch``, the
+core dropped; ``_moved``, the node recolored) and the loop stops once the
+boundary cut observes none set, so the last superstep is a no-op round.
+
 Modularity (reference modularity/ModularityCalculator.java:39):
   Q = sum_c [ e_c / m - (d_c / 2m)^2 ]
 over undirected simple edges: m = |E|, e_c = intra-community edges,
@@ -33,7 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, W, register_cache
-from ..plans.checkpoint import truncate_mem
+from ..plans.pregel import (
+    PregelConfig, prepare_edges, reduced_messages, run_pregel,
+)
 
 
 def _undirected_simple(graph: SparkGraph) -> DataFrame:
@@ -48,17 +55,33 @@ class KCoreConfig:
     max_iterations: int = 100
 
 
+def _symmetric_edges(graph: SparkGraph) -> DataFrame:
+    """The undirected simple edges in both directions, prepared as the
+    loop's (src, dst) edge frame."""
+    canon = _undirected_simple(graph)
+    return prepare_edges(canon.unionAll(
+        canon.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))))
+
+
+def _flag_loop(edges: DataFrame, state: DataFrame, superstep, flag: str,
+               max_iterations: int) -> DataFrame:
+    """``superstep`` on run_pregel until no row sets ``flag``; returns the
+    last state (the loop's result cut) and drops the prepared edges."""
+    res = run_pregel(edges, state, superstep,
+                     PregelConfig(max_iterations=max_iterations),
+                     stats=[F.max(F.col(flag).cast("int"))],
+                     converged_stats=lambda row, it: not row[1])
+    edges.unpersist()
+    return res.state
+
+
 def k_core(graph: SparkGraph, config: KCoreConfig | None = None) -> DataFrame:
     """(id, core): exact coreness via the h-index fixpoint."""
     cfg = config or KCoreConfig()
-    canon = _undirected_simple(graph)
-    adj = (
-        canon.select(F.col(SRC).alias("id"), F.col(DST).alias("nb"))
-        .unionAll(canon.select(F.col(DST).alias("id"), F.col(SRC).alias("nb")))
-        .transform(truncate_mem)
-    )
-    state = adj.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("core")) \
-        .transform(truncate_mem)
+    edges = _symmetric_edges(graph)
+    state = edges.groupBy(F.col(SRC).alias("id")).agg(
+        F.count(F.lit(1)).cast("long").alias("core")) \
+        .withColumn("_ch", F.lit(True))
 
     # h-index of a DESC-sorted value array a: max over i of min(a[i], i+1)
     def h_index(arr):
@@ -72,33 +95,18 @@ def k_core(graph: SparkGraph, config: KCoreConfig | None = None) -> DataFrame:
             lambda acc, x: F.greatest(acc, x),
         )
 
-    from ..plans.pregel import reduced_messages
-
-    for _ in range(cfg.max_iterations):
+    def superstep(state: DataFrame, it: int) -> DataFrame:
         # queue-messenger path (SyncQueueMessenger.java): the h-index needs
         # the full neighbor multiset, so the reducer is "collect"
         nb_vals = reduced_messages(
-            adj.select(F.col("nb").alias(SRC), F.col("id").alias(DST)),
-            state.select("id", F.col("core").alias("_c")),
-            F.col("_c"), reducer="collect",
-        ).withColumnRenamed("msg", "_cs")
-        new = (
-            state.join(nb_vals, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("core"),
-                    F.coalesce(h_index(F.col("_cs")), F.col("core")),
-                ).alias("core"),
-                (F.coalesce(h_index(F.col("_cs")), F.col("core")) < F.col("core"))
-                .alias("_ch"),
-            )
-            .transform(truncate_mem)
-        )
-        changed = new.agg(F.max(F.col("_ch").cast("int"))).collect()[0][0]
-        state = new.select("id", "core")
-        if not changed:
-            break
+            edges, state.select("id", F.col("core").alias("_c")),
+            F.col("_c"), reducer="collect")
+        h = F.coalesce(h_index(F.col("msg")), F.col("core"))
+        return state.join(nb_vals, "id", "left").select(
+            "id", F.least(F.col("core"), h).alias("core"),
+            (h < F.col("core")).alias("_ch"))
+
+    state = _flag_loop(edges, state, superstep, "_ch", cfg.max_iterations)
     return graph.nodes.select("id").join(state, "id", "left") \
         .select("id", F.coalesce("core", F.lit(0)).cast("long").alias("core"))
 
@@ -113,14 +121,9 @@ def k1_coloring(graph: SparkGraph, config: K1ColoringConfig | None = None) -> Da
     distinct colors, colors are small non-negative longs. Deterministic:
     on conflict the higher id moves to the mex of its neighbor colors."""
     cfg = config or K1ColoringConfig()
-    canon = _undirected_simple(graph)
-    adj = (
-        canon.select(F.col(SRC).alias("id"), F.col(DST).alias("nb"))
-        .unionAll(canon.select(F.col(DST).alias("id"), F.col(SRC).alias("nb")))
-        .transform(truncate_mem)
-    )
-    state = graph.nodes.select("id", F.lit(0).cast("long").alias("color")) \
-        .transform(truncate_mem)
+    edges = _symmetric_edges(graph)
+    state = graph.nodes.select("id", F.lit(0).cast("long").alias("color"),
+                               F.lit(True).alias("_moved"))
 
     # mex of a color array: smallest k >= 0 absent from it. mex <= size(arr),
     # so the candidate range 0..size(arr) always contains it.
@@ -128,36 +131,33 @@ def k1_coloring(graph: SparkGraph, config: K1ColoringConfig | None = None) -> Da
         candidates = F.sequence(F.lit(0).cast("long"), F.size(arr).cast("long"))
         return F.array_min(F.array_except(candidates, arr)).cast("long")
 
-    for _ in range(cfg.max_iterations):
-        nb_col = adj.join(
-            state.select(F.col("id").alias("nb"), F.col("color").alias("_nc")), "nb"
-        )
-        conflicts = (
-            nb_col.join(state, "id")
-            .filter((F.col("color") == F.col("_nc")) & (F.col("id") > F.col("nb")))
-            .select("id").distinct()
-        )
-        n_conf = conflicts.count()
-        if n_conf == 0:
-            break
-        forb = (
-            nb_col.join(conflicts, "id", "left_semi")
-            .groupBy("id")
-            .agg(F.collect_set("_nc").alias("_f"))
-            .select("id", mex(F.col("_f")).alias("_new"))
-        )
-        state = (
-            state.join(forb, "id", "left")
-            .select("id", F.coalesce("_new", F.col("color")).alias("color"))
-            .transform(truncate_mem)
-        )
-    return state
+    def superstep(state: DataFrame, it: int) -> DataFrame:
+        # every node hears (color, id) from each neighbor; it is in conflict
+        # when a lower-id neighbor shares its color, and then moves to the
+        # mex of all its neighbors' colors -- one plan per round
+        heard = reduced_messages(
+            edges, state.select("id", F.col("color").alias("_c")),
+            F.struct(F.col("_c").alias("c"), F.col(SRC).alias("p")),
+            reducer="collect")
+        conflict = F.coalesce(F.exists(
+            "msg", lambda m: (m["c"] == F.col("color"))
+            & (m["p"] < F.col("id"))), F.lit(False))
+        # flag first: a later select item's lambda would resolve "color"
+        # to the new alias (lateral column alias), not the input column
+        return state.join(heard, "id", "left").withColumn("_moved", conflict) \
+            .select("id", F.when(F.col("_moved"), mex(F.transform(
+                "msg", lambda m: m["c"]))).otherwise(F.col("color"))
+                .alias("color"), "_moved")
+
+    state = _flag_loop(edges, state, superstep, "_moved", cfg.max_iterations)
+    return state.select("id", "color")
 
 
 def modularity(graph: SparkGraph, communities: DataFrame,
                community_col: str = "community") -> DataFrame:
     """One row (modularity, community_count): Q over the undirected simple
-    edge view given a (id, community) assignment."""
+    edge view given a (id, community) assignment, computed eagerly so the
+    two caches it needs are dropped before it returns."""
     # persisted: canon feeds the edge-count action, the endpoint joins and
     # the degree union (4 references); lab feeds both endpoint joins and
     # the degree-sum -- each reference would re-run the upstream community
@@ -166,6 +166,8 @@ def modularity(graph: SparkGraph, communities: DataFrame,
     lab = communities.select("id", F.col(community_col).alias("_c")).persist()
     m = canon.count()
     if m == 0:
+        canon.unpersist()
+        lab.unpersist()
         return communities.sparkSession.createDataFrame(
             [(0.0, 0)], "modularity double, community_count long"
         )
@@ -191,10 +193,14 @@ def modularity(graph: SparkGraph, communities: DataFrame,
             - (F.col("_dc") / F.lit(2.0 * m)) * (F.col("_dc") / F.lit(2.0 * m))
         ).alias("_q"),
     )
-    return per_comm.agg(
+    row = per_comm.agg(
         F.sum("_q").alias("modularity"),
         F.count(F.lit(1)).alias("community_count"),
-    )
+    ).collect()[0]
+    canon.unpersist()
+    lab.unpersist()
+    return communities.sparkSession.createDataFrame(
+        [tuple(row)], "modularity double, community_count long")
 
 
 def conductance(graph: SparkGraph, communities: DataFrame,

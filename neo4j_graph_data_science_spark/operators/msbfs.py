@@ -6,13 +6,18 @@ serves 64 searches, and harmonic/closeness/betweenness consume per-depth
 "how many sources newly reached node v" counts without ever materializing
 per-(source, node) rows.
 
-DataFrame formulation: state is one row per (source-batch, node) carrying a
-64-bit `visited` mask. One superstep for ALL batches at once:
+DataFrame formulation: the state is the result itself, rows
+(batch, id, mask, dist) with the bits first reached at hop `dist`; the
+visited mask of (batch, id) is the bit_or of its rows. One superstep of
+plans/pregel.run_pregel per depth, for ALL batches at once:
 
-  1. frontier ⋈ edges on src                      (co-partitioned join)
+  1. rows at the current depth ⋈ edges on src     (co-partitioned join)
   2. groupBy(batch, dst).agg(bit_or(mask))        (ONE combined shuffle,
                                                    map-side partial bit_or)
-  3. mask &~ visited, drop zero rows              (row-local)
+  3. mask &~ visited, drop zero rows, append      (row-local)
+
+The loop stops when max(dist), observed on the boundary cut, stops
+advancing.
 
 Newly-set bits are counted with `bit_count`, all inside whole-stage
 codegen. State is O(V * ceil(S/64)) rows instead of the O(V * S) pair
@@ -27,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import DST, SRC, SparkGraph, bucketed_dense_ids
 from ..plans.checkpoint import truncate_mem
-from ..plans.pregel import prepare_edges
+from ..plans.pregel import PregelConfig, prepare_edges, run_pregel
 
 # decode a 64-bit mask into its set bit positions, JVM-side
 _BITS_EXPR = "filter(sequence(0, 63), b -> (shiftright(mask, b) & 1) = 1)"
@@ -36,7 +41,8 @@ _BITS_EXPR = "filter(sequence(0, 63), b -> (shiftright(mask, b) & 1) = 1)"
 def _msbfs_frontiers(
     edges: DataFrame, sources: DataFrame, max_depth: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Run the batched BFS; returns (frontiers, source_map).
+    """Run the batched BFS on run_pregel over the prepared ``edges``;
+    returns (frontiers, source_map).
 
     frontiers: (batch, id, mask, dist) -- bit b of mask set iff the batch's
     source with bit b first reaches `id` at hop distance `dist`.
@@ -53,55 +59,43 @@ def _msbfs_frontiers(
             F.pmod("id", F.lit(64)).cast("int").alias("bit"),
         ))
     init = smap.select(
-        F.col("_sid").alias("id"),
         "batch",
+        F.col("_sid").alias("id"),
         F.expr("shiftleft(cast(1 as bigint), bit)").alias("mask"),
+        F.lit(0).alias("dist"),
     )
-    visited = truncate_mem(init)
-    frontier = visited
-    out = truncate_mem(
-        init.select("batch", "id", "mask", F.lit(0).alias("dist")))
-    for depth in range(1, max_depth + 1):
+
+    def superstep(state: DataFrame, depth: int) -> DataFrame:
+        # expand the rows first reached at `depth`; keep only the bits no
+        # earlier row of (batch, id) holds
         cand = (
             edges.join(
-                frontier.select(F.col("id").alias(SRC), "batch", "mask"), SRC
+                state.filter(F.col("dist") == depth)
+                .select(F.col("id").alias(SRC), "batch", "mask"), SRC
             )
             .groupBy(F.col(DST).alias("id"), "batch")
             .agg(F.bit_or("mask").alias("_m"))
         )
+        visited = state.groupBy("batch", "id").agg(F.bit_or("mask").alias("_v"))
         new = (
-            cand.join(
-                visited.select("batch", "id", F.col("mask").alias("_v")),
-                ["batch", "id"],
-                "left",
-            )
+            cand.join(visited, ["batch", "id"], "left")
             .select(
                 "batch",
                 "id",
                 F.col("_m").bitwiseAND(
                     F.bitwise_not(F.coalesce("_v", F.lit(0).cast("long")))
                 ).alias("mask"),
+                F.lit(depth + 1).alias("dist"),
             )
             .filter(F.col("mask") != 0)
         )
-        frontier = truncate_mem(new)
-        if frontier.isEmpty():
-            break
-        visited = truncate_mem(
-            visited.join(
-                frontier.select("batch", "id", F.col("mask").alias("_n")),
-                ["batch", "id"],
-                "full",
-            ).select(
-                "batch",
-                "id",
-                F.coalesce("mask", F.lit(0).cast("long")).bitwiseOR(
-                    F.coalesce("_n", F.lit(0).cast("long"))
-                ).alias("mask"),
-            ))
-        out = truncate_mem(
-            out.unionByName(frontier.withColumn("dist", F.lit(depth))))
-    return out, smap
+        return state.unionByName(new)
+
+    res = run_pregel(edges, init, superstep,
+                     PregelConfig(max_iterations=max_depth),
+                     stats=[F.max("dist")],
+                     converged_stats=lambda row, it: (row[1] or 0) <= it)
+    return res.state, smap
 
 
 def msbfs_depth_counts(

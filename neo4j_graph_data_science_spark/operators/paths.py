@@ -54,7 +54,6 @@ INF = float("inf")
 @dataclass
 class PathConfig:
     max_iterations: int = 200
-    weighted: bool = False
     # subcritical fast path (plans/local_kernel.py): dist-only ops (bfs /
     # shortest_paths) default to the 2M-edge kernel threshold; the
     # with-paths ops (dijkstra/astar) default to the tighter

@@ -4,10 +4,14 @@
 (``run_pregel`` and every driver-side loop in ``operators/``) hands its
 state from one round to the next through it. ``release`` drops the blocks
 of a cut once nothing reads it again: ``run_pregel`` releases each
-boundary it supersedes, and the hand loops that remain (SCC's trim/peel,
-topological sort, the negative-cycle walk, delta-stepping's buckets)
-release theirs. A cut that a result still reads lazily (SCC's assigned
-components, topological layers) is kept.
+boundary it supersedes. The fixpoint loops of the path family, k-core,
+K1-coloring, the Louvain/Leiden local moves, MS-BFS and HITS run on it.
+Of the hand loops that remain, SCC's trim/peel, topological sort, the
+negative-cycle walk and delta-stepping's buckets release their cuts; the
+Louvain/Leiden level loops, betweenness, exposure, influence, spanning
+tree, max-k-cut, SLLPA, embeddings, clustering, cliques and the two-phase
+WCC still cut per round by hand. A cut that a result still reads lazily
+(SCC's assigned components, topological layers) is kept.
 
 ``CheckpointManager`` is the durable, opt-in part (north-rule requirement
 absent from GDS, which only *logs* progress, progress-tracking/ module):

@@ -165,6 +165,29 @@ def test_distributed_bellman_ford_keeps_only_the_result_cut(spark):
     assert len(_cached_rdds(spark) - before) <= 1
 
 
+def test_community_loops_keep_only_the_result_cut(spark):
+    """k-core and modularity optimization run on run_pregel, drop their
+    prepared edges, and the modularity metric drops its caches: each call
+    leaves at most the cut holding its result. The hand loops before left
+    a cut per round and the metric's two caches behind."""
+    from neo4j_graph_data_science_spark.operators.community import k_core
+    from neo4j_graph_data_science_spark.operators.leiden import (
+        modularity_optimization,
+    )
+
+    rng = random.Random(9)
+    g = from_edge_list(
+        spark, [(rng.randrange(200), rng.randrange(200)) for _ in range(400)],
+        n_nodes=200)
+    before = _cached_rdds(spark)
+    assert len(k_core(g).collect()) == 200
+    assert len(_cached_rdds(spark) - before) <= 1
+    before = _cached_rdds(spark)
+    labels, _ = modularity_optimization(g, max_rounds=8)
+    assert len(labels.collect()) == 200
+    assert len(_cached_rdds(spark) - before) <= 1
+
+
 def test_pregel_loop_leaves_session_serializable(spark):
     """The boundary stats are read from the cut's executed plan, not via an
     Observation, whose ObservationManager would make the session (and so

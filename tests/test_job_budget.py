@@ -18,9 +18,22 @@ import pytest
 from pyspark.sql import functions as F
 
 from neo4j_graph_data_science_spark import from_edge_list
+from neo4j_graph_data_science_spark.operators.centrality import (
+    HitsConfig, closeness_centrality, hits,
+)
+from neo4j_graph_data_science_spark.operators.community import (
+    k1_coloring, k_core,
+)
 from neo4j_graph_data_science_spark.operators.labelprop import (
     LabelPropagationConfig, label_propagation,
 )
+from neo4j_graph_data_science_spark.operators.leiden import (
+    LeidenConfig, leiden, modularity_optimization,
+)
+from neo4j_graph_data_science_spark.operators.louvain import (
+    LouvainConfig, louvain,
+)
+from neo4j_graph_data_science_spark.operators.msbfs import all_shortest_paths
 from neo4j_graph_data_science_spark.operators.pagerank import (
     PageRankConfig, page_rank,
 )
@@ -102,6 +115,37 @@ PATH_CEILING = {
     "dag_longest_path": 52, "delta_stepping": 71, "yens_k3": 169,
 }
 
+# the community and centrality loops on run_pregel, on EDGES; HITS pinned
+# to the distributed engine
+COMMUNITY_CALLS = {
+    "k_core": k_core,
+    "k1_coloring": k1_coloring,
+    "louvain": lambda g: louvain(g, LouvainConfig(
+        max_levels=2, max_local_moves=8))[0],
+    "leiden": lambda g: leiden(g, LeidenConfig(
+        max_levels=2, max_local_moves=8, max_refine_moves=4))[0],
+    "modularity_optimization": lambda g: modularity_optimization(
+        g, max_rounds=8)[0],
+    "closeness": closeness_centrality,
+    "all_shortest_paths": all_shortest_paths,
+    "hits": lambda g: hits(g, HitsConfig(hits_iterations=5,
+                                         small_graph_edges=DIST)),
+}
+
+# Set when k-core, K1-coloring, the Louvain/Leiden local-move kernel,
+# MS-BFS and HITS moved onto run_pregel, whose boundary cut carries the
+# stop test; the hand loops before paid a separate cut per phase and a
+# stats or emptiness action per round: k_core 28, k1_coloring 117,
+# louvain 193, leiden 222, modularity_optimization 121, closeness 90,
+# all_shortest_paths 87, hits 127 jobs on these cases' graphs. Louvain and
+# Leiden draw their move parity from the ids, so their counts hold for
+# these offsets only.
+COMMUNITY_CEILING = {
+    "k_core": 19, "k1_coloring": 24, "louvain": 116, "leiden": 107,
+    "modularity_optimization": 46, "closeness": 37,
+    "all_shortest_paths": 34, "hits": 51,
+}
+
 
 def count_jobs(spark, group: str, fn) -> int:
     """Jobs run by ``fn()`` under the job group ``group``."""
@@ -138,3 +182,13 @@ def test_path_job_budget(spark, op):
     jobs = count_jobs(spark, f"budget-path-{op}",
                       lambda: PATH_CALLS[op](g, off).collect())
     assert 0 < jobs <= PATH_CEILING[op], jobs
+
+
+@pytest.mark.parametrize("op", sorted(COMMUNITY_CEILING))
+def test_community_job_budget(spark, op):
+    off = 2000 + 100 * sorted(COMMUNITY_CEILING).index(op)
+    g = from_edge_list(spark, [(a + off, b + off) for a, b in EDGES],
+                       node_ids=range(off, off + 13))   # node 12 isolated
+    jobs = count_jobs(spark, f"budget-community-{op}",
+                      lambda: COMMUNITY_CALLS[op](g).collect())
+    assert 0 < jobs <= COMMUNITY_CEILING[op], jobs

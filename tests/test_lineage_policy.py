@@ -4,14 +4,17 @@ from one round to the next through ``plans/checkpoint.truncate_mem``. A raw
 estimate (the round-1 Louvain hang); a second cut function would bring
 back a second policy. The Pregel loop materializes every boundary one way,
 the observed cut: no persist branch, no cut cadence constant and no
-separate stats action. The path family's loops run on it: no emptiness
-probe and no cut inside a hand loop."""
+separate stats action. The fixpoint loops of the path, community and
+centrality operators run on it: no emptiness probe, and no cut or collect
+inside a hand loop."""
 
 from __future__ import annotations
 
 import ast
 import re
 from pathlib import Path
+
+import pytest
 
 import neo4j_graph_data_science_spark
 
@@ -54,30 +57,62 @@ def test_pregel_loop_has_one_materialization():
     assert not offenders, "\n".join(offenders)
 
 
-PATHS = PKG / "operators" / "paths.py"
-# the path family's fixpoint loops and pred-chain walk, all on run_pregel
-PATH_LOOP_FNS = {
-    "_relax_fixpoint", "_target_pruned_dist", "bellman_ford",
-    "_bf_pred_state", "dijkstra", "astar", "_multi_spur_dijkstra",
-    "_walk_preds", "delta_stepping", "dag_longest_path",
+OPS = PKG / "operators"
+# module -> its fixpoint loops, all on run_pregel
+PREGEL_LOOP_FNS = {
+    "paths.py": {
+        "_relax_fixpoint", "_target_pruned_dist", "bellman_ford",
+        "_bf_pred_state", "dijkstra", "astar", "_multi_spur_dijkstra",
+        "_walk_preds", "delta_stepping", "dag_longest_path",
+    },
+    "community.py": {"k_core", "k1_coloring"},
+    "leiden.py": {"_moves"},
+    "msbfs.py": {"_msbfs_frontiers"},
+    "centrality.py": {"hits"},
 }
+# delta-stepping's bucket scheduler reads the next bucket index once per
+# bucket; the light relaxation inside each bucket is a run_pregel loop
+COLLECTING_SCHEDULERS = {"delta_stepping"}
 
 
-def test_path_loops_run_on_pregel():
-    """No emptiness probe in the path family's loops, and no cut inside a
+def _in_loops(fn: ast.FunctionDef):
+    for loop in ast.walk(fn):
+        if isinstance(loop, (ast.For, ast.While)):
+            yield from ast.walk(loop)
+
+
+@pytest.mark.parametrize("module", sorted(PREGEL_LOOP_FNS))
+def test_fixpoint_loops_run_on_pregel(module):
+    """No emptiness probe in these loops, and no cut or collect inside a
     hand loop: run_pregel's boundary cut carries both the state and the
     stop test."""
-    fns = [node for node in ast.walk(ast.parse(PATHS.read_text()))
-           if isinstance(node, ast.FunctionDef) and node.name in PATH_LOOP_FNS]
-    assert {f.name for f in fns} == PATH_LOOP_FNS
+    names = PREGEL_LOOP_FNS[module]
+    fns = [node for node in ast.walk(ast.parse((OPS / module).read_text()))
+           if isinstance(node, ast.FunctionDef) and node.name in names]
+    assert {f.name for f in fns} == names
     offenders = []
     for f in fns:
-        for node in ast.walk(f):
-            if isinstance(node, ast.Attribute) and node.attr == "isEmpty":
-                offenders.append(f"{f.name}:{node.lineno}: isEmpty")
-            if isinstance(node, (ast.For, ast.While)):
-                offenders += [f"{f.name}:{n.lineno}: truncate_mem in a loop"
-                              for n in ast.walk(node)
-                              if isinstance(n, ast.Name)
-                              and n.id == "truncate_mem"]
+        offenders += [f"{f.name}:{n.lineno}: isEmpty" for n in ast.walk(f)
+                      if isinstance(n, ast.Attribute) and n.attr == "isEmpty"]
+        for n in _in_loops(f):
+            if isinstance(n, ast.Name) and n.id == "truncate_mem":
+                offenders.append(f"{f.name}:{n.lineno}: truncate_mem in a loop")
+            if (isinstance(n, ast.Attribute) and n.attr == "collect"
+                    and f.name not in COLLECTING_SCHEDULERS):
+                offenders.append(f"{f.name}:{n.lineno}: collect in a loop")
     assert not offenders, "\n".join(offenders)
+
+
+def test_louvain_uses_the_leiden_move_kernel():
+    """Louvain's only loop is its level loop; its local moves are
+    leiden._moves at gamma=1."""
+    tree = ast.parse((OPS / "louvain.py").read_text())
+    loops = {f.name: sum(isinstance(n, (ast.For, ast.While))
+                         for n in ast.walk(f))
+             for f in ast.walk(tree) if isinstance(f, ast.FunctionDef)}
+    assert loops.pop("louvain") == 1
+    assert not any(loops.values()), loops
+    imported = {a.name for n in ast.walk(tree)
+                if isinstance(n, ast.ImportFrom) and n.module == "leiden"
+                for a in n.names}
+    assert "_moves" in imported
